@@ -2980,7 +2980,7 @@ def stream_delta_commit_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write("\n".join(_json.dumps(a) for a in actions) + "\n")
         # Put-if-absent via link(2): hard-link fails with EEXIST if the
         # version file already exists (a retried batch), making the
-        # commit idempotent — the same discipline as httplistener._spool.
+        # commit idempotent — the same discipline as spool.SpoolAppender.
         try:
             os.link(tmp, final)
         except FileExistsError:

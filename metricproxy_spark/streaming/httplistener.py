@@ -12,28 +12,28 @@ line + headers + body, gzip still encoded) as one file in a spool
 directory. Everything downstream is then the normal engine:
 
 - batch: ``spark.read.format("httpwire").option("path", spool)``
-- streaming: ``readStream`` on the same connector — newly accepted
-  requests become micro-batch rows exactly once (checkpointed offset).
+- streaming: ``readStream`` on the same connector
+  (:func:`http_spool_stream`).
 
-This is deliberately the Kafka split: the listener is a durable
-network terminator (accept → fsync-able spool → 200 OK), Spark is the
-processing engine with replay. One body parser
+The spool itself — file naming, atomic publication, the stream's
+offset — is :mod:`metricproxy_spark.sources.spool`. One body parser
 (:func:`metricproxy_spark.sources.signalfx.parse_sfx_v2_json`, …)
 serves socket bytes, staged files, and live HTTP identically.
 
 Responses mirror the reference: ``"OK"`` for datapoint POSTs, plain
-``OK`` for ``/healthz`` (S7), 404 otherwise. The spool write is atomic
-(tmp + rename) and sequence-numbered under a lock, so concurrent
-client connections never interleave or clobber.
+``OK`` for ``/healthz`` (S7), 404 otherwise. A POST must carry a
+numeric ``Content-Length``: 411 when it is missing (chunked uploads
+are not accepted), 400 when it is malformed, and nothing is spooled.
 """
 
 from __future__ import annotations
 
-import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
+
+from metricproxy_spark.sources.spool import SpoolAppender
 
 # sfx v2/v1 + collectd write_http + the OTLP/HTTP metrics binding
 # + msgpack/cbor frames (base64 text bodies: the spool is string-typed)
@@ -49,6 +49,21 @@ INGEST_PATHS = (
     "/v1/zstd",
     "/api/v1/write",
 )
+
+
+def _read_body(handler: BaseHTTPRequestHandler) -> bytes | None:
+    """The request body as its ``Content-Length`` header declares it.
+    Answers 411 (header missing) or 400 (not a non-negative integer)
+    and returns None, so a bad request is never read or acted on."""
+    clen = handler.headers.get("Content-Length")
+    if clen is None:
+        handler.send_error(411)
+        return None
+    clen = clen.strip()
+    if not (clen.isascii() and clen.isdigit()):
+        handler.send_error(400, "malformed Content-Length")
+        return None
+    return handler.rfile.read(int(clen))
 
 
 class _IngestHandler(BaseHTTPRequestHandler):
@@ -74,8 +89,9 @@ class _IngestHandler(BaseHTTPRequestHandler):
         if path not in INGEST_PATHS:
             self.send_error(404)
             return
-        clen = int(self.headers.get("Content-Length") or 0)
-        body = self.rfile.read(clen)
+        body = _read_body(self)
+        if body is None:
+            return
         # Reconstruct the request verbatim (body still gzip-encoded if
         # the client sent it that way) — the httpwire reader owns all
         # decoding, so live and at-rest requests share one code path.
@@ -84,7 +100,7 @@ class _IngestHandler(BaseHTTPRequestHandler):
             f"{k}: {v}\r\n".encode("latin-1")
             for k, v in self.headers.items()
         )
-        self.listener._spool(head + hdrs + b"\r\n" + body)
+        self.listener._spool.append(head + hdrs + b"\r\n" + body)
         resp = b'"OK"'
         self.send_response(200)
         self.send_header("Content-Type", "application/json")
@@ -107,60 +123,17 @@ class HttpIngestListener:
     ):
         self.spool_dir = spool_dir
         self.host, self.port = host, port
-        self._seq = 0
-        self._lock = threading.Lock()
+        self._spool = SpoolAppender(spool_dir, "req_", ".http")
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
-        self.accepted = 0
 
-    def _spool(self, raw: bytes) -> None:
-        with self._lock:
-            seq = self._seq
-            self._seq += 1
-            self.accepted += 1
-        # 12-digit pad: wide enough that the name never widens in
-        # practice, and the stream's offset accounting sorts files
-        # NUMERICALLY anyway (httpwire natural sort), so even a
-        # hypothetical overflow keeps ordering correct.
-        tmp = os.path.join(
-            self.spool_dir, f".tmp_{os.getpid()}_{threading.get_ident()}"
-        )
-        with open(tmp, "wb") as fh:
-            fh.write(raw)
-        # Claim the final name with link(2), which fails on EEXIST —
-        # two listener PROCESSES sharing one spool dir can both resume
-        # the same max seq, and os.replace would silently clobber one
-        # accepted request. On collision, advance past the loser's seq
-        # and retry; the link itself is atomic, so a reader never sees
-        # a partial file.
-        while True:
-            final = os.path.join(self.spool_dir, f"req_{seq:012d}.http")
-            try:
-                os.link(tmp, final)
-                break
-            except FileExistsError:
-                with self._lock:
-                    self._seq = max(self._seq, seq + 1)
-                    seq = self._seq
-                    self._seq += 1
-        os.unlink(tmp)
+    @property
+    def accepted(self) -> int:
+        return self._spool.appended
 
     def start(self) -> tuple[str, int]:
-        os.makedirs(self.spool_dir, exist_ok=True)
-        # Resume the sequence after existing spool files: a RESTARTED
-        # listener must append, never clobber — the stream's offset is
-        # "first N sorted files", so names stay monotonic across
-        # listener generations.
-        existing = [
-            f
-            for f in os.listdir(self.spool_dir)
-            if f.startswith("req_") and f.endswith(".http")
-        ]
-        if existing:
-            self._seq = (
-                max(int(f.split("_")[1].split(".")[0]) for f in existing)
-                + 1
-            )
+        # A restarted listener appends after the existing spool files.
+        self._spool.resume()
         handler = type(
             "_BoundHandler", (_IngestHandler,), {"listener": self}
         )
@@ -191,8 +164,8 @@ class HttpIngestListener:
 
 def http_spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
     """The live listener's spool as a stream: one row per accepted
-    request, exactly once (httpwire's checkpointed file offset) —
-    compose with the protocol parsers for a full live pipeline."""
+    request — compose with the protocol parsers for a full live
+    pipeline."""
     from metricproxy_spark.sources.httpwire import register_httpwire
 
     register_httpwire(spark)
@@ -279,8 +252,9 @@ class RemoteReadServer:
                 if self.path.split("?")[0] != "/api/v1/read":
                     self.send_error(404)
                     return
-                clen = int(self.headers.get("Content-Length") or 0)
-                raw = self.rfile.read(clen)
+                raw = _read_body(self)
+                if raw is None:
+                    return
                 try:
                     resp = server_ref._answer(raw)
                 except ValueError:

@@ -5,9 +5,9 @@ real sockets — carbon over TCP [P: protocol/carbon/carbonlistener.go],
 statsd classically over UDP datagrams, influx line protocol over
 either (telegraf's socket_listener). This module is the engine's
 socket front door for LINE-shaped wire formats: accept bytes, split
-on newlines, spool verbatim to files a connector can scan — exactly
-the discipline :mod:`metricproxy_spark.streaming.httplistener` uses
-for HTTP bodies. The spool is ``carbonwire``-readable (plain text,
+on newlines, spool verbatim to files a connector can scan, through the
+same :mod:`metricproxy_spark.sources.spool` appender the HTTP listener
+uses. The spool is ``carbonwire``-readable (plain text,
 one line per record), so the SAME byte-range-splitting connector and
 the SAME JVM-side parsers serve both the at-rest and the live path —
 live ingest evidence is therefore value-checkable against the batch
@@ -25,19 +25,17 @@ Two transports:
 
 from __future__ import annotations
 
-import os
 import socket
 import socketserver
 import threading
 
+from metricproxy_spark.sources.spool import SpoolAppender
+
 
 class LineSocketListener:
     """Accept newline-delimited wire lines on a real socket and spool
-    them to ``{spool_dir}/lines_{seq:012d}.wire`` files (atomic
-    rename; rotation every ``lines_per_file`` lines, remainder flushed
-    on ``stop``). File names are monotonic so stream offsets ("first N
-    sorted files") survive listener restarts, same contract as the
-    HTTP listener's spool."""
+    them to ``{spool_dir}/lines_{seq:012d}.wire`` files (rotation
+    every ``lines_per_file`` lines, remainder flushed on ``stop``)."""
 
     def __init__(
         self,
@@ -54,7 +52,7 @@ class LineSocketListener:
         self.host, self.port = host, port
         self.lines_per_file = lines_per_file
         self.accepted_lines = 0
-        self._seq = 0
+        self._spool = SpoolAppender(spool_dir, "lines_", ".wire")
         self._buf: list[bytes] = []
         self._lock = threading.Lock()
         self._server: socketserver.BaseServer | None = None
@@ -69,16 +67,9 @@ class LineSocketListener:
                 self._flush_locked()
 
     def _flush_locked(self) -> None:
-        if not self._buf:
-            return
-        seq = self._seq
-        self._seq += 1
-        final = os.path.join(self.spool_dir, f"lines_{seq:012d}.wire")
-        tmp = final + f".tmp{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(self._buf) + b"\n")
-        os.replace(tmp, final)  # atomic: a reader never sees a partial
-        self._buf = []
+        if self._buf:
+            self._spool.append(b"\n".join(self._buf) + b"\n")
+            self._buf = []
 
     def flush(self) -> None:
         with self._lock:
@@ -86,16 +77,7 @@ class LineSocketListener:
 
     # -- lifecycle -----------------------------------------------------
     def start(self) -> tuple[str, int]:
-        os.makedirs(self.spool_dir, exist_ok=True)
-        existing = [
-            f
-            for f in os.listdir(self.spool_dir)
-            if f.startswith("lines_") and f.endswith(".wire")
-        ]
-        if existing:
-            self._seq = (
-                max(int(f.split("_")[1].split(".")[0]) for f in existing) + 1
-            )
+        self._spool.resume()
         listener = self
 
         if self.mode == "tcp":

@@ -7,7 +7,10 @@ from __future__ import annotations
 import gzip
 import http.client
 import json
+import socket
 import threading
+
+import pytest
 
 from metricproxy_spark.sources.httpwire import register_httpwire
 from metricproxy_spark.streaming.httplistener import (
@@ -176,3 +179,49 @@ def test_two_listener_generations_never_clobber(tmp_path):
                       if p.suffix == ".http")
     for metric in (b'"a"', b'"b"', b'"c"'):
         assert metric in bodies
+
+
+def _raw_post(host, port, head: bytes) -> bytes:
+    """Send raw request bytes; return whatever the server answers
+    within 2 s (a hung server times out instead of blocking)."""
+    with socket.create_connection((host, port), timeout=2) as s:
+        s.sendall(head)
+        out = b""
+        try:
+            while chunk := s.recv(4096):
+                out += chunk
+        except socket.timeout:
+            pass
+    return out
+
+
+@pytest.mark.parametrize(
+    "headers, status",
+    [
+        (b"Content-Length: -1\r\n", b"400"),
+        (b"Content-Length: abc\r\n", b"400"),
+        (b"Transfer-Encoding: chunked\r\n", b"411"),
+    ],
+    ids=["negative", "non_numeric", "missing_chunked"],
+)
+def test_bad_content_length_is_refused_and_not_spooled(
+    tmp_path, headers, status
+):
+    """A POST whose Content-Length is missing or malformed gets an
+    immediate 4xx and spools nothing — never a hang, a dropped
+    connection, or a 200 for an empty body."""
+    spool = tmp_path / "spool"
+    body = b'{"gauge": []}'
+    with HttpIngestListener(str(spool)) as lis:
+        chunked = b"%x\r\n%s\r\n0\r\n\r\n" % (len(body), body)
+        resp = _raw_post(
+            lis.host,
+            lis.port,
+            b"POST /v2/datapoint HTTP/1.1\r\nHost: x\r\n"
+            + headers
+            + b"\r\n"
+            + (chunked if b"chunked" in headers else body),
+        )
+        assert resp.split(b" ", 2)[1:2] == [status], resp[:200]
+        assert lis.accepted == 0
+    assert list(spool.iterdir()) == []

@@ -349,10 +349,11 @@ def test_httplistener_restart_appends_not_clobbers(spark, tmp_path):
 def test_httpwire_file_order_is_numeric_not_lexicographic(tmp_path):
     """Offset accounting is 'first N sorted files' — names with mixed
     digit widths (overflow past the pad, hand-dropped files) must sort
-    by sequence number, not byte order (round-4 ADVICE)."""
-    from metricproxy_spark.sources.httpwire import _list_request_files
+    by sequence number, not byte order (round-4 ADVICE). Every spool
+    connector lists through the same function."""
+    from metricproxy_spark.sources.spool import list_files
 
     for name in ("req_999999.http", "req_1000000.http", "req_2.http"):
         (tmp_path / name).write_bytes(b"POST / HTTP/1.1\r\n\r\n")
-    got = [f.split("/")[-1] for f in _list_request_files(str(tmp_path))]
+    got = [f.split("/")[-1] for f in list_files(str(tmp_path))]
     assert got == ["req_2.http", "req_999999.http", "req_1000000.http"]

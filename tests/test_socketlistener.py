@@ -105,3 +105,22 @@ def test_send_lines_tcp_empty_is_noop():
     # No listener at this port: a non-empty send would ConnectionError,
     # so returning silently proves the early-out path.
     send_lines_tcp("127.0.0.1", 1, [])
+
+
+def test_two_listener_generations_never_clobber():
+    """Two listener INSTANCES sharing one spool dir both resume the
+    same max seq; each flush must land in its own file, so a line
+    acknowledged by one is never overwritten by the other (the socket
+    twin of the HTTP listener test)."""
+    spool = tempfile.mkdtemp(prefix="mps_sl_")
+    with LineSocketListener(spool, lines_per_file=1) as a:
+        send_lines_tcp(a.host, a.port, ["a 1 1"], connections=1)
+    # Both B and C resume seq = 1 from the same on-disk max; with one
+    # line per file each flushes before it acknowledges.
+    with LineSocketListener(spool, lines_per_file=1) as b, LineSocketListener(
+        spool, lines_per_file=1
+    ) as c:
+        send_lines_tcp(b.host, b.port, ["b 2 2"], connections=1)
+        send_lines_tcp(c.host, c.port, ["c 3 3"], connections=1)
+    assert len(os.listdir(spool)) == 3, os.listdir(spool)
+    assert sorted(_spool_lines(spool)) == ["a 1 1", "b 2 2", "c 3 3"]
