@@ -15,8 +15,9 @@ a Kafka topic drops in the same slot in production). Every listener's
 output is normalized to the canonical datapoint schema (§2.2) before
 the fan-out, exactly the reference's single in-memory datapoint model.
 All ForwardTo entries receive all datapoints (demux F1); BufferSize
-maps to load-shed emulation, DrainingThreads to per-batch repartition
-(F4).
+maps to load-shed emulation. DrainingThreads is accepted and ignored:
+a forwarder writes with one task per partition of the micro-batch, so
+its write parallelism is the source's split count.
 """
 
 from __future__ import annotations

@@ -358,6 +358,31 @@ def cdc_delta_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stats_threshold(stats_rows) -> int:
+    """The top-30% ``event_id`` threshold of a Delta table, planned from
+    its live adds' ``maxValues.event_id`` stats (no data scan). The live
+    set covers the whole table, so the largest max is the global one —
+    but only if EVERY live add carries it: an add whose stats string is
+    missing or unparseable (``from_json`` -> null) might hold the global
+    max, and planning from the others would silently lower the
+    threshold. Such a table is refused, not planned."""
+    missing = [
+        r["path"]
+        for r in stats_rows
+        if r["st"] is None
+        or r["st"]["maxValues"] is None
+        or r["st"]["maxValues"]["event_id"] is None
+    ]
+    if missing:
+        raise ValueError(
+            f"delta checkpoint: live adds without event_id stats: {sorted(missing)}"
+        )
+    if not stats_rows:
+        raise ValueError("delta checkpoint: no live add")
+    n_ids = max(r["st"]["maxValues"]["event_id"] for r in stats_rows) + 1
+    return (7 * n_ids) // 10
+
+
 @register(
     "cdc_delta_checkpoint_snapshot",
     oracle="""
@@ -597,35 +622,13 @@ def cdc_delta_checkpoint_snapshot(
         ).alias("st"),
     )
     stats_rows = parsed.collect()  # bounded: the live-file catalog stats
-    # The live set covers the whole table, so its stats hold the global
-    # max — the top-30% threshold is catalog planning, no data scan.
-    # Adds whose stats string is missing/unparseable (from_json -> null)
-    # are skipped here, exactly as a stats-based pruner must treat them
-    # (no stats = no bound to plan from); the construction above always
-    # writes stats, and the max-holding top bucket is never removed by
-    # the commit tail, so the maxima survive to plan the threshold.
-    maxima = [
-        r["st"]["maxValues"]["event_id"]
-        for r in stats_rows
-        if r["st"] is not None
-        and r["st"]["maxValues"] is not None
-        and r["st"]["maxValues"]["event_id"] is not None
-    ]
-    if not maxima:
-        raise ValueError("delta checkpoint: no live add carries stats")
-    n_ids = max(maxima) + 1
-    thr = (7 * n_ids) // 10
+    thr = _stats_threshold(stats_rows)
     # sorted: collect order varies run to run and the schema memo keys
     # on the path tuple — unstable order misses the memo every run
     paths = sorted(
         os.path.join(root, r["path"])
         for r in stats_rows
-        # stats skipping; a stats-less add can't be pruned by bound —
-        # but a real skipper must READ it (it may hold qualifying rows)
-        if r["st"] is None
-        or r["st"]["maxValues"] is None
-        or r["st"]["maxValues"]["event_id"] is None
-        or r["st"]["maxValues"]["event_id"] >= thr
+        if r["st"]["maxValues"]["event_id"] >= thr  # stats skipping
     )
     return (
         read_parquet_cached(spark, *paths)

@@ -286,7 +286,7 @@ def stream_counter_to_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_fanout_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1–F7 end-to-end: file stream → normalize to datapoints →
     demultiplex to K1 (signalfx JSON), K2 (carbon lines), K3 (CSV) with
-    per-batch persist sharing and delivery counters. Result = rows each
+    one fused write job per batch and delivery counters. Result = rows each
     sink durably wrote, re-counted FROM THE SINK FILES (not the
     in-memory counters), proving every sink saw every datapoint exactly
     once."""

@@ -179,24 +179,29 @@ def delimiter_deconstruct(
 
 def to_carbon_lines(
     df: DataFrame,
-    metric_col: str = "metric",
-    value_col: str = "value",
-    value_str_col: str = "value_str",
-    epoch_col: str = "epoch_s",
-    meta_col: str | None = "meta",
+    metric_col: Column | str = "metric",
+    value_col: Column | str = "value",
+    value_str_col: Column | str = "value_str",
+    epoch_col: Column | str = "epoch_s",
+    meta_col: Column | str | None = "meta",
 ) -> Column:
     """K2/C7: rebuild the graphite wire line, echoing the original raw
     line byte-identically when the point came from carbon (Meta
-    passthrough), else serializing ``metric value ts``."""
+    passthrough), else serializing ``metric value ts``. Each input is a
+    column name or a Column expression."""
+
+    def col(c: Column | str) -> Column:
+        return F.col(c) if isinstance(c, str) else c
+
     value_text = F.coalesce(
-        F.col(value_str_col),
-        F.col(value_col).cast("decimal(27,6)").cast("string"),
+        col(value_str_col),
+        col(value_col).cast("decimal(27,6)").cast("string"),
     )
     rebuilt = F.concat_ws(
-        " ", F.col(metric_col), value_text, F.col(epoch_col).cast("string")
+        " ", col(metric_col), value_text, col(epoch_col).cast("string")
     )
     if meta_col is None:
         return rebuilt
     return F.coalesce(
-        F.try_element_at(F.col(meta_col), F.lit(CARBON_RAW_META_KEY)), rebuilt
+        F.try_element_at(col(meta_col), F.lit(CARBON_RAW_META_KEY)), rebuilt
     )

@@ -9,10 +9,16 @@ BufferedForwarder; main.go — setupForwarders]:
 
 Spark mapping implemented here:
 
-- **Fan-out (F1)**: one ``foreachBatch`` that persists the micro-batch
-  and hands it to every sink — one source scan per batch regardless of
-  sink count, exactly the demultiplexer's "loop over sinks" with the
-  slice shared.
+- **Fan-out (F1)**: one ``foreachBatch`` hands the micro-batch to
+  every sink — one source scan per batch regardless of sink count,
+  exactly the demultiplexer's "loop over sinks" with the slice shared.
+  The line forwarders (:class:`~metricproxy_spark.streaming.sinks.LineSink`)
+  are written together by one
+  :func:`~metricproxy_spark.streaming.sinks.write_lines` job whose row
+  count feeds the counters, so a batch served only by them is ONE Spark
+  job: no persist, no count job. Generic writers, or load shedding,
+  need the slice more than once; then the batch is persisted once,
+  counted, and every sink reads the cache.
 - **Counters (A1/F7)**: per-batch, per-sink row counts accumulated
   driver-side (``foreachBatch`` runs on the driver) — the analog of the
   proxy's atomic ``TotalDatapoints`` counters, queryable at any time
@@ -42,16 +48,27 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from metricproxy_spark.streaming.sinks import LineSink, write_lines
+
 BatchWriter = Callable[[DataFrame, int], None]
 
 
 @dataclass
 class SinkSpec:
     """A named terminal for the fan-out; ``writer`` receives each
-    (batch_df, batch_id) — the ``dpsink.Sink.AddDatapoints`` analog."""
+    (batch_df, batch_id) — the ``dpsink.Sink.AddDatapoints`` analog.
+
+    ``lines`` is the :class:`LineSink` a line-forwarder spec was built
+    with. The pipeline delivers through it rather than ``writer``, so
+    replacing ``writer`` afterwards (e.g. with a timing wrapper) does not
+    change how the batch is written."""
 
     name: str
     writer: BatchWriter
+    lines: LineSink | None = field(init=False)
+
+    def __post_init__(self) -> None:
+        self.lines = self.writer if isinstance(self.writer, LineSink) else None
 
 
 OBSERVATION_NAME = "proxy_stats"
@@ -111,6 +128,16 @@ class ProxyPipeline:
 
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
         df = self.transform(batch) if self.transform else batch
+        lines = [s for s in self.sinks if s.lines is not None]
+        writers = [s for s in self.sinks if s.lines is None]
+        if lines and not writers and self.max_batch_rows is None:
+            # Every sink is a line forwarder: one job writes them all and
+            # its row count is the batch's.
+            n = write_lines(df, [s.lines for s in lines])
+            self._count("datapoints_in", n)
+            for sink in lines:
+                self._count(f"sink.{sink.name}.datapoints", n)
+            return
         # Persist once, serve all sinks: the demultiplexer's shared
         # slice. Count via the persisted data (one job; sinks reuse).
         # Capture the persisted handle BEFORE the limit() shedding path
@@ -127,7 +154,11 @@ class ProxyPipeline:
                 self._count("datapoints_dropped", n - self.max_batch_rows)
                 df = persisted.limit(self.max_batch_rows)
                 n = self.max_batch_rows
-            for sink in self.sinks:
+            if lines:
+                write_lines(df, [s.lines for s in lines])
+                for sink in lines:
+                    self._count(f"sink.{sink.name}.datapoints", n)
+            for sink in writers:
                 sink.writer(df, batch_id)
                 self._count(f"sink.{sink.name}.datapoints", n)
         finally:
@@ -172,8 +203,12 @@ class ProxyPipeline:
         for sink in self.sinks:
             def per_sink(batch: DataFrame, batch_id: int, _s=sink) -> None:
                 df = self.transform(batch) if self.transform else batch
-                _s.writer(df, batch_id)
-                self._count(f"sink.{_s.name}.datapoints", df.count())
+                if _s.lines is not None:
+                    n = write_lines(df, [_s.lines])
+                else:
+                    _s.writer(df, batch_id)
+                    n = df.count()  # a second scan of the source
+                self._count(f"sink.{_s.name}.datapoints", n)
 
             q = (
                 with_trigger(

@@ -6,11 +6,20 @@ takes an injectable ``transport`` so a real deployment can POST the
 serialized payloads (the HTTP client itself is out of scope here — no
 network in this environment).
 
+The three file forwarders are line sinks (:class:`LineSink`): a
+directory, a file suffix and the wire line of one row.
+:func:`write_lines` delivers any number of them in ONE Spark job — each
+task stages every sink's lines as hidden files, and the driver renames
+the complete set into place — so the pipeline fans a micro-batch out to
+all of its forwarders with a single scan, no cache and no count job.
+
 Delivery semantics: ``foreachBatch`` is AT-LEAST-ONCE across restarts —
 a batch whose source offsets were not yet committed replays with the
 same ``batch_id`` (demonstrated in
 tests/test_streaming.py::test_checkpoint_resume_idempotent_sink_exactly_once).
-The append-mode writers here therefore match the reference forwarders'
+A failed :func:`write_lines` job publishes no file to any forwarder and
+removes what its tasks staged (a driver crash between two renames can
+still publish a subset). The append-mode writers therefore match the reference forwarders'
 at-least-once posture; for effective exactly-once, key the write by
 ``batch_id`` (e.g. write to ``{path}/batch={batch_id}`` with overwrite,
 or an idempotent upsert) — the ProxyPipeline hands every writer the id
@@ -19,32 +28,151 @@ for exactly this purpose.
 
 from __future__ import annotations
 
+import glob
 import os
-from typing import Callable, Iterable
+import uuid
+from dataclasses import dataclass
+from typing import Callable, Iterable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from metricproxy_spark.sources.carbon import to_carbon_lines
 
 
-def csv_sink(path: str) -> Callable[[DataFrame, int], None]:
+@dataclass(frozen=True)
+class LineSink:
+    """A file forwarder that writes one text line per row: appends
+    ``part-*{suffix}`` files holding ``line(df)`` under directory
+    ``path``. A null line is written as an empty one, as Spark's text
+    writer does. Calling it as ``(df, batch_id)`` delivers to this sink
+    alone and returns the row count."""
+
+    path: str
+    suffix: str
+    line: Callable[[DataFrame], Column]
+
+    def __call__(self, df: DataFrame, batch_id: int) -> int:
+        return write_lines(df, [self])
+
+
+def write_lines(df: DataFrame, sinks: Sequence[LineSink]) -> int:
+    """Append ``df`` to every sink of ``sinks`` in one Spark job; returns
+    the row count.
+
+    Each sink gets a fresh write id. Each task copies the Arrow value
+    buffer of each sink's newline-terminated line column into a hidden
+    ``._staged_{id}_*`` file in that sink's directory and reports its row
+    count. After the job the driver renames the staged files to
+    ``part-{id}-{partition:05d}{suffix}`` and writes ``_SUCCESS``. Empty
+    partitions write no file. Whatever the job leaves staged — every
+    file of a failed job, a failed attempt's file in a successful one —
+    is removed."""
+    targets = [(s.path, uuid.uuid4().hex[:12]) for s in sinks]
+    for d, _ in targets:
+        os.makedirs(d, exist_ok=True)
+    lines = df.select(
+        *(
+            F.concat(F.coalesce(s.line(df), F.lit("")), F.lit("\n")).alias(
+                f"line{i}"
+            )
+            for i, s in enumerate(sinks)
+        )
+    )
+
+    # Nested, so cloudpickle ships it by value: Python workers need not
+    # import this package.
+    def stage(batches):
+        import numpy as np
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId()
+        staged = [
+            os.path.join(d, f"._staged_{wid}_{pid:05d}_{ctx.attemptNumber()}")
+            for d, wid in targets
+        ]
+        rows, files = 0, []
+        try:
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                if not files:
+                    files = [open(p, "wb") for p in staged]
+                rows += batch.num_rows
+                for fh, col in zip(files, batch.columns):
+                    # No nulls (coalesced), so the lines are exactly the
+                    # value bytes between the first and last offset.
+                    _, offsets, data = col.buffers()
+                    width = 8 if pa.types.is_large_string(col.type) else 4
+                    bounds = np.frombuffer(
+                        offsets, dtype=f"<i{width}", count=len(col) + 1,
+                        offset=col.offset * width,
+                    )
+                    fh.write(memoryview(data)[bounds[0] : bounds[-1]])
+        finally:
+            for fh in files:
+                fh.close()
+        if rows:
+            yield pa.RecordBatch.from_pydict(
+                {"pid": [pid], "rows": [rows], "staged": [staged]}
+            )
+
+    try:
+        reports = lines.mapInArrow(
+            stage, "pid long, rows long, staged array<string>"
+        ).collect()
+        for r in reports:
+            for s, (d, wid), staged in zip(sinks, targets, r.staged):
+                os.replace(
+                    staged, os.path.join(d, f"part-{wid}-{r.pid:05d}{s.suffix}")
+                )
+        for d, _ in targets:
+            with open(os.path.join(d, "_SUCCESS"), "w"):
+                pass
+    finally:
+        for d, wid in targets:
+            for f in glob.glob(os.path.join(glob.escape(d), f"._staged_{wid}_*")):
+                try:
+                    os.remove(f)
+                except FileNotFoundError:
+                    pass
+    return sum(r.rows for r in reports)
+
+
+# to_csv handles these types itself; every other column is written as
+# its string cast, like the maps of the canonical datapoint.
+_CSV_NATIVE = (
+    "string", "long", "integer", "double", "float", "boolean",
+    "timestamp", "date", "short", "byte", "decimal",
+)
+
+
+def _col(name: str) -> Column:
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def csv_sink(path: str) -> LineSink:
     """K3: CSV debug forwarder [P: protocol/csv/csvforwarder.go] — the
     reference appends one line per datapoint to a local file; here each
-    micro-batch appends partitioned CSV files (same contract: every
-    datapoint durably on disk, append-only)."""
+    micro-batch appends ``.csv`` part files with the lines Spark's own
+    CSV writer produces (no header; same contract: every datapoint
+    durably on disk, append-only)."""
 
-    def write(df: DataFrame, batch_id: int) -> None:
-        out = df
-        for f in out.schema.fields:
-            if not f.dataType.typeName() in (
-                "string", "long", "integer", "double", "float", "boolean",
-                "timestamp", "date", "short", "byte", "decimal",
-            ):
-                out = out.withColumn(f.name, F.col(f.name).cast("string"))
-        out.write.mode("append").option("header", "false").csv(path)
+    def line(df: DataFrame) -> Column:
+        return F.to_csv(
+            F.struct(
+                *(
+                    _col(f.name)
+                    if f.dataType.typeName() in _CSV_NATIVE
+                    else _col(f.name).cast("string")
+                    for f in df.schema.fields
+                )
+            )
+        )
 
-    return write
+    return LineSink(path, ".csv", line)
 
 
 def carbon_sink(
@@ -53,33 +181,47 @@ def carbon_sink(
     value_col: str = "value",
     ts_col: str = "ts",
     meta_col: str | None = None,
-) -> Callable[[DataFrame, int], None]:
+) -> LineSink:
     """K2: carbon forwarder [P: protocol/carbon/carbonforwarder.go] —
     serializes datapoints back to graphite plaintext. Uses the C7
     raw-line passthrough when ``meta_col`` carries the original wire
     line (carbon→carbon byte fidelity), else rebuilds ``name value
     unix_ts``. Events are dropped, as in the reference."""
 
-    def write(df: DataFrame, batch_id: int) -> None:
-        prepared = df.select(
-            F.col(metric_col).alias("metric"),
-            F.col(value_col).alias("value"),
-            (
-                F.col("value_str")
+    def line(df: DataFrame) -> Column:
+        return to_carbon_lines(
+            df,
+            metric_col=metric_col,
+            value_col=value_col,
+            value_str_col=(
+                "value_str"
                 if "value_str" in df.columns
                 else F.lit(None).cast("string")
-            ).alias("value_str"),
-            F.unix_timestamp(F.col(ts_col)).alias("epoch_s"),
-            *([F.col(meta_col).alias("meta")] if meta_col else []),
+            ),
+            epoch_col=F.unix_timestamp(F.col(ts_col)),
+            meta_col=meta_col,
         )
-        lines = prepared.select(
-            to_carbon_lines(
-                prepared, meta_col="meta" if meta_col else None
-            ).alias("value")
-        )
-        lines.write.mode("append").text(path)
 
-    return write
+    return LineSink(path, ".txt", line)
+
+
+def _signalfx_line(df: DataFrame) -> Column:
+    dims = (
+        F.col("dimensions")
+        if "dimensions" in df.columns
+        else F.expr("map()").cast("map<string,string>")
+    )
+    return F.to_json(
+        F.struct(
+            F.col("metric").alias("metric"),
+            F.col("value").alias("value"),
+            dims.alias("dimensions"),
+            # v2 wire carries MILLISECOND timestamps; unix_millis keeps
+            # sub-second precision (unix_timestamp*1000 truncates to
+            # whole seconds).
+            F.unix_millis(F.col("ts")).alias("timestamp"),
+        )
+    )
 
 
 def signalfx_sink(
@@ -88,40 +230,23 @@ def signalfx_sink(
 ) -> Callable[[DataFrame, int], None]:
     """K1: SignalFx forwarder [P: protocol/signalfx/signalfxforwarder.go
     — AddDatapoints, datumForPoint]. Serializes each datapoint to the
-    v2 JSON wire shape (metric/value/dimensions/timestamp-millis) and
-    hands payload lines to ``transport`` partition-by-partition (the
-    reference POSTs batches; partition-parallel posting is the F4
-    "DrainingThreads" analog). Default transport appends JSON-lines
-    files under ``path``."""
+    v2 JSON wire shape (metric/value/dimensions/timestamp-millis). With
+    a ``transport``, hands payload lines to it partition-by-partition
+    (the reference POSTs batches; partition-parallel posting is the F4
+    "DrainingThreads" analog); otherwise returns a :class:`LineSink`
+    appending JSON-lines ``.txt`` files under ``path``."""
+    if transport is None:
+        if path is None:
+            raise ValueError("signalfx_sink needs a path or transport")
+        return LineSink(path, ".txt", _signalfx_line)
 
     def write(df: DataFrame, batch_id: int) -> None:
-        cols = set(df.columns)
-        dims = (
-            F.col("dimensions")
-            if "dimensions" in cols
-            else F.expr("map()").cast("map<string,string>")
-        )
-        payload = df.select(
-            F.to_json(
-                F.struct(
-                    F.col("metric").alias("metric"),
-                    F.col("value").alias("value"),
-                    dims.alias("dimensions"),
-                    # v2 wire carries MILLISECOND timestamps; unix_millis
-                    # keeps sub-second precision (unix_timestamp*1000
-                    # truncates to whole seconds).
-                    F.unix_millis(F.col("ts")).alias("timestamp"),
-                )
-            ).alias("line")
-        )
-        if transport is not None:
-            def post(rows):
-                transport([r.line for r in rows])
+        payload = df.select(_signalfx_line(df).alias("line"))
 
-            payload.foreachPartition(post)
-        else:
-            assert path is not None, "signalfx_sink needs a path or transport"
-            payload.write.mode("append").text(path)
+        def post(rows):
+            transport([r.line for r in rows])
+
+        payload.foreachPartition(post)
 
     return write
 

@@ -35,7 +35,8 @@ from metricproxy_spark.sources.spool import SpoolAppender
 class LineSocketListener:
     """Accept newline-delimited wire lines on a real socket and spool
     them to ``{spool_dir}/lines_{seq:012d}.wire`` files (rotation
-    every ``lines_per_file`` lines, remainder flushed on ``stop``)."""
+    every ``lines_per_file`` lines; a TCP connection's remainder is
+    flushed before its ``OK`` ack, UDP's on ``stop``)."""
 
     def __init__(
         self,
@@ -94,10 +95,11 @@ class LineSocketListener:
                             batch = []
                     if batch:
                         listener._ingest(batch)
-                    # ack AFTER ingest: a client that waits for this
-                    # byte knows its lines are spool-durable — the
-                    # graceful-close contract (sendall alone only
-                    # proves the bytes left the client's buffer)
+                    # ack AFTER the flush: a client that waits for this
+                    # byte knows its lines are in a published spool
+                    # file — the graceful-close contract (sendall alone
+                    # only proves the bytes left the client's buffer)
+                    listener.flush()
                     self.wfile.write(b"OK\n")
 
             class _Server(socketserver.ThreadingTCPServer):

@@ -431,3 +431,20 @@ class TestParquetPageDecode:
         # hybrid refusing to run past its region
         with _pytest.raises(ValueError, match="hybrid|truncated"):
             rle_hybrid(b"\x03", 0, 1, 1, 5)  # bit-packed, no payload
+
+
+def test_delta_threshold_refuses_a_live_add_without_stats():
+    """The top-30% threshold is planned from every live add's max: an
+    add without stats might hold the global max, so planning from the
+    others would lower the threshold silently. It is refused instead."""
+    from metricproxy_spark.queries.cdc import _stats_threshold
+
+    def add(path, max_id):
+        return {"path": path, "st": {"maxValues": {"event_id": max_id}}}
+
+    assert _stats_threshold([add("a", 9), add("b", 99)]) == 70
+    for stats in (None, {"maxValues": None}, {"maxValues": {"event_id": None}}):
+        with pytest.raises(ValueError, match="without event_id stats.*'c'"):
+            _stats_threshold([add("a", 9), {"path": "c", "st": stats}])
+    with pytest.raises(ValueError, match="no live add"):
+        _stats_threshold([])

@@ -124,3 +124,22 @@ def test_two_listener_generations_never_clobber():
         send_lines_tcp(c.host, c.port, ["c 3 3"], connections=1)
     assert len(os.listdir(spool)) == 3, os.listdir(spool)
     assert sorted(_spool_lines(spool)) == ["a 1 1", "b 2 2", "c 3 3"]
+
+
+def test_ack_means_spooled():
+    """``OK`` is sent only once the connection's lines are in a listed
+    spool file — not while they wait in the rotation buffer for the
+    next rotation or ``stop()``."""
+    from metricproxy_spark.sources.spool import list_files
+
+    spool = tempfile.mkdtemp(prefix="mps_sl_")
+    with LineSocketListener(spool, mode="tcp", lines_per_file=2000) as l:
+        with socket.create_connection((l.host, l.port), timeout=10) as s:
+            s.sendall(b"a 1 1\nb 2 2\nc 3 3\n")
+            s.shutdown(socket.SHUT_WR)
+            assert s.recv(16).startswith(b"OK")
+        spooled = []
+        for f in list_files(spool):
+            with open(f) as fh:
+                spooled += fh.read().splitlines()
+        assert spooled == ["a 1 1", "b 2 2", "c 3 3"]
