@@ -970,6 +970,7 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             assert conn.getresponse().read() == b'"OK"'
         conn.close()
+        lis.seal()  # every acked request visible to the stream
         parsed = parse_sfx_v2_json(
             http_spool_stream(spark, spool), body_col="body"
         )
@@ -1461,6 +1462,7 @@ def stream_collectd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             assert conn.getresponse().read() == b'"OK"'
         conn.close()
+        lis.seal()  # every acked request visible to the stream
         parsed = parse_collectd_json(
             http_spool_stream(spark, spool), body_col="body"
         )

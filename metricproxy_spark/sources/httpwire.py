@@ -5,22 +5,31 @@ The reference's front door is an HTTP listener: POST bodies land on
 ``/v2/datapoint`` (JSON), ``/v1/datapoint``, ``/post-collectd`` etc.
 [P: protocol/signalfx/signalfxlistener.go — ListenAndServe]. There is
 no long-lived server in a batch engine, so this connector terminates
-the same wire format at rest: a directory where each file is ONE raw
-HTTP/1.1 request (request line + headers + blank line + body) — "the
-requests the network wrote". ``spark.read.format("httpwire")`` then
-behaves like any built-in source:
+the same wire format at rest. ``spark.read.format("httpwire")`` then
+behaves like any built-in source. It reads two file formats from one
+directory:
 
-- Each row is one decoded request: ``(body, method, path, query,
-  content_type, src_file)``. ``Content-Encoding: gzip`` bodies are
-  decompressed (stdlib zlib — the reference accepts gzipped POSTs),
-  ``Content-Length`` is honored.
-- Batch: requests are NOT line-splittable (one JSON body), so the unit
+- ``*.http`` (and any other name): ONE raw HTTP/1.1 request (request
+  line + headers + blank line + body) — "the requests the network
+  wrote", as hand-staged request directories hold them.
+  ``Content-Length`` is honored and ``Content-Encoding: gzip`` bodies
+  are decompressed (stdlib zlib — the reference accepts gzipped POSTs).
+- ``*.jsonl``: the live listener's spool segments, one request per
+  line, already decoded at the door by the same rules
+  (:func:`spool_line`). A segment file is one row per line.
+
+Each row is one decoded request: ``(body, method, path, query,
+content_type, src_file)``.
+
+- Batch: a request is NOT line-splittable (one JSON body), so the unit
   of parallelism is the file; files are bin-packed into partitions of
   ~``chunk_bytes`` (default 8 MB) so a million tiny requests don't
   become a million tasks, and a handful of huge ones still fan out.
 - Streaming: ``readStream`` over the same directory, with the spool
   offset contract of :mod:`metricproxy_spark.sources.spool`; each
-  micro-batch's files are bin-packed like the batch reader's.
+  micro-batch's files are bin-packed like the batch reader's. A live
+  listener's spool streams through Spark's JSON file source instead
+  (:func:`metricproxy_spark.streaming.httplistener.http_spool_stream`).
 
 Body PARSING stays in the protocol modules
 (:func:`metricproxy_spark.sources.signalfx.parse_sfx_v2_json`,
@@ -33,6 +42,7 @@ feed ``sfxdim_*`` request dims, exactly how the listener routes.
 from __future__ import annotations
 
 import gzip
+import json
 import os
 from typing import Tuple
 
@@ -56,7 +66,40 @@ SCHEMA = StructType(
     ]
 )
 
+# A spool line's fields: SCHEMA without ``src_file``, which is the
+# name of the file the line is in.
+LINE_SCHEMA = StructType(SCHEMA.fields[:-1])
+
 Row = Tuple[str, str, str, str, str, str]
+
+
+def decode_body(body: bytes, content_encoding: str) -> str:
+    """A request body as text: gunzipped when ``Content-Encoding`` is
+    gzip, then UTF-8 with undecodable bytes replaced. Raises
+    ``OSError``, ``EOFError`` or ``zlib.error`` for a bad gzip body."""
+    if content_encoding.strip().lower() == "gzip":
+        body = gzip.decompress(body)
+    return body.decode("utf-8", errors="replace")
+
+
+def spool_line(
+    method: str, target: str, content_type: str, body: str
+) -> bytes:
+    """One decoded request as a ``*.jsonl`` spool line. JSON escaping
+    keeps any body whole, CR/LF included, on one line."""
+    path, _, query = target.partition("?")
+    return (
+        json.dumps(
+            {
+                "method": method,
+                "path": path,
+                "query": query,
+                "content_type": content_type,
+                "body": body,
+            }
+        )
+        + "\n"
+    ).encode("ascii")
 
 
 def parse_http_request(raw: bytes) -> Tuple[str, str, str, str, str]:
@@ -80,11 +123,9 @@ def parse_http_request(raw: bytes) -> Tuple[str, str, str, str, str]:
     clen = headers.get("content-length")
     if clen and clen.isdigit():
         body = body[: int(clen)]
-    if headers.get("content-encoding", "").lower() == "gzip":
-        body = gzip.decompress(body)
     path, _, query = target.partition("?")
     return (
-        body.decode("utf-8", errors="replace"),
+        decode_body(body, headers.get("content-encoding", "")),
         method,
         path,
         query,
@@ -92,20 +133,29 @@ def parse_http_request(raw: bytes) -> Tuple[str, str, str, str, str]:
     )
 
 
-def _read_request_file(path: str) -> Row:
+_LINE_FIELDS = LINE_SCHEMA.fieldNames()
+
+
+def _read_request_file(path: str) -> list[Row]:
     with open(path, "rb") as fh:
         raw = fh.read()
-    return parse_http_request(raw) + (os.path.basename(path),)
+    name = os.path.basename(path)
+    if path.endswith(".jsonl"):
+        return [
+            tuple(d[f] for f in _LINE_FIELDS) + (name,)
+            for d in map(json.loads, raw.splitlines())
+        ]
+    return [parse_http_request(raw) + (name,)]
 
 
 def _read_request_batches(paths):
-    """Decode a partition's request files into ONE Arrow record batch
-    instead of per-row Python tuples (guide §4: each tuple otherwise
-    crosses the worker boundary as a pickled row; a RecordBatch
-    crosses as one Arrow buffer). Same rows, same order."""
+    """Decode a partition's files into ONE Arrow record batch instead
+    of per-row Python tuples (guide §4: each tuple otherwise crosses
+    the worker boundary as a pickled row; a RecordBatch crosses as one
+    Arrow buffer). Same rows, same order."""
     import pyarrow as pa
 
-    rows = [_read_request_file(p) for p in paths]
+    rows = [row for p in paths for row in _read_request_file(p)]
     if not rows:
         return
     cols = list(zip(*rows))

@@ -1,25 +1,37 @@
 """The spool-file contract shared by the file connectors and the live
 listeners.
 
-A live listener terminates the network into a *spool*: every accepted
-unit (one HTTP request, one batch of socket lines) becomes one file
-``{prefix}{seq:012d}{suffix}`` in a spool directory, published
-atomically so a reader never sees a partial file. A connector reads
-the directory back as a batch scan or as a replayable stream. This is
-the Kafka split: the listener is the durable network terminator, Spark
-is the engine with replay.
+A live listener terminates the network into a *spool*: accepted data
+becomes files ``{prefix}{seq:012d}{suffix}`` in a spool directory,
+published atomically so a reader never sees a partial file. A
+connector reads the directory back as a batch scan or as a replayable
+stream. This is the Kafka split: the listener is the durable network
+terminator, Spark is the engine with replay.
+
+There are two ways to fill a spool:
+
+- :class:`SpoolAppender` publishes one complete file per call (the
+  socket listener's batch of lines, a hand-staged request).
+- :class:`SegmentSpool` group-commits: each accepted unit is appended
+  as one line to the writer's open hidden segment ``.seg_*``, which is
+  on disk before the caller acks, and ``seal()`` publishes the segment
+  under the next name. A writer holds its open segment under
+  ``flock``; ``resume()`` publishes the segments of dead writers, cut
+  to their last complete line, and never touches a live writer's.
 
 **Offset contract.** A directory's files are listed by
 :func:`list_files` — names starting with ``_`` or ``.`` (markers, temp
-and staged files) are hidden, and digit runs sort numerically
-(``req_2 < req_10``). A stream's offset is ``{"files": N}``: the first
-N listed files have been consumed. The engine checkpoints that offset,
-so a restart replays deterministically, and each file is delivered
-exactly once as long as writers only ever *append* names that sort
-after the existing ones. :class:`SpoolAppender` guarantees that for
-the listeners: it resumes after the highest existing sequence number
-and claims each name with ``link(2)``, so two writers sharing a
-directory can never overwrite each other's files.
+files, staged files and open segments) are hidden, and digit runs sort
+numerically (``req_2 < req_10``). A Python-source stream's offset is
+``{"files": N}``: the first N listed files have been consumed. The
+engine checkpoints that offset, so a restart replays deterministically,
+and each file is delivered exactly once as long as writers only ever
+*append* names that sort after the existing ones. Both writers
+guarantee that: they resume after the highest existing sequence number
+(whatever the suffix) and claim each name with ``link(2)``, so two
+writers sharing a directory can never overwrite each other's files.
+Spark's own file stream source, which tracks files by name, reads the
+same directories.
 
 Sinks publish with a two-phase commit (:class:`SpoolWriter`): tasks
 write hidden ``._staged_`` files, the driver renames the complete set
@@ -33,6 +45,7 @@ import this repo.
 
 from __future__ import annotations
 
+import fcntl
 import os
 import re
 import threading
@@ -189,12 +202,11 @@ class SpoolWriter(DataSourceArrowWriter):
 class SpoolAppender:
     """Appends ``{prefix}{seq:012d}{suffix}`` files to a spool
     directory, thread-safe. ``resume()`` continues after the highest
-    existing sequence number; ``append()`` writes a hidden temp file
-    and claims the final name with ``link(2)``, which fails on an
-    existing name — so a second writer that resumed at the same
-    sequence number moves past it instead of overwriting an accepted
-    file. The 12-digit pad never widens in practice, and
-    :func:`list_files` orders by number even if it did."""
+    existing sequence number; :meth:`publish` claims the final name with
+    ``link(2)``, which fails on an existing name — so a second writer
+    that resumed at the same sequence number moves past it instead of
+    overwriting an accepted file. The 12-digit pad never widens in
+    practice, and :func:`list_files` orders by number even if it did."""
 
     def __init__(self, directory: str, prefix: str, suffix: str):
         self._dir = directory
@@ -204,14 +216,15 @@ class SpoolAppender:
         self.appended = 0
 
     def resume(self) -> None:
+        """Continue after the highest ``{prefix}{seq}`` of any suffix,
+        so new files sort after those of an earlier spool format."""
         os.makedirs(self._dir, exist_ok=True)
-        lo, hi = len(self._prefix), -len(self._suffix)
+        lo = len(self._prefix)
         seqs = [
-            int(f[lo:hi])
+            int(head)
             for f in os.listdir(self._dir)
             if f.startswith(self._prefix)
-            and f.endswith(self._suffix)
-            and f[lo:hi].isdigit()
+            and (head := f[lo:].partition(".")[0]).isdigit()
         ]
         with self._lock:
             self._seq = max(seqs) + 1 if seqs else 0
@@ -223,26 +236,139 @@ class SpoolAppender:
             self._seq += 1
             return seq
 
+    def publish(self, src: str) -> str:
+        """Publish the complete file ``src`` as the next spool file by
+        hard-linking it (``src`` stays); returns the new path."""
+        seq = self._claim()
+        while True:
+            final = os.path.join(
+                self._dir, f"{self._prefix}{seq:012d}{self._suffix}"
+            )
+            try:
+                os.link(src, final)
+                return final
+            except FileExistsError:
+                seq = self._claim(seq)
+
     def append(self, data: bytes) -> str:
         """Publish ``data`` as the next spool file; returns its path."""
         with self._lock:
             self.appended += 1
-        seq = self._claim()
         tmp = os.path.join(self._dir, f".tmp_{uuid.uuid4().hex}")
         with open(tmp, "wb") as fh:
             fh.write(data)
         try:
-            while True:
-                final = os.path.join(
-                    self._dir, f"{self._prefix}{seq:012d}{self._suffix}"
-                )
-                try:
-                    os.link(tmp, final)
-                    return final
-                except FileExistsError:
-                    seq = self._claim(seq)
+            return self.publish(tmp)
         finally:
             os.unlink(tmp)
+
+
+SEGMENT = ".seg_"
+
+
+def _write_all(fd: int, data: bytes) -> None:
+    view = memoryview(data)
+    while view:
+        view = view[os.write(fd, view) :]
+
+
+class SegmentSpool:
+    """Group commit into a spool directory, thread-safe.
+
+    ``append(line)`` writes one newline-terminated line to this
+    writer's open segment, a hidden ``.seg_*`` file created on first
+    use and held under ``flock``; when it returns, the line is in the
+    file. ``seal()`` publishes the segment under the next
+    ``{prefix}{seq:012d}{suffix}`` name (:class:`SpoolAppender`'s
+    ``link(2)`` claim) and closes it; the next ``append`` opens a new
+    one. ``resume()`` publishes, once each, the segments that writers
+    which died left behind, cut to their last complete line."""
+
+    def __init__(self, directory: str, prefix: str, suffix: str):
+        self._dir = directory
+        self._names = SpoolAppender(directory, prefix, suffix)
+        self._lock = threading.Lock()
+        self._fd: int | None = None
+        self._segment = ""
+        self._size = 0
+        self.appended = 0
+
+    def resume(self) -> None:
+        self._names.resume()
+        for f in sorted(os.listdir(self._dir)):
+            if f.startswith(SEGMENT):
+                self._recover(os.path.join(self._dir, f))
+
+    def _recover(self, path: str) -> None:
+        try:
+            fd = os.open(path, os.O_RDWR)
+        except FileNotFoundError:
+            return  # sealed or recovered meanwhile
+        try:
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                return  # a live writer's open segment
+            st = os.fstat(fd)
+            try:
+                if os.stat(path).st_ino != st.st_ino:
+                    return
+            except FileNotFoundError:
+                return  # sealed and gone before we locked it
+            # A second link means the writer died between publishing
+            # and removing the segment: it is published already.
+            if st.st_nlink == 1:
+                with open(fd, "rb", closefd=False) as fh:
+                    keep = fh.read().rfind(b"\n") + 1
+                if keep:
+                    os.ftruncate(fd, keep)
+                    # the file source drops files much older than the
+                    # newest it has seen (maxFileAge)
+                    os.utime(path)
+                    self._names.publish(path)
+            os.unlink(path)
+        finally:
+            os.close(fd)
+
+    def _open_locked(self) -> None:
+        # Lock under a temp name, then rename: resume() only looks at
+        # segment names, so it can never lock a segment before its
+        # writer does.
+        tmp = os.path.join(self._dir, f".tmp_{uuid.uuid4().hex}")
+        fd = os.open(
+            tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL | os.O_APPEND, 0o644
+        )
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        self._segment = os.path.join(self._dir, SEGMENT + uuid.uuid4().hex)
+        os.rename(tmp, self._segment)
+        self._fd, self._size = fd, 0
+
+    def append(self, line: bytes) -> None:
+        """Write ``line`` to the open segment; on ``OSError`` (e.g. a
+        full disk) the segment is cut back to its complete lines and
+        the error raised."""
+        with self._lock:
+            if self._fd is None:
+                self._open_locked()
+            try:
+                _write_all(self._fd, line)
+            except OSError:
+                os.ftruncate(self._fd, self._size)
+                raise
+            self._size += len(line)
+            self.appended += 1
+
+    def seal(self) -> str | None:
+        """Publish the open segment; returns its path (None if no line
+        was appended since the last seal)."""
+        with self._lock:
+            if self._fd is None:
+                return None
+            final = self._names.publish(self._segment)
+            os.unlink(self._segment)
+            os.close(self._fd)
+            self._fd = None
+            return final
 
 
 def pickle_module_by_value(module_name: str) -> None:

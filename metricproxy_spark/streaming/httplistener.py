@@ -6,17 +6,39 @@ and ``GET /healthz`` answers the load balancer
 [P: protocol/signalfx/signalfxlistener.go — ListenAndServe,
 signalfxlistener.go — healthz handler]. A Spark driver can host the
 same front door: this module runs a real ``ThreadingHTTPServer`` that
-ACCEPTS live network POSTs and terminates them into the ``httpwire``
-at-rest format — each accepted request is spooled verbatim (request
-line + headers + body, gzip still encoded) as one file in a spool
-directory. Everything downstream is then the normal engine:
+ACCEPTS live network POSTs and terminates them into a spool directory
+that the engine reads back:
 
 - batch: ``spark.read.format("httpwire").option("path", spool)``
-- streaming: ``readStream`` on the same connector
-  (:func:`http_spool_stream`).
+- streaming: :func:`http_spool_stream` (Spark's JSON file source).
 
-The spool itself — file naming, atomic publication, the stream's
-offset — is :mod:`metricproxy_spark.sources.spool`. One body parser
+**Spool format.** Each accepted request is decoded at the door —
+gunzipped if ``Content-Encoding: gzip``, then UTF-8 with errors
+replaced, exactly the ``httpwire`` rules — and written as ONE JSON
+line ``{"method", "path", "query", "content_type", "body"}``
+(:func:`metricproxy_spark.sources.httpwire.spool_line`). A gzip body
+that does not decode is answered 400 and nothing is spooled.
+
+**Ack, seal, visibility.** The line is appended to the listener's open
+hidden segment before the 200 goes out, so an ack means the request is
+in a file in the spool directory (not fsynced). Every
+:data:`SEAL_INTERVAL_S` the segment is sealed: published as the next
+``req_{seq:012d}.jsonl`` file, which readers then see. ``seal()``
+publishes on demand, ``stop()`` seals, and
+:meth:`~metricproxy_spark.streaming.pipeline.ProxyPipeline.run_available_now`
+seals its listeners before it drains. Group commit keeps a trigger's
+file count small (at most 16 files per 4 s trigger) without making
+clients wait for a seal.
+
+**Recovery.** ``start()`` resumes the sequence after the highest
+``req_`` number of any suffix (older spools hold one ``*.http`` raw
+request per file), and publishes the segments of listeners that died,
+cut to their last complete line, so an acked request is never lost to
+a process crash. A live listener's segment is held under ``flock`` and
+never published by anyone else: listeners may share a directory. The
+spool mechanics are :class:`metricproxy_spark.sources.spool.SegmentSpool`.
+
+One body parser
 (:func:`metricproxy_spark.sources.signalfx.parse_sfx_v2_json`, …)
 serves socket bytes, staged files, and live HTTP identically.
 
@@ -28,12 +50,24 @@ are not accepted), 400 when it is malformed, and nothing is spooled.
 
 from __future__ import annotations
 
+import os
 import threading
+import zlib
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from metricproxy_spark.sources.spool import SpoolAppender
+from metricproxy_spark.sources.httpwire import (
+    LINE_SCHEMA,
+    decode_body,
+    spool_line,
+)
+from metricproxy_spark.sources.spool import SegmentSpool, list_files
+
+# How long an acked request may wait in the open segment before it is
+# published: a 4 s trigger then lists at most 16 spool files.
+SEAL_INTERVAL_S = 0.25
 
 # sfx v2/v1 + collectd write_http + the OTLP/HTTP metrics binding
 # + msgpack/cbor frames (base64 text bodies: the spool is string-typed)
@@ -92,15 +126,22 @@ class _IngestHandler(BaseHTTPRequestHandler):
         body = _read_body(self)
         if body is None:
             return
-        # Reconstruct the request verbatim (body still gzip-encoded if
-        # the client sent it that way) — the httpwire reader owns all
-        # decoding, so live and at-rest requests share one code path.
-        head = f"POST {self.path} HTTP/1.1\r\n".encode("latin-1")
-        hdrs = b"".join(
-            f"{k}: {v}\r\n".encode("latin-1")
-            for k, v in self.headers.items()
+        # Decode at the door by the httpwire rules; the last of a
+        # repeated header wins, as in parse_http_request.
+        headers = {k.strip().lower(): v.strip() for k, v in self.headers.items()}
+        try:
+            text = decode_body(body, headers.get("content-encoding", ""))
+        except (OSError, EOFError, zlib.error):
+            self.send_error(400, "undecodable gzip body")
+            return
+        line = spool_line(
+            self.command, self.path, headers.get("content-type", ""), text
         )
-        self.listener._spool.append(head + hdrs + b"\r\n" + body)
+        try:
+            self.listener._accept(line)
+        except OSError:
+            self.send_error(503, "spool write failed")
+            return
         resp = b'"OK"'
         self.send_response(200)
         self.send_header("Content-Type", "application/json")
@@ -110,12 +151,13 @@ class _IngestHandler(BaseHTTPRequestHandler):
 
 
 class HttpIngestListener:
-    """A live HTTP ingest endpoint spooling to ``httpwire`` format.
+    """A live HTTP ingest endpoint spooling JSON-lines segments.
 
     >>> lis = HttpIngestListener(spool_dir)
     >>> host, port = lis.start()          # real TCP bind (port=0 = OS pick)
     >>> ... clients POST to http://host:port/v2/datapoint ...
-    >>> lis.stop()                        # accept loop drained
+    >>> lis.seal()                        # every acked request visible
+    >>> lis.stop()                        # accept loop drained, sealed
     """
 
     def __init__(
@@ -123,16 +165,33 @@ class HttpIngestListener:
     ):
         self.spool_dir = spool_dir
         self.host, self.port = host, port
-        self._spool = SpoolAppender(spool_dir, "req_", ".http")
+        self._spool = SegmentSpool(spool_dir, "req_", ".jsonl")
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
+        self._sealer: threading.Thread | None = None
+        self._stopping = threading.Event()
 
     @property
     def accepted(self) -> int:
         return self._spool.appended
 
+    def _accept(self, line: bytes) -> None:
+        self._spool.append(line)
+        if self._sealer is None:
+            # a request that finished after stop() has no sealer left
+            self._spool.seal()
+
+    def seal(self) -> None:
+        """Publish every request acked so far."""
+        self._spool.seal()
+
+    def _seal_periodically(self) -> None:
+        while not self._stopping.wait(SEAL_INTERVAL_S):
+            self._spool.seal()
+
     def start(self) -> tuple[str, int]:
-        # A restarted listener appends after the existing spool files.
+        # A restarted listener appends after the existing spool files
+        # and publishes what a dead one left unsealed.
         self._spool.resume()
         handler = type(
             "_BoundHandler", (_IngestHandler,), {"listener": self}
@@ -141,6 +200,11 @@ class HttpIngestListener:
             (self.host, self.port), handler
         )
         self.port = self._server.server_address[1]
+        self._stopping.clear()
+        self._sealer = threading.Thread(
+            target=self._seal_periodically, daemon=True
+        )
+        self._sealer.start()
         self._thread = threading.Thread(
             target=self._server.serve_forever, daemon=True
         )
@@ -153,6 +217,11 @@ class HttpIngestListener:
             self._server.server_close()
             self._thread.join(timeout=10)
             self._server = None
+        if self._sealer is not None:
+            self._stopping.set()
+            self._sealer.join()
+            self._sealer = None
+        self._spool.seal()
 
     def __enter__(self) -> "HttpIngestListener":
         self.start()
@@ -163,16 +232,38 @@ class HttpIngestListener:
 
 
 def http_spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
-    """The live listener's spool as a stream: one row per accepted
-    request — compose with the protocol parsers for a full live
-    pipeline."""
-    from metricproxy_spark.sources.httpwire import register_httpwire
+    """A request spool as a stream: one row per accepted request, with
+    the ``httpwire`` columns — compose with the protocol parsers for a
+    full live pipeline.
 
-    register_httpwire(spark)
+    A listener's spool (``*.jsonl`` segments) streams through Spark's
+    JSON file source, so no Python worker runs on the read side. A
+    directory that already holds ``*.http`` request files when the
+    stream is planned is a hand-staged request directory and streams
+    through ``httpwire``, which reads both formats."""
+    if os.path.exists(spool_dir) and any(
+        f.endswith(".http") for f in list_files(spool_dir)
+    ):
+        from metricproxy_spark.sources.httpwire import register_httpwire
+
+        register_httpwire(spark)
+        return (
+            spark.readStream.format("httpwire")
+            .option("path", spool_dir)
+            .load()
+        )
+    # the file source refuses a missing directory
+    os.makedirs(spool_dir, exist_ok=True)
     return (
-        spark.readStream.format("httpwire")
-        .option("path", spool_dir)
-        .load()
+        spark.readStream.schema(LINE_SCHEMA)
+        .option("pathGlobFilter", "*.jsonl")
+        # a body is one JSON string: lift Jackson's 20M-char cap
+        .option("maxStringLen", 2**31 - 1)
+        .json(spool_dir)
+        .select(
+            *LINE_SCHEMA.fieldNames(),
+            F.col("_metadata.file_name").alias("src_file"),
+        )
     )
 
 

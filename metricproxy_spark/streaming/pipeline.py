@@ -21,8 +21,11 @@ Spark mapping implemented here:
   counted, and every sink reads the cache.
 - **Counters (A1/F7)**: per-batch, per-sink row counts accumulated
   driver-side (``foreachBatch`` runs on the driver) — the analog of the
-  proxy's atomic ``TotalDatapoints`` counters, queryable at any time
-  via :meth:`ProxyPipeline.stats_df`.
+  proxy's atomic ``TotalDatapoints`` counters, readable at any time in
+  :attr:`ProxyPipeline.stats`. The source's own row count rides each
+  batch as an ``observe`` metric, folded by a ``StreamingQueryListener``
+  (every progress event, however long the run) into
+  ``observed_datapoints``.
 - **Load shedding (F2)**: the reference *drops* datapoints past
   ``BufferSize`` rather than block the listener. Spark's backpressure
   is pull-based (a slow sink slows the trigger, nothing is lost), so
@@ -35,18 +38,20 @@ Spark mapping implemented here:
   trigger — a slow sink then only delays itself (the buffered-forwarder
   property). The default shared-batch mode matches the reference's
   synchronous demux instead.
-- **Graceful drain (F6)**: ``run_available_now`` = process everything
-  then stop, the SIGTERM drain path.
+- **Graceful drain (F6)**: ``run_available_now`` = flush the live
+  listeners' buffers (``seal``), process everything, then stop — the
+  SIGTERM drain path.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from metricproxy_spark.streaming.sinks import LineSink, write_lines
 
@@ -74,6 +79,49 @@ class SinkSpec:
 OBSERVATION_NAME = "proxy_stats"
 
 
+class _ObservedDatapoints(StreamingQueryListener):
+    """Sums the observed ``datapoints`` of every progress event per
+    query id, and notes which queries ended. Unlike
+    ``recentProgress``, which keeps only the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` events, it misses
+    none."""
+
+    def __init__(self) -> None:
+        self._cond = threading.Condition()
+        self._totals: dict[str, int] = {}
+        self._ended: set[str] = set()
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        om = event.progress.observedMetrics.get(OBSERVATION_NAME)
+        if om is not None:  # a Row — index, don't .get
+            key = str(event.progress.id)
+            with self._cond:
+                self._totals[key] = self._totals.get(key, 0) + int(
+                    om["datapoints"]
+                )
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        with self._cond:
+            self._ended.add(str(event.id))
+            self._cond.notify_all()
+
+    def take(self, query_id: str, ended: bool) -> int:
+        """The datapoints not yet taken for ``query_id``. ``ended``: the
+        query has stopped, so wait (bounded) for its last events, which
+        reach listeners asynchronously."""
+        with self._cond:
+            if ended:
+                self._cond.wait_for(lambda: query_id in self._ended, 30)
+                self._ended.discard(query_id)
+            return self._totals.pop(query_id, 0)
+
+
 @dataclass
 class ProxyPipeline:
     source: DataFrame
@@ -85,6 +133,8 @@ class ProxyPipeline:
     # HTTP ingest listener a config's ListenAddr starts); owned by the
     # caller — see close_listeners()
     live_listeners: list = field(default_factory=list)
+    _observer: _ObservedDatapoints | None = field(default=None, init=False, repr=False)
+    _observing: set[str] = field(default_factory=set, init=False, repr=False)
 
     def close_listeners(self) -> None:
         """Stop every live network endpoint attached by build_pipeline
@@ -111,19 +161,22 @@ class ProxyPipeline:
         )
 
     def drain_observed_metrics(self, query) -> dict[str, int]:
-        """Fold every progress event's observed metrics into stats
-        (call after awaitTermination; also usable live)."""
-        total = 0
-        for p in query.recentProgress:
-            om = (p or {}).get("observedMetrics", {}).get(
-                OBSERVATION_NAME
-            )
-            if om is not None:  # a Row (batch) — index, don't .get
-                total += int(om["datapoints"])
+        """Fold the query's observed metrics into stats (call after
+        awaitTermination; also usable live, then it folds what has
+        been reported so far)."""
+        if self._observer is None or query.id not in self._observing:
+            return dict(self.stats)
+        ended = not query.isActive
+        total = self._observer.take(query.id, ended)
         if total:
             self.stats["observed_datapoints"] = (
                 self.stats.get("observed_datapoints", 0) + total
             )
+        if ended:
+            self._observing.discard(query.id)
+            if not self._observing:
+                self.source.sparkSession.streams.removeListener(self._observer)
+                self._observer = None
         return dict(self.stats)
 
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -187,6 +240,9 @@ class ProxyPipeline:
             )
 
         if not independent:
+            if self._observer is None:
+                self._observer = _ObservedDatapoints()
+                self.source.sparkSession.streams.addListener(self._observer)
             q = (
                 with_trigger(
                     self._observed_source().writeStream.foreachBatch(
@@ -198,6 +254,7 @@ class ProxyPipeline:
                 )
                 .start()
             )
+            self._observing.add(q.id)
             return [q]
         queries = []
         for sink in self.sinks:
@@ -223,8 +280,10 @@ class ProxyPipeline:
         return queries
 
     def run_available_now(self, checkpoint_dir: str, independent: bool = False) -> dict[str, int]:
-        """Drain everything currently available and stop (F6); returns
-        the counter snapshot."""
+        """Seal the live listeners, drain everything now available and
+        stop (F6); returns the counter snapshot."""
+        for lis in self.live_listeners:
+            lis.seal()
         for q in self.start(checkpoint_dir, independent=independent):
             q.awaitTermination()
             if not independent:

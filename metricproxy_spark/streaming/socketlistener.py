@@ -76,6 +76,9 @@ class LineSocketListener:
         with self._lock:
             self._flush_locked()
 
+    # the pipeline seals every live listener before a drain
+    seal = flush
+
     # -- lifecycle -----------------------------------------------------
     def start(self) -> tuple[str, int]:
         self._spool.resume()

@@ -32,3 +32,20 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_correctness_dir() -> str:
     return SF_CORRECTNESS
+
+
+def pytest_collection_modifyitems(items):
+    """Run test_registry_contract's checks of one query back to back
+    (runs, schema, oracle), so its ``built`` fixture builds each query
+    once. A stable sort by query name keeps the check order."""
+    at = [
+        i
+        for i, item in enumerate(items)
+        if item.module.__name__.endswith("test_registry_contract")
+        and "name" in getattr(getattr(item, "callspec", None), "params", {})
+    ]
+    grouped = sorted(
+        (items[i] for i in at), key=lambda item: item.callspec.params["name"]
+    )
+    for i, item in zip(at, grouped):
+        items[i] = item

@@ -324,11 +324,11 @@ def test_httplistener_restart_appends_not_clobbers(spark, tmp_path):
     import os
 
     files = sorted(
-        f for f in os.listdir(spool) if f.endswith(".http")
+        f for f in os.listdir(spool) if f.endswith(".jsonl")
     )
     assert files == [
-        "req_000000000000.http",
-        "req_000000000001.http",
+        "req_000000000000.jsonl",
+        "req_000000000001.jsonl",
     ], files
     from metricproxy_spark.sources.httpwire import register_httpwire
 

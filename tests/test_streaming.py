@@ -304,6 +304,28 @@ def test_observed_metrics_match_counts(spark, tmp_path):
     assert stats.get("observed_datapoints") == 80
 
 
+def test_observed_metrics_count_every_batch_of_a_long_run(spark, tmp_path):
+    """``observed_datapoints`` folds every batch's progress event, not
+    only the few ``recentProgress`` retains."""
+    src_dir = str(tmp_path / "src")
+    rows = [(i, float(i)) for i in range(90)]
+    _write_parquet_stream_src(
+        spark, rows, "id long, value double", src_dir, n_files=3
+    )
+    stream = read_stream_table(spark, src_dir, max_files_per_trigger=1)
+    sink = CollectingSink()
+    pipe = ProxyPipeline(source=stream, sinks=[SinkSpec("a", sink)])
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        stats = pipe.run_available_now(str(tmp_path / "ckpt"))
+    finally:
+        spark.conf.set(key, prev)
+    assert sink.batches == [30, 30, 30]
+    assert stats["observed_datapoints"] == 90
+
+
 def test_counter_to_rate_v2_parity(spark, tmp_path):
     """T6 on transformWithStateInPandas (RocksDB state store): same
     output as the applyInPandasWithState implementation, including the
