@@ -14,9 +14,10 @@ Spark mapping implemented here:
   exactly the demultiplexer's "loop over sinks" with the slice shared.
   The line forwarders (:class:`~metricproxy_spark.streaming.sinks.LineSink`)
   are written together by one
-  :func:`~metricproxy_spark.streaming.sinks.write_lines` job whose row
-  count feeds the counters, so a batch served only by them is ONE Spark
-  job: no persist, no count job. Generic writers, or load shedding,
+  :func:`~metricproxy_spark.streaming.sinks.write_lines` job — a JVM
+  text write partitioned by sink, whose observed row count feeds the
+  counters — so a batch served only by them is ONE Spark job: no
+  persist, no count job, no Python worker. Generic writers, or load shedding,
   need the slice more than once; then the batch is persisted once,
   counted, and every sink reads the cache.
 - **Counters (A1/F7)**: per-batch, per-sink row counts accumulated
@@ -157,7 +158,6 @@ class ProxyPipeline:
         return self.source.observe(
             OBSERVATION_NAME,
             F.count(F.lit(1)).alias("datapoints"),
-            F.sum(F.lit(1) * 0).alias("_zero"),  # schema anchor
         )
 
     def drain_observed_metrics(self, query) -> dict[str, int]:

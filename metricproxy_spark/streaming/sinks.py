@@ -8,18 +8,23 @@ network in this environment).
 
 The three file forwarders are line sinks (:class:`LineSink`): a
 directory, a file suffix and the wire line of one row.
-:func:`write_lines` delivers any number of them in ONE Spark job — each
-task stages every sink's lines as hidden files, and the driver renames
-the complete set into place — so the pipeline fans a micro-batch out to
-all of its forwarders with a single scan, no cache and no count job.
+:func:`write_lines` delivers any number of them in ONE Spark job — one
+JVM text write of a ``(sink, line)`` row per row and sink, partitioned
+by sink into a hidden scratch tree under the first sink's directory —
+and the driver then renames each sink's files into place. So the
+pipeline fans a micro-batch out to all of its forwarders with a single
+scan, no cache, no count job and no Python worker. Because the files
+are moved by rename, all line sinks of one call must share a
+filesystem.
 
 Delivery semantics: ``foreachBatch`` is AT-LEAST-ONCE across restarts —
 a batch whose source offsets were not yet committed replays with the
 same ``batch_id`` (demonstrated in
 tests/test_streaming.py::test_checkpoint_resume_idempotent_sink_exactly_once).
 A failed :func:`write_lines` job publishes no file to any forwarder and
-removes what its tasks staged (a driver crash between two renames can
-still publish a subset). The append-mode writers therefore match the reference forwarders'
+its scratch tree is removed; a driver crash between two renames can
+still publish a subset, and leave the scratch tree behind. The
+append-mode writers therefore match the reference forwarders'
 at-least-once posture; for effective exactly-once, key the write by
 ``batch_id`` (e.g. write to ``{path}/batch={batch_id}`` with overwrite,
 or an idempotent upsert) — the ProxyPipeline hands every writer the id
@@ -28,13 +33,13 @@ for exactly this purpose.
 
 from __future__ import annotations
 
-import glob
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
 from typing import Callable, Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from metricproxy_spark.sources.carbon import to_carbon_lines
@@ -60,85 +65,56 @@ def write_lines(df: DataFrame, sinks: Sequence[LineSink]) -> int:
     """Append ``df`` to every sink of ``sinks`` in one Spark job; returns
     the row count.
 
-    Each sink gets a fresh write id. Each task copies the Arrow value
-    buffer of each sink's newline-terminated line column into a hidden
-    ``._staged_{id}_*`` file in that sink's directory and reports its row
-    count. After the job the driver renames the staged files to
-    ``part-{id}-{partition:05d}{suffix}`` and writes ``_SUCCESS``. Empty
-    partitions write no file. Whatever the job leaves staged — every
-    file of a failed job, a failed attempt's file in a successful one —
-    is removed."""
-    targets = [(s.path, uuid.uuid4().hex[:12]) for s in sinks]
-    for d, _ in targets:
+    The job is one JVM text write: each row becomes one ``(sink,
+    value)`` row per sink, written with ``partitionBy("sink")`` into a
+    hidden scratch tree ``._writing_{id}`` under the first sink's
+    directory, with the row count observed on the way. Then the driver
+    moves each ``sink=i/part-*`` file into sink ``i``'s directory as
+    ``part-{id}-{i}-{spark name}{suffix}`` (the Spark name keeps the
+    task number and file counter, so names never collide), writes
+    ``_SUCCESS`` and removes the scratch tree. Empty partitions write no
+    file; a failed job publishes nothing.
+
+    The moves are renames, so every sink directory must be on the first
+    sink's filesystem; otherwise ``ValueError`` is raised before
+    anything is written."""
+    dirs = [os.path.abspath(s.path) for s in sinks]
+    for d in dirs:
         os.makedirs(d, exist_ok=True)
-    lines = df.select(
-        *(
-            F.concat(F.coalesce(s.line(df), F.lit("")), F.lit("\n")).alias(
-                f"line{i}"
+    for s, d in zip(sinks, dirs):
+        if os.stat(d).st_dev != os.stat(dirs[0]).st_dev:
+            raise ValueError(
+                f"line sink {s.path!r} is not on the filesystem of {dirs[0]!r}"
             )
-            for i, s in enumerate(sinks)
-        )
-    )
-
-    # Nested, so cloudpickle ships it by value: Python workers need not
-    # import this package.
-    def stage(batches):
-        import numpy as np
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        staged = [
-            os.path.join(d, f"._staged_{wid}_{pid:05d}_{ctx.attemptNumber()}")
-            for d, wid in targets
-        ]
-        rows, files = 0, []
-        try:
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                if not files:
-                    files = [open(p, "wb") for p in staged]
-                rows += batch.num_rows
-                for fh, col in zip(files, batch.columns):
-                    # No nulls (coalesced), so the lines are exactly the
-                    # value bytes between the first and last offset.
-                    _, offsets, data = col.buffers()
-                    width = 8 if pa.types.is_large_string(col.type) else 4
-                    bounds = np.frombuffer(
-                        offsets, dtype=f"<i{width}", count=len(col) + 1,
-                        offset=col.offset * width,
-                    )
-                    fh.write(memoryview(data)[bounds[0] : bounds[-1]])
-        finally:
-            for fh in files:
-                fh.close()
-        if rows:
-            yield pa.RecordBatch.from_pydict(
-                {"pid": [pid], "rows": [rows], "staged": [staged]}
-            )
-
+    wid = uuid.uuid4().hex[:12]
+    scratch = os.path.join(dirs[0], f"._writing_{wid}")
+    rows = Observation()
+    df = df.observe(rows, F.count(F.lit(1)).alias("rows"))
     try:
-        reports = lines.mapInArrow(
-            stage, "pid long, rows long, staged array<string>"
-        ).collect()
-        for r in reports:
-            for s, (d, wid), staged in zip(sinks, targets, r.staged):
-                os.replace(
-                    staged, os.path.join(d, f"part-{wid}-{r.pid:05d}{s.suffix}")
+        df.select(
+            F.inline(
+                F.array(
+                    *(
+                        F.struct(F.lit(i).alias("sink"), s.line(df).alias("value"))
+                        for i, s in enumerate(sinks)
+                    )
                 )
-        for d, _ in targets:
-            with open(os.path.join(d, "_SUCCESS"), "w"):
-                pass
+            )
+        ).write.partitionBy("sink").text(scratch)
+        for i, (s, d) in enumerate(zip(sinks, dirs)):
+            staged = os.path.join(scratch, f"sink={i}")
+            for name in os.listdir(staged) if os.path.isdir(staged) else ():
+                if name.startswith("part-"):
+                    spark_name = name.removeprefix("part-").removesuffix(".txt")
+                    os.replace(
+                        os.path.join(staged, name),
+                        os.path.join(d, f"part-{wid}-{i}-{spark_name}{s.suffix}"),
+                    )
+        for d in dirs:
+            open(os.path.join(d, "_SUCCESS"), "w").close()
     finally:
-        for d, wid in targets:
-            for f in glob.glob(os.path.join(glob.escape(d), f"._staged_{wid}_*")):
-                try:
-                    os.remove(f)
-                except FileNotFoundError:
-                    pass
-    return sum(r.rows for r in reports)
+        shutil.rmtree(scratch, ignore_errors=True)
+    return rows.get["rows"]
 
 
 # to_csv handles these types itself; every other column is written as

@@ -12,6 +12,8 @@ import datetime as dt
 import glob
 import json
 import os
+import shutil
+import tempfile
 from decimal import Decimal
 
 import pytest
@@ -284,3 +286,64 @@ def test_independent_line_sinks_count_without_a_second_scan(spark, tmp_path):
     assert pipe.stats == {"sink.csv.datapoints": 300, "sink.signalfx.datapoints": 300}
     for d in ("csv", "sfx"):
         assert len([ln for ln in _lines(str(tmp_path / d)) if ln]) == 300
+
+
+def test_split_output_files_keep_every_line(spark, tmp_path):
+    """With maxRecordsPerFile a task writes several files per sink; each
+    keeps its own name."""
+    key = "spark.sql.files.maxRecordsPerFile"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "30")
+    try:
+        df = spark.range(0, 200, numPartitions=2).select(F.col("id").cast("string").alias("s"))
+        sinks = [
+            LineSink(str(tmp_path / k), ".txt", lambda d, k=k: F.concat(F.lit(k), F.col("s")))
+            for k in "ab"
+        ]
+        assert write_lines(df, sinks) == 200
+    finally:
+        spark.conf.set(key, prev)
+    for k in "ab":
+        path = str(tmp_path / k)
+        assert len(glob.glob(os.path.join(path, "part-*"))) >= 8
+        assert [ln for ln in _lines(path) if ln] == sorted(f"{k}{i}".encode() for i in range(200))
+
+
+def test_awkward_forwarder_directory(spark, tmp_path):
+    root = tmp_path / "sp ace [b] {c,d} 100% a:b k=v * ? #frag"
+    df = spark.range(0, 50, numPartitions=2).select(F.col("id").cast("string").alias("s"))
+    sinks = [
+        LineSink(str(root / "a"), ".txt", lambda d: F.concat(F.lit("a"), F.col("s"))),
+        LineSink(str(root / "b=1"), ".csv", lambda d: F.concat(F.lit("b"), F.col("s"))),
+    ]
+    assert write_lines(df, sinks) == 50
+    for k, d in (("a", "a"), ("b", "b=1")):
+        path = str(root / d)
+        # read by listing: the directory name is not a safe glob pattern
+        data = b"".join(
+            open(os.path.join(path, f), "rb").read()
+            for f in os.listdir(path)
+            if f.startswith("part-")
+        )
+        assert sorted(data.split()) == sorted(f"{k}{i}".encode() for i in range(50))
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
+        assert _hidden(path) == []
+    assert sorted(os.listdir(root)) == ["a", "b=1"]
+
+
+def test_sinks_on_two_filesystems_are_refused(spark, tmp_path):
+    if not os.path.isdir("/dev/shm") or os.stat("/dev/shm").st_dev == os.stat(tmp_path).st_dev:
+        pytest.skip("needs /dev/shm on its own filesystem")
+    other = tempfile.mkdtemp(dir="/dev/shm")
+    try:
+        df = spark.range(0, 10).select(F.col("id").cast("string").alias("s"))
+        sinks = [
+            LineSink(str(tmp_path / "local"), ".txt", lambda d: F.col("s")),
+            LineSink(os.path.join(other, "shm"), ".txt", lambda d: F.col("s")),
+        ]
+        with pytest.raises(ValueError, match="shm"):
+            write_lines(df, sinks)
+        assert os.listdir(tmp_path / "local") == []
+        assert os.listdir(os.path.join(other, "shm")) == []
+    finally:
+        shutil.rmtree(other)
