@@ -102,7 +102,7 @@ def _serve(args) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     pipe = build_pipeline(spark, args.config)
     for lis in pipe.live_listeners:
-        print(f"listening on http://{lis.host}:{lis.port}", flush=True)
+        print(f"listening on {lis.url}", flush=True)
     ckpt = args.checkpoint or tempfile.mkdtemp(prefix="mps_serve_ckpt_")
     try:
         if args.drain:

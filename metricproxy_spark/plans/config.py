@@ -38,6 +38,10 @@ from metricproxy_spark.streaming.sinks import (
     csv_sink,
     signalfx_sink,
 )
+from metricproxy_spark.streaming.socketlistener import (
+    LineSocketListener,
+    line_spool_stream,
+)
 from metricproxy_spark.streaming.source import read_stream_table
 
 CANONICAL_COLS = (
@@ -126,17 +130,13 @@ def _build_listener(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
         )
     if ltype == "statsd":
         # UDP/TCP statsd terminated by the line-socket listener; the
-        # spool streams through the carbonwire connector and the
-        # SAME parser as the at-rest/live/streamed query twins.
+        # spool streams through Spark's text source and the SAME
+        # parser as the at-rest/live/streamed query twins.
         # statsd lines carry no timestamp — points are stamped at
         # processing time, the statsd-server contract.
-        from metricproxy_spark.sources.pyds import register_carbonwire
         from metricproxy_spark.sources.statsd import parse_statsd_lines
 
-        register_carbonwire(spark)
-        lines = (
-            spark.readStream.format("carbonwire").option("path", src).load()
-        )
+        lines = line_spool_stream(spark, src)
         parsed = parse_statsd_lines(lines.select("line"))
         mtype_map = (
             F.when(F.col("mtype") == "g", "gauge")
@@ -160,12 +160,8 @@ def _build_listener(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
         # wire timestamp truncates to the canonical µs timestamp and
         # tags ride the dimensions map.
         from metricproxy_spark.sources.influx import parse_influx_lines
-        from metricproxy_spark.sources.pyds import register_carbonwire
 
-        register_carbonwire(spark)
-        lines = (
-            spark.readStream.format("carbonwire").option("path", src).load()
-        )
+        lines = line_spool_stream(spark, src)
         typed = parse_influx_lines(lines.select("line"))
         return _canonicalize(
             typed.select(
@@ -241,10 +237,6 @@ def build_pipeline(
                 lis.start()
                 pipe.live_listeners.append(lis)
             elif ltype in ("statsd", "influx"):
-                from metricproxy_spark.streaming.socketlistener import (
-                    LineSocketListener,
-                )
-
                 lis = LineSocketListener(
                     spec["Source"],
                     mode=spec.get("Protocol", "tcp").lower(),

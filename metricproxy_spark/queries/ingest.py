@@ -1420,7 +1420,7 @@ def ingest_statsd_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim to line files, scanned back through the byte-range
     `carbonwire` connector, and parsed/aggregated by the SAME
     functions as the at-rest twin. Oracle is the identical SQL — the
-    whole live chain (accept, newline framing, spool rotation,
+    whole live chain (accept, newline framing, segment seal,
     connector splits, parse, flush agg) is value-checked end to end.
 
     The sending loop is the CLIENT side of the wire — a bounded load

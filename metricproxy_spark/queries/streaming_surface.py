@@ -1002,16 +1002,15 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The statsd front door fully STREAMED: wire lines pushed over
     real loopback TCP into the line-socket listener's spool, the
-    spool consumed EXACTLY ONCE through the carbonwire STREAMING
-    connector (checkpointed first-N-files offset), parsed by the same
-    shared statsd parser, flush-aggregated in complete mode — the
-    streamed result hash-matches the SAME DuckDB oracle as the
-    at-rest (`ingest_statsd`) and live-batch (`ingest_statsd_live`)
-    twins. One parser, three transports, one oracle; at 100 TB this
-    is the micro-batched listener pipeline with per-batch state in
-    the store, not the driver."""
-    from metricproxy_spark.io import ensure_package_on_workers, load_table
-    from metricproxy_spark.sources.pyds import register_carbonwire
+    spool consumed EXACTLY ONCE through Spark's text file source
+    (``line_spool_stream``: files tracked by name in the checkpoint),
+    parsed by the same shared statsd parser, flush-aggregated in
+    complete mode — the streamed result hash-matches the SAME DuckDB
+    oracle as the at-rest (`ingest_statsd`) and live-batch
+    (`ingest_statsd_live`) twins. One parser, three transports, one
+    oracle; at 100 TB this is the micro-batched listener pipeline with
+    per-batch state in the store, not the driver."""
+    from metricproxy_spark.io import load_table
     from metricproxy_spark.sources.statsd import (
         aggregate_statsd,
         parse_statsd_lines,
@@ -1019,11 +1018,10 @@ def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from metricproxy_spark.streaming.socketlistener import (
         LineSocketListener,
+        line_spool_stream,
         send_lines_tcp,
     )
 
-    ensure_package_on_workers(spark)
-    register_carbonwire(spark)
     wd = _workdir()
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_id") % 3 == 0
@@ -1038,16 +1036,9 @@ def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     spool = os.path.join(wd, "spool")
     os.makedirs(spool, exist_ok=True)
-    with LineSocketListener(
-        spool, mode="tcp", lines_per_file=50_000
-    ) as lis:
+    with LineSocketListener(spool, mode="tcp") as lis:
         send_lines_tcp(lis.host, lis.port, payload)
-    lines = (
-        spark.readStream.format("carbonwire")
-        .option("path", spool)
-        .load()
-        .select("line")
-    )
+    lines = line_spool_stream(spark, spool).select("line")
     parsed = parse_statsd_lines(lines)
     # Streaming disallows count_distinct: the STREAMING agg groups by
     # (name, mtype, member) — set members dedup into state keys, so
@@ -1103,25 +1094,23 @@ _share_statsd_oracle()
 )
 def stream_influx_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Influx line protocol fully STREAMED (see stream_statsd_pipeline
-    for the transport chain): real TCP push → line spool → carbonwire
-    streaming connector exactly-once → shared influx parser →
+    for the transport chain): real TCP push → line spool → Spark's
+    text file source exactly-once → shared influx parser →
     complete-mode rollup per (measurement, host) with decimal-exact
     sums — hash-matches the same oracle as the at-rest and live-batch
     twins, on the deterministic 1/3 subset."""
-    from metricproxy_spark.io import ensure_package_on_workers, load_table
+    from metricproxy_spark.io import load_table
     from metricproxy_spark.sources.influx import (
         aggregate_influx,
         influx_wire_lines,
         parse_influx_lines,
     )
-    from metricproxy_spark.sources.pyds import register_carbonwire
     from metricproxy_spark.streaming.socketlistener import (
         LineSocketListener,
+        line_spool_stream,
         send_lines_tcp,
     )
 
-    ensure_package_on_workers(spark)
-    register_carbonwire(spark)
     wd = _workdir()
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_id") % 3 == 0
@@ -1136,16 +1125,9 @@ def stream_influx_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     spool = os.path.join(wd, "spool")
     os.makedirs(spool, exist_ok=True)
-    with LineSocketListener(
-        spool, mode="tcp", lines_per_file=50_000
-    ) as lis:
+    with LineSocketListener(spool, mode="tcp") as lis:
         send_lines_tcp(lis.host, lis.port, payload)
-    lines = (
-        spark.readStream.format("carbonwire")
-        .option("path", spool)
-        .load()
-        .select("line")
-    )
+    lines = line_spool_stream(spark, spool).select("line")
     agg = aggregate_influx(parse_influx_lines(lines))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -1182,25 +1164,23 @@ _share_influx_oracle()
 def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graphite tagged-carbon fully STREAMED (the transport chain of
     stream_statsd_pipeline): wire lines over real loopback TCP into
-    the line-socket spool, consumed exactly-once through the
-    carbonwire STREAMING connector, parsed by the shared graphite
+    the line-socket spool, consumed exactly-once through Spark's text
+    file source (``line_spool_stream``), parsed by the shared graphite
     parser, complete-mode rollup per (name, host-tag) with
     decimal-exact sums — hash-matches the same oracle as the at-rest
     twin (`ingest_graphite_tags`) on the deterministic 1/3 subset.
     One parser, two transports, one oracle."""
-    from metricproxy_spark.io import ensure_package_on_workers, load_table
+    from metricproxy_spark.io import load_table
     from metricproxy_spark.sources.graphite import (
         graphite_wire_lines,
         parse_graphite_lines,
     )
-    from metricproxy_spark.sources.pyds import register_carbonwire
     from metricproxy_spark.streaming.socketlistener import (
         LineSocketListener,
+        line_spool_stream,
         send_lines_tcp,
     )
 
-    ensure_package_on_workers(spark)
-    register_carbonwire(spark)
     wd = _workdir()
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") % 3 == 0)
     from metricproxy_spark.operators.scale import guarded_wire_payload
@@ -1213,14 +1193,9 @@ def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     spool = os.path.join(wd, "spool")
     os.makedirs(spool, exist_ok=True)
-    with LineSocketListener(spool, mode="tcp", lines_per_file=50_000) as lis:
+    with LineSocketListener(spool, mode="tcp") as lis:
         send_lines_tcp(lis.host, lis.port, payload)
-    lines = (
-        spark.readStream.format("carbonwire")
-        .option("path", spool)
-        .load()
-        .select("line")
-    )
+    lines = line_spool_stream(spark, spool).select("line")
     parsed = parse_graphite_lines(lines)
     pre = parsed.groupBy(
         "name", F.col("tags").getItem("host").alias("host")
@@ -1507,23 +1482,21 @@ def stream_collectd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sfx_v1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SignalFx v1 newline-JSON fully STREAMED (r6 VERDICT task 4):
     wire lines pushed over real loopback TCP into the line-socket
-    listener's spool, consumed EXACTLY ONCE through the carbonwire
-    streaming connector, parsed by the same S4 parser as
+    listener's spool, consumed EXACTLY ONCE through Spark's text file
+    source (``line_spool_stream``), parsed by the same S4 parser as
     ``ingest_sfx_v1_registry`` with the S5 metric-type registry joined
     STREAM-STATIC (broadcast — the bounded dimension never shuffles the
     stream), then rolled up per (metric, source, metric_type) with
     decimal-exact sums in complete mode. One parser + registry, two
     transports, one oracle; deterministic 1/4 events subset."""
-    from metricproxy_spark.io import ensure_package_on_workers, load_table
-    from metricproxy_spark.sources.pyds import register_carbonwire
+    from metricproxy_spark.io import load_table
     from metricproxy_spark.sources.signalfx import parse_sfx_v1_json
     from metricproxy_spark.streaming.socketlistener import (
         LineSocketListener,
+        line_spool_stream,
         send_lines_tcp,
     )
 
-    ensure_package_on_workers(spark)
-    register_carbonwire(spark)
     wd = _workdir()
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") % 4 == 0)
     line = F.to_json(
@@ -1543,18 +1516,13 @@ def stream_sfx_v1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     spool = os.path.join(wd, "spool")
     os.makedirs(spool, exist_ok=True)
-    with LineSocketListener(spool, mode="tcp", lines_per_file=50_000) as lis:
+    with LineSocketListener(spool, mode="tcp") as lis:
         send_lines_tcp(lis.host, lis.port, payload)
     registry = spark.createDataFrame(
         [("error", "counter"), ("purchase", "cumulative_counter")],
         "sf_metric string, metric_type string",
     )
-    lines = (
-        spark.readStream.format("carbonwire")
-        .option("path", spool)
-        .load()
-        .select("line")
-    )
+    lines = line_spool_stream(spark, spool).select("line")
     parsed = parse_sfx_v1_json(lines, registry)
     agg = parsed.groupBy("metric", "source", "metric_type").agg(
         F.count(F.lit(1)).alias("n_points"),
@@ -2982,7 +2950,7 @@ def stream_delta_commit_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write("\n".join(_json.dumps(a) for a in actions) + "\n")
         # Put-if-absent via link(2): hard-link fails with EEXIST if the
         # version file already exists (a retried batch), making the
-        # commit idempotent — the same discipline as spool.SpoolAppender.
+        # commit idempotent — the same discipline as spool.SegmentSpool.
         try:
             os.link(tmp, final)
         except FileExistsError:

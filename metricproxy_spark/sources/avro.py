@@ -23,9 +23,6 @@ Exposed as the ``avrowire`` DataSource:
   seeks, grouping blocks into ~target-byte splits), so scan
   parallelism tracks data volume even for one huge container file —
   the same splittability contract the sync marker exists for.
-- ``readStream`` follows the spool offset contract of
-  :mod:`metricproxy_spark.sources.spool`, planning each micro-batch's
-  files with the same block-split rule.
 - The writer lands one container file per task with the spool
   two-phase commit.
 
@@ -46,7 +43,6 @@ from pyspark.sql.datasource import DataSource, InputPartition
 
 from metricproxy_spark.sources.spool import (
     SpoolReader,
-    SpoolStreamReader,
     SpoolWriter,
     list_files,
     register,
@@ -413,9 +409,6 @@ class AvroContainerDataSource(DataSource):
 
     def writer(self, schema, overwrite: bool) -> AvroBatchWriter:
         return AvroBatchWriter(self.options["path"], overwrite, schema)
-
-    def streamReader(self, schema) -> SpoolStreamReader:
-        return SpoolStreamReader(self.reader(schema))
 
 
 def register_avrowire(spark) -> None:

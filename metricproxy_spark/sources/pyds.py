@@ -5,16 +5,17 @@ The reference terminates the carbon plaintext protocol with a TCP
 listener [P: protocol/carbon/carbonlistener.go — Listener]; this module
 packages the same wire format as a native Spark *connector* via the
 PySpark 4 Python Data Source API — so ``spark.read.format("carbonwire")``
-and ``spark.readStream.format("carbonwire")`` work like any built-in
-source, with scan parallelism the planner understands:
+works like any built-in source, with scan parallelism the planner
+understands:
 
 - Batch: byte-range ``InputPartition`` splits (chunk_bytes option) — a
   1000-executor cluster saturates on ONE huge wire file just as well as
   on many, the same contract HDFS text splits give. Per-partition work
   is a sequential range read: no driver-side collect anywhere.
-- Streaming: ``readStream`` over the same directory, with the spool
-  offset contract of :mod:`metricproxy_spark.sources.spool`; each
-  micro-batch's files split into the batch reader's byte ranges.
+- Streaming: none here. A line spool streams through Spark's own text
+  source with this connector's line rules
+  (:func:`metricproxy_spark.streaming.socketlistener.line_spool_stream`),
+  so no Python source runner sits on the read side.
 - Write: ``df.write.format("carbonwire").save(path)`` with the spool
   two-phase commit.
 
@@ -33,7 +34,6 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from metricproxy_spark.sources.spool import (
     SpoolReader,
-    SpoolStreamReader,
     SpoolWriter,
     register,
 )
@@ -151,9 +151,6 @@ class CarbonWireDataSource(DataSource):
             self.options["path"],
             int(self.options.get("chunk_bytes", 8 * 1024 * 1024)),
         )
-
-    def streamReader(self, schema) -> SpoolStreamReader:
-        return SpoolStreamReader(self.reader(schema))
 
     def writer(self, schema, overwrite: bool) -> CarbonWireWriter:
         return CarbonWireWriter(self.options["path"], overwrite)

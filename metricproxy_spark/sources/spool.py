@@ -8,30 +8,27 @@ connector reads the directory back as a batch scan or as a replayable
 stream. This is the Kafka split: the listener is the durable network
 terminator, Spark is the engine with replay.
 
-There are two ways to fill a spool:
-
-- :class:`SpoolAppender` publishes one complete file per call (the
-  socket listener's batch of lines, a hand-staged request).
-- :class:`SegmentSpool` group-commits: each accepted unit is appended
-  as one line to the writer's open hidden segment ``.seg_*``, which is
-  on disk before the caller acks, and ``seal()`` publishes the segment
-  under the next name. A writer holds its open segment under
-  ``flock``; ``resume()`` publishes the segments of dead writers, cut
-  to their last complete line, and never touches a live writer's.
+One writer fills a spool: :class:`SegmentSpool` group-commits. Each
+accepted batch of lines is appended to the writer's open hidden
+segment ``.seg_*``, which is on disk before the caller acks, and
+``seal()`` (on demand, and every :data:`SEAL_INTERVAL_S` once started)
+publishes the segment under the next name. A writer holds its open
+segment under ``flock``; ``resume()`` publishes the segments of dead
+writers, cut to their last complete line, and never touches a live
+writer's. Both live listeners (HTTP and line socket) write through it.
 
 **Offset contract.** A directory's files are listed by
 :func:`list_files` — names starting with ``_`` or ``.`` (markers, temp
 files, staged files and open segments) are hidden, and digit runs sort
-numerically (``req_2 < req_10``). A Python-source stream's offset is
-``{"files": N}``: the first N listed files have been consumed. The
-engine checkpoints that offset, so a restart replays deterministically,
-and each file is delivered exactly once as long as writers only ever
-*append* names that sort after the existing ones. Both writers
-guarantee that: they resume after the highest existing sequence number
-(whatever the suffix) and claim each name with ``link(2)``, so two
-writers sharing a directory can never overwrite each other's files.
-Spark's own file stream source, which tracks files by name, reads the
-same directories.
+numerically (``req_2 < req_10``). The writer resumes after the highest
+existing sequence number (whatever the suffix) and claims each name
+with ``link(2)``, so names only ever *append* and two writers sharing a
+directory can never overwrite each other's files. Listener spools are
+streamed by Spark's own file source, which tracks files by name. The
+Python-source offset ``{"files": N}`` (:class:`SpoolStreamReader`: the
+first N listed files have been consumed) serves only ``httpwire``
+streams of hand-staged ``*.http`` request directories; the engine
+checkpoints it, so a restart replays deterministically.
 
 Sinks publish with a two-phase commit (:class:`SpoolWriter`): tasks
 write hidden ``._staged_`` files, the driver renames the complete set
@@ -199,71 +196,12 @@ class SpoolWriter(DataSourceArrowWriter):
                 pass
 
 
-class SpoolAppender:
-    """Appends ``{prefix}{seq:012d}{suffix}`` files to a spool
-    directory, thread-safe. ``resume()`` continues after the highest
-    existing sequence number; :meth:`publish` claims the final name with
-    ``link(2)``, which fails on an existing name — so a second writer
-    that resumed at the same sequence number moves past it instead of
-    overwriting an accepted file. The 12-digit pad never widens in
-    practice, and :func:`list_files` orders by number even if it did."""
-
-    def __init__(self, directory: str, prefix: str, suffix: str):
-        self._dir = directory
-        self._prefix, self._suffix = prefix, suffix
-        self._seq = 0
-        self._lock = threading.Lock()
-        self.appended = 0
-
-    def resume(self) -> None:
-        """Continue after the highest ``{prefix}{seq}`` of any suffix,
-        so new files sort after those of an earlier spool format."""
-        os.makedirs(self._dir, exist_ok=True)
-        lo = len(self._prefix)
-        seqs = [
-            int(head)
-            for f in os.listdir(self._dir)
-            if f.startswith(self._prefix)
-            and (head := f[lo:].partition(".")[0]).isdigit()
-        ]
-        with self._lock:
-            self._seq = max(seqs) + 1 if seqs else 0
-
-    def _claim(self, taken: int = -1) -> int:
-        with self._lock:
-            self._seq = max(self._seq, taken + 1)
-            seq = self._seq
-            self._seq += 1
-            return seq
-
-    def publish(self, src: str) -> str:
-        """Publish the complete file ``src`` as the next spool file by
-        hard-linking it (``src`` stays); returns the new path."""
-        seq = self._claim()
-        while True:
-            final = os.path.join(
-                self._dir, f"{self._prefix}{seq:012d}{self._suffix}"
-            )
-            try:
-                os.link(src, final)
-                return final
-            except FileExistsError:
-                seq = self._claim(seq)
-
-    def append(self, data: bytes) -> str:
-        """Publish ``data`` as the next spool file; returns its path."""
-        with self._lock:
-            self.appended += 1
-        tmp = os.path.join(self._dir, f".tmp_{uuid.uuid4().hex}")
-        with open(tmp, "wb") as fh:
-            fh.write(data)
-        try:
-            return self.publish(tmp)
-        finally:
-            os.unlink(tmp)
-
-
 SEGMENT = ".seg_"
+
+# How long an appended line may wait in the open segment before the
+# sealer of ``SegmentSpool.start`` publishes it: a 4 s trigger then
+# lists at most 16 files per writer.
+SEAL_INTERVAL_S = 0.25
 
 
 def _write_all(fd: int, data: bytes) -> None:
@@ -275,29 +213,95 @@ def _write_all(fd: int, data: bytes) -> None:
 class SegmentSpool:
     """Group commit into a spool directory, thread-safe.
 
-    ``append(line)`` writes one newline-terminated line to this
-    writer's open segment, a hidden ``.seg_*`` file created on first
-    use and held under ``flock``; when it returns, the line is in the
-    file. ``seal()`` publishes the segment under the next
-    ``{prefix}{seq:012d}{suffix}`` name (:class:`SpoolAppender`'s
-    ``link(2)`` claim) and closes it; the next ``append`` opens a new
-    one. ``resume()`` publishes, once each, the segments that writers
-    which died left behind, cut to their last complete line."""
+    ``append(lines)`` writes newline-terminated lines to this writer's
+    open segment, a hidden ``.seg_*`` file created on first use and
+    held under ``flock``; when it returns, the lines are in the file.
+    ``seal()`` publishes the segment under the next
+    ``{prefix}{seq:012d}{suffix}`` name and closes it; the next
+    ``append`` opens a new one. ``start(seal_interval)`` resumes, then
+    seals every ``seal_interval`` seconds until ``stop()``, which seals
+    one last time; an append after ``stop()`` (a handler thread that
+    outlived its server) is sealed at once.
+
+    ``resume()`` continues after the highest existing sequence number,
+    then publishes, once each, the segments that writers which died
+    left behind, cut to their last complete line. A name is claimed
+    with ``link(2)``, which fails on an existing name, so a second
+    writer that resumed at the same sequence number moves past it
+    instead of overwriting a published file. The 12-digit pad never
+    widens in practice, and :func:`list_files` orders by number even if
+    it did."""
 
     def __init__(self, directory: str, prefix: str, suffix: str):
         self._dir = directory
-        self._names = SpoolAppender(directory, prefix, suffix)
-        self._lock = threading.Lock()
+        self._prefix, self._suffix = prefix, suffix
+        self._seq = 0
+        # re-entrant: seal() claims the segment's name under it
+        self._lock = threading.RLock()
         self._fd: int | None = None
         self._segment = ""
         self._size = 0
-        self.appended = 0
+        self._sealer: threading.Thread | None = None
+        self._stopped = threading.Event()
+        self.appended = 0  # lines
 
     def resume(self) -> None:
-        self._names.resume()
+        """Continue after the highest ``{prefix}{seq}`` of any suffix,
+        so new files sort after those of an earlier spool format, and
+        publish the dead writers' segments."""
+        os.makedirs(self._dir, exist_ok=True)
+        lo = len(self._prefix)
+        seqs = [
+            int(head)
+            for f in os.listdir(self._dir)
+            if f.startswith(self._prefix)
+            and (head := f[lo:].partition(".")[0]).isdigit()
+        ]
+        with self._lock:
+            self._seq = max(seqs) + 1 if seqs else 0
         for f in sorted(os.listdir(self._dir)):
             if f.startswith(SEGMENT):
                 self._recover(os.path.join(self._dir, f))
+
+    def start(self, seal_interval: float) -> None:
+        self.resume()
+        self._stopped.clear()
+        self._sealer = threading.Thread(
+            target=self._seal_every, args=(seal_interval,), daemon=True
+        )
+        self._sealer.start()
+
+    def _seal_every(self, interval: float) -> None:
+        while not self._stopped.wait(interval):
+            self.seal()
+
+    def stop(self) -> None:
+        self._stopped.set()
+        if self._sealer is not None:
+            self._sealer.join()
+            self._sealer = None
+        self.seal()
+
+    def _claim(self, taken: int = -1) -> int:
+        with self._lock:
+            self._seq = max(self._seq, taken + 1)
+            seq = self._seq
+            self._seq += 1
+            return seq
+
+    def _publish(self, src: str) -> str:
+        """Hard-link the complete file ``src`` under the next free
+        name; returns the new path."""
+        seq = self._claim()
+        while True:
+            final = os.path.join(
+                self._dir, f"{self._prefix}{seq:012d}{self._suffix}"
+            )
+            try:
+                os.link(src, final)
+                return final
+            except FileExistsError:
+                seq = self._claim(seq)
 
     def _recover(self, path: str) -> None:
         try:
@@ -325,7 +329,7 @@ class SegmentSpool:
                     # the file source drops files much older than the
                     # newest it has seen (maxFileAge)
                     os.utime(path)
-                    self._names.publish(path)
+                    self._publish(path)
             os.unlink(path)
         finally:
             os.close(fd)
@@ -343,20 +347,23 @@ class SegmentSpool:
         os.rename(tmp, self._segment)
         self._fd, self._size = fd, 0
 
-    def append(self, line: bytes) -> None:
-        """Write ``line`` to the open segment; on ``OSError`` (e.g. a
-        full disk) the segment is cut back to its complete lines and
-        the error raised."""
+    def append(self, lines: bytes) -> None:
+        """Write ``lines`` (newline-terminated) to the open segment; on
+        ``OSError`` (e.g. a full disk) the segment is cut back to its
+        complete lines and the error raised."""
+        n = lines.count(b"\n")
         with self._lock:
             if self._fd is None:
                 self._open_locked()
             try:
-                _write_all(self._fd, line)
+                _write_all(self._fd, lines)
             except OSError:
                 os.ftruncate(self._fd, self._size)
                 raise
-            self._size += len(line)
-            self.appended += 1
+            self._size += len(lines)
+            self.appended += n
+        if self._stopped.is_set():
+            self.seal()
 
     def seal(self) -> str | None:
         """Publish the open segment; returns its path (None if no line
@@ -364,7 +371,7 @@ class SegmentSpool:
         with self._lock:
             if self._fd is None:
                 return None
-            final = self._names.publish(self._segment)
+            final = self._publish(self._segment)
             os.unlink(self._segment)
             os.close(self._fd)
             self._fd = None

@@ -36,7 +36,9 @@ request per file), and publishes the segments of listeners that died,
 cut to their last complete line, so an acked request is never lost to
 a process crash. A live listener's segment is held under ``flock`` and
 never published by anyone else: listeners may share a directory. The
-spool mechanics are :class:`metricproxy_spark.sources.spool.SegmentSpool`.
+spool mechanics, the periodic sealer included, are
+:class:`metricproxy_spark.sources.spool.SegmentSpool`, which the
+line-socket listener shares.
 
 One body parser
 (:func:`metricproxy_spark.sources.signalfx.parse_sfx_v2_json`, …)
@@ -63,11 +65,12 @@ from metricproxy_spark.sources.httpwire import (
     decode_body,
     spool_line,
 )
-from metricproxy_spark.sources.spool import SegmentSpool, list_files
+from metricproxy_spark.sources.spool import (
+    SEAL_INTERVAL_S,
+    SegmentSpool,
+    list_files,
+)
 
-# How long an acked request may wait in the open segment before it is
-# published: a 4 s trigger then lists at most 16 spool files.
-SEAL_INTERVAL_S = 0.25
 
 # sfx v2/v1 + collectd write_http + the OTLP/HTTP metrics binding
 # + msgpack/cbor frames (base64 text bodies: the spool is string-typed)
@@ -138,7 +141,7 @@ class _IngestHandler(BaseHTTPRequestHandler):
             self.command, self.path, headers.get("content-type", ""), text
         )
         try:
-            self.listener._accept(line)
+            self.listener._spool.append(line)
         except OSError:
             self.send_error(503, "spool write failed")
             return
@@ -168,31 +171,22 @@ class HttpIngestListener:
         self._spool = SegmentSpool(spool_dir, "req_", ".jsonl")
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
-        self._sealer: threading.Thread | None = None
-        self._stopping = threading.Event()
 
     @property
     def accepted(self) -> int:
         return self._spool.appended
 
-    def _accept(self, line: bytes) -> None:
-        self._spool.append(line)
-        if self._sealer is None:
-            # a request that finished after stop() has no sealer left
-            self._spool.seal()
+    @property
+    def url(self) -> str:
+        return f"http://{self.host}:{self.port}"
 
     def seal(self) -> None:
         """Publish every request acked so far."""
         self._spool.seal()
 
-    def _seal_periodically(self) -> None:
-        while not self._stopping.wait(SEAL_INTERVAL_S):
-            self._spool.seal()
-
     def start(self) -> tuple[str, int]:
         # A restarted listener appends after the existing spool files
         # and publishes what a dead one left unsealed.
-        self._spool.resume()
         handler = type(
             "_BoundHandler", (_IngestHandler,), {"listener": self}
         )
@@ -200,11 +194,7 @@ class HttpIngestListener:
             (self.host, self.port), handler
         )
         self.port = self._server.server_address[1]
-        self._stopping.clear()
-        self._sealer = threading.Thread(
-            target=self._seal_periodically, daemon=True
-        )
-        self._sealer.start()
+        self._spool.start(SEAL_INTERVAL_S)
         self._thread = threading.Thread(
             target=self._server.serve_forever, daemon=True
         )
@@ -217,11 +207,7 @@ class HttpIngestListener:
             self._server.server_close()
             self._thread.join(timeout=10)
             self._server = None
-        if self._sealer is not None:
-            self._stopping.set()
-            self._sealer.join()
-            self._sealer = None
-        self._spool.seal()
+        self._spool.stop()
 
     def __enter__(self) -> "HttpIngestListener":
         self.start()

@@ -5,13 +5,25 @@ real sockets — carbon over TCP [P: protocol/carbon/carbonlistener.go],
 statsd classically over UDP datagrams, influx line protocol over
 either (telegraf's socket_listener). This module is the engine's
 socket front door for LINE-shaped wire formats: accept bytes, split
-on newlines, spool verbatim to files a connector can scan, through the
-same :mod:`metricproxy_spark.sources.spool` appender the HTTP listener
-uses. The spool is ``carbonwire``-readable (plain text,
-one line per record), so the SAME byte-range-splitting connector and
-the SAME JVM-side parsers serve both the at-rest and the live path —
-live ingest evidence is therefore value-checkable against the batch
-twin's oracle.
+on newlines, and spool the lines verbatim through the same
+:class:`~metricproxy_spark.sources.spool.SegmentSpool` the HTTP
+listener uses.
+
+**Ack, seal, visibility.** Every received chunk's complete lines
+(each TCP ``recv``, each UDP datagram) are appended to the listener's
+open hidden segment at once, so they are on disk on receipt, however
+long the connection stays open. Every
+:data:`~metricproxy_spark.sources.spool.SEAL_INTERVAL_S` the segment
+is published as the next ``lines_{seq:012d}.wire`` file. A TCP
+connection's ``OK`` ack goes out after its lines are sealed into a
+published file. ``start()`` publishes the segments a dead listener left
+behind.
+
+The spool is plain text, one line per record, read by
+:func:`line_spool_stream` (Spark's text file source) or in batch by
+``spark.read.format("carbonwire")``; the SAME JVM-side parsers serve
+both, so live ingest is value-checkable against the batch twin's
+oracle.
 
 Two transports:
 
@@ -25,18 +37,20 @@ Two transports:
 
 from __future__ import annotations
 
+import os
 import socket
 import socketserver
 import threading
 
-from metricproxy_spark.sources.spool import SpoolAppender
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from metricproxy_spark.sources.spool import SEAL_INTERVAL_S, SegmentSpool
 
 
 class LineSocketListener:
     """Accept newline-delimited wire lines on a real socket and spool
-    them to ``{spool_dir}/lines_{seq:012d}.wire`` files (rotation
-    every ``lines_per_file`` lines; a TCP connection's remainder is
-    flushed before its ``OK`` ack, UDP's on ``stop``)."""
+    them to ``{spool_dir}/lines_{seq:012d}.wire`` files."""
 
     def __init__(
         self,
@@ -44,84 +58,67 @@ class LineSocketListener:
         mode: str = "tcp",
         host: str = "127.0.0.1",
         port: int = 0,
-        lines_per_file: int = 2000,
     ):
         if mode not in ("tcp", "udp"):
             raise ValueError(f"mode must be tcp or udp, got {mode!r}")
         self.spool_dir = spool_dir
         self.mode = mode
         self.host, self.port = host, port
-        self.lines_per_file = lines_per_file
-        self.accepted_lines = 0
-        self._spool = SpoolAppender(spool_dir, "lines_", ".wire")
-        self._buf: list[bytes] = []
-        self._lock = threading.Lock()
+        self._spool = SegmentSpool(spool_dir, "lines_", ".wire")
         self._server: socketserver.BaseServer | None = None
         self._thread: threading.Thread | None = None
 
-    # -- spool ---------------------------------------------------------
+    @property
+    def accepted_lines(self) -> int:
+        return self._spool.appended
+
+    @property
+    def url(self) -> str:
+        return f"{self.mode}://{self.host}:{self.port}"
+
     def _ingest(self, lines: list[bytes]) -> None:
-        with self._lock:
-            self._buf.extend(lines)
-            self.accepted_lines += len(lines)
-            if len(self._buf) >= self.lines_per_file:
-                self._flush_locked()
+        lines = [ln.rstrip(b"\r") for ln in lines]
+        lines = [ln for ln in lines if ln]
+        if lines:
+            self._spool.append(b"\n".join(lines) + b"\n")
 
-    def _flush_locked(self) -> None:
-        if self._buf:
-            self._spool.append(b"\n".join(self._buf) + b"\n")
-            self._buf = []
-
-    def flush(self) -> None:
-        with self._lock:
-            self._flush_locked()
-
-    # the pipeline seals every live listener before a drain
-    seal = flush
+    def seal(self) -> None:
+        """Publish every line received so far."""
+        self._spool.seal()
 
     # -- lifecycle -----------------------------------------------------
     def start(self) -> tuple[str, int]:
-        self._spool.resume()
         listener = self
 
         if self.mode == "tcp":
 
-            class _TcpHandler(socketserver.StreamRequestHandler):
+            class _TcpHandler(socketserver.BaseRequestHandler):
                 def handle(self) -> None:
-                    batch: list[bytes] = []
-                    for raw in self.rfile:
-                        line = raw.rstrip(b"\r\n")
-                        if line:
-                            batch.append(line)
-                        if len(batch) >= 512:
-                            listener._ingest(batch)
-                            batch = []
-                    if batch:
-                        listener._ingest(batch)
-                    # ack AFTER the flush: a client that waits for this
+                    tail = b""
+                    while chunk := self.request.recv(1 << 16):
+                        *lines, tail = (tail + chunk).split(b"\n")
+                        listener._ingest(lines)
+                    listener._ingest([tail])
+                    # ack AFTER the seal: a client that waits for this
                     # byte knows its lines are in a published spool
                     # file — the graceful-close contract (sendall alone
                     # only proves the bytes left the client's buffer)
-                    listener.flush()
-                    self.wfile.write(b"OK\n")
+                    listener.seal()
+                    self.request.sendall(b"OK\n")
 
             class _Server(socketserver.ThreadingTCPServer):
                 allow_reuse_address = True
-                # non-daemon handler threads: ThreadingMixIn only
-                # tracks (and server_close only joins) non-daemon
-                # handlers, and stop() must not flush under a live one
-                daemon_threads = False
+                # a connection may stay open for good (telegraf's
+                # socket_writer): stop() must not wait for it, and what
+                # it sends after stop() is sealed at once
+                daemon_threads = True
 
             self._server = _Server((self.host, self.port), _TcpHandler)
         else:
 
             class _UdpHandler(socketserver.BaseRequestHandler):
                 def handle(self) -> None:
-                    data = self.request[0]
-                    lines = [
-                        ln for ln in data.split(b"\n") if ln.strip(b"\r")
-                    ]
-                    listener._ingest([ln.rstrip(b"\r") for ln in lines])
+                    listener._ingest(self.request[0].split(b"\n"))
 
             class _Server(socketserver.ThreadingUDPServer):  # type: ignore[no-redef]
                 daemon_threads = True
@@ -132,6 +129,7 @@ class LineSocketListener:
                 socket.SOL_SOCKET, socket.SO_RCVBUF, 1 << 22
             )
         self.port = self._server.server_address[1]
+        self._spool.start(SEAL_INTERVAL_S)
         self._thread = threading.Thread(
             target=self._server.serve_forever, daemon=True
         )
@@ -144,7 +142,7 @@ class LineSocketListener:
             self._server.server_close()
             self._thread.join(timeout=10)
             self._server = None
-        self.flush()
+        self._spool.stop()
 
     def __enter__(self) -> "LineSocketListener":
         self.start()
@@ -152,6 +150,24 @@ class LineSocketListener:
 
     def __exit__(self, *_exc) -> None:
         self.stop()
+
+
+def line_spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
+    """A line spool as a stream of ``(line, src_file)`` rows through
+    Spark's text file source, with ``carbonwire``'s rules: split on
+    ``\\n`` only (a ``\\r`` stays in the line), drop empty lines, and
+    ``src_file`` is the file's base name."""
+    # the file source refuses a missing directory
+    os.makedirs(spool_dir, exist_ok=True)
+    return (
+        spark.readStream.option("lineSep", "\n")
+        .text(spool_dir)
+        .where(F.col("value") != "")
+        .select(
+            F.col("value").alias("line"),
+            F.col("_metadata.file_name").alias("src_file"),
+        )
+    )
 
 
 def send_lines_tcp(

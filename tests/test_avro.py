@@ -116,58 +116,6 @@ class TestSparkCycle:
         assert [tuple(r) for r in back.collect()] == [(9, "z", 9.5, False)]
 
 
-class TestStreaming:
-    def test_spool_streams_exactly_once(self, spark, tmp_path):
-        """availableNow over an avro spool: every record exactly once,
-        offset = first-N-files; a second batch of files appended after
-        the checkpoint is picked up on the next run, earlier files are
-        NOT re-read."""
-        import os
-
-        register_avrowire(spark)
-        spool = str(tmp_path / "spool")
-        os.makedirs(spool)
-        write_avro_file(
-            os.path.join(spool, "f_000.avro"), _rows(100), _SCHEMA
-        )
-
-        sink = str(tmp_path / "sink")
-
-        def drain():
-            sdf = (
-                spark.readStream.format("avrowire")
-                .option("path", spool)
-                .load()
-            )
-            q = (
-                sdf.writeStream.format("parquet")
-                .outputMode("append")
-                .option("path", sink)
-                .option(
-                    "checkpointLocation", str(tmp_path / "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return spark.read.parquet(sink)
-
-        out1 = drain()
-        assert out1.count() == 100
-        write_avro_file(
-            os.path.join(spool, "f_001.avro"),
-            [(1000 + i, "x", 0.5, True) for i in range(7)],
-            _SCHEMA,
-        )
-        out2 = drain()
-        # exactly once across the restart: 100 original + 7 new,
-        # earlier files NOT re-read
-        assert out2.count() == 107
-        assert (
-            len([r.a for r in out2.collect() if r.a >= 1000]) == 7
-        )
-
-
 class TestForeignHeaderShapes:
     def test_negative_metadata_map_count(self, tmp_path):
         """The Avro spec allows map blocks with a NEGATIVE count, in

@@ -1,5 +1,5 @@
 """CLI front door (python -m metricproxy_spark): list + run + explain
-work in a fresh process."""
+work in a fresh process; serve's listener banner is checked in process."""
 
 from __future__ import annotations
 
@@ -173,3 +173,54 @@ def test_serve_continuous_live_http_post_then_sigint(tmp_path):
     finally:
         if proc.poll() is None:
             proc.kill()
+
+
+def test_serve_banner_names_each_listeners_scheme(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """``serve`` announces every live listener with its own scheme: a
+    statsd UDP socket, an influx TCP socket and the HTTP door."""
+    import json
+    import re
+
+    from metricproxy_spark import cli, session
+
+    monkeypatch.setattr(session, "get_spark", lambda **_kw: spark)
+    cfg = {
+        "ListenFrom": [
+            {
+                "Type": "statsd",
+                "Source": str(tmp_path / "statsd"),
+                "ListenAddr": "127.0.0.1:0",
+                "Protocol": "udp",
+            },
+            {
+                "Type": "influx",
+                "Source": str(tmp_path / "influx"),
+                "ListenAddr": "127.0.0.1:0",
+            },
+            {
+                "Type": "signalfx",
+                "Source": str(tmp_path / "sfx"),
+                "ListenAddr": "127.0.0.1:0",
+            },
+        ],
+        "ForwardTo": [{"Type": "csv", "Path": str(tmp_path / "csv")}],
+    }
+    cfg_path = tmp_path / "cfg.json"
+    cfg_path.write_text(json.dumps(cfg))
+    ckpt = str(tmp_path / "ckpt")
+    try:
+        assert cli.main(["serve", "--config", str(cfg_path), "--checkpoint", ckpt, "--drain"]) == 0
+    finally:
+        spark.sparkContext.setLogLevel("WARN")  # serve quiets the shared session
+    banner = [
+        re.sub(r":\d+$", ":N", line)
+        for line in capsys.readouterr().out.splitlines()
+        if line.startswith("listening on ")
+    ]
+    assert banner == [
+        "listening on udp://127.0.0.1:N",
+        "listening on tcp://127.0.0.1:N",
+        "listening on http://127.0.0.1:N",
+    ]

@@ -188,10 +188,16 @@ def test_statsd_live_listener_from_config(spark, tmp_path):
         deadline = time.time() + 10
         while lis.accepted_lines < 4 and time.time() < deadline:
             time.sleep(0.02)
-        lis.flush()
-        stats = pipe.run_available_now(str(tmp_path / "ckpt"))
+        lis.seal()
+        (q,) = pipe.start(str(tmp_path / "ckpt"))
+        q.awaitTermination()
+        stats = pipe.drain_observed_metrics(q)
         assert stats["datapoints_in"] == 4
         assert count_rows_in_dir(spark, str(tmp_path / "csv_out"), "csv") == 4
+        # Spark's own file source, not a Python stream reader
+        (src,) = q.lastProgress["sources"]
+        assert src["description"].startswith("FileStreamSource")
+        assert lis.url == f"udp://127.0.0.1:{lis.port}"
     finally:
         pipe.close_listeners()
 
@@ -218,6 +224,10 @@ def test_influx_listener_from_config(spark, tmp_path):
         ],
     }
     pipe = build_pipeline(spark, cfg)
-    stats = pipe.run_available_now(str(tmp_path / "ckpt"))
+    (q,) = pipe.start(str(tmp_path / "ckpt"))
+    q.awaitTermination()
+    stats = pipe.drain_observed_metrics(q)
     assert stats["datapoints_in"] == 2
     assert count_rows_in_dir(spark, str(tmp_path / "csv_out"), "csv") == 2
+    (src,) = q.lastProgress["sources"]
+    assert src["description"].startswith("FileStreamSource")

@@ -1,6 +1,7 @@
 """Custom Python DataSource (carbonwire) — connector contract tests:
-planner-visible partitioning in batch, exactly-once file pickup in
-streaming."""
+planner-visible partitioning in batch; and the line spool stream
+(Spark's text source) — exactly-once file pickup, same rows as the
+connector."""
 
 from __future__ import annotations
 
@@ -29,7 +30,10 @@ def test_batch_read_partition_per_file(spark):
 
 
 def test_stream_picks_up_new_files_exactly_once(spark):
-    register_carbonwire(spark)
+    """A line spool streams through ``line_spool_stream`` (Spark's text
+    source); a restarted query reads only the file that arrived since."""
+    from metricproxy_spark.streaming.socketlistener import line_spool_stream
+
     d = tempfile.mkdtemp(prefix="mps_pyds_src_")
     ckpt = tempfile.mkdtemp(prefix="mps_pyds_ckpt_")
     out = tempfile.mkdtemp(prefix="mps_pyds_out_")
@@ -38,9 +42,7 @@ def test_stream_picks_up_new_files_exactly_once(spark):
 
     def drain() -> int:
         q = (
-            spark.readStream.format("carbonwire")
-            .option("path", d)
-            .load()
+            line_spool_stream(spark, d)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -55,6 +57,52 @@ def test_stream_picks_up_new_files_exactly_once(spark):
     # offset and appends ONLY the new file's rows
     _write_wire(d, "02.txt", ["c 3 1700000002", "d 4 1700000003"])
     assert drain() == 4
+    assert sorted(
+        (r.line, r.src_file) for r in spark.read.parquet(out).collect()
+    ) == [
+        ("a 1 1700000000", "00.txt"),
+        ("b 2 1700000001", "01.txt"),
+        ("c 3 1700000002", "02.txt"),
+        ("d 4 1700000003", "02.txt"),
+    ]
+
+
+def test_line_spool_stream_reads_like_carbonwire(spark, tmp_path):
+    """On a spool with CRLF, blank lines, invalid UTF-8, a missing final
+    newline and hidden ``.seg_``/``_`` files, ``line_spool_stream`` rows
+    equal ``spark.read.format("carbonwire")`` rows."""
+    from metricproxy_spark.streaming.socketlistener import line_spool_stream
+
+    register_carbonwire(spark)
+    d = tmp_path / "spool"
+    d.mkdir()
+    (d / "lines_000000000000.wire").write_bytes(
+        b"a 1 1\r\n\r\n\nb 2 2\n\xff\xfe bad \xc3\n"
+    )
+    (d / "lines_000000000001.wire").write_bytes(
+        "\n".join(f"m.{i} {i} {i}" for i in range(20_000)).encode()
+        + "\nh\u00e9llo \u65e5\u672c\r\nlast no newline".encode()
+    )
+    (d / "lines_000000000002.wire").write_bytes(b"")
+    (d / ".seg_open").write_bytes(b"hidden 1 1\n")
+    (d / "_SUCCESS").write_bytes(b"hidden 2 2\n")
+
+    q = (
+        line_spool_stream(spark, str(d))
+        .writeStream.format("memory")
+        .queryName("line_spool_parity")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    try:
+        streamed = spark.table("line_spool_parity").collect()
+    finally:
+        spark.catalog.dropTempView("line_spool_parity")
+    batch = spark.read.format("carbonwire").option("path", str(d)).load()
+    key = lambda r: (r.line, r.src_file)  # noqa: E731
+    assert sorted(map(key, streamed)) == sorted(map(key, batch.collect()))
+    assert len(streamed) == 20_006
 
 
 def test_byte_range_chunking_no_loss_no_dup(spark):

@@ -1,10 +1,12 @@
-"""LineSocketListener: TCP losslessness, UDP datagram mode, spool
-rotation/restart discipline, and connector round-trip."""
+"""LineSocketListener: TCP losslessness, UDP datagram mode, lines on
+disk at receipt and published within a seal interval, restart and
+recovery discipline, and connector round-trip."""
 
 from __future__ import annotations
 
 import collections
 import os
+import re
 import socket
 import tempfile
 import time
@@ -27,12 +29,13 @@ class TestTcp:
     def test_lossless_multiset_and_rotation(self):
         payload = [f"m.{i}:1|c" for i in range(5000)]
         spool = tempfile.mkdtemp(prefix="mps_sl_")
-        with LineSocketListener(spool, mode="tcp", lines_per_file=2000) as l:
+        with LineSocketListener(spool, mode="tcp") as l:
             send_lines_tcp(l.host, l.port, payload, connections=7)
             assert l.accepted_lines == 5000
         got = _spool_lines(spool)
         assert collections.Counter(got) == collections.Counter(payload)
-        # 5000 lines / 2000 per file => at least 3 files, all atomic
+        # each of the 7 connections is sealed before its ack => at
+        # least 3 files, all atomic
         names = sorted(os.listdir(spool))
         assert len(names) >= 3
         assert all(n.startswith("lines_") and n.endswith(".wire") for n in names)
@@ -87,7 +90,7 @@ class TestConnectorRoundTrip:
 
         payload = [f"w.{i} {i}.5 1700000{i:03d}" for i in range(300)]
         spool = tempfile.mkdtemp(prefix="mps_sl_")
-        with LineSocketListener(spool, mode="tcp", lines_per_file=100) as l:
+        with LineSocketListener(spool, mode="tcp") as l:
             send_lines_tcp(l.host, l.port, payload, connections=3)
         register_carbonwire(spark)
         back = (
@@ -113,13 +116,11 @@ def test_two_listener_generations_never_clobber():
     acknowledged by one is never overwritten by the other (the socket
     twin of the HTTP listener test)."""
     spool = tempfile.mkdtemp(prefix="mps_sl_")
-    with LineSocketListener(spool, lines_per_file=1) as a:
+    with LineSocketListener(spool) as a:
         send_lines_tcp(a.host, a.port, ["a 1 1"], connections=1)
-    # Both B and C resume seq = 1 from the same on-disk max; with one
-    # line per file each flushes before it acknowledges.
-    with LineSocketListener(spool, lines_per_file=1) as b, LineSocketListener(
-        spool, lines_per_file=1
-    ) as c:
+    # Both B and C resume seq = 1 from the same on-disk max; each
+    # seals its segment before it acknowledges.
+    with LineSocketListener(spool) as b, LineSocketListener(spool) as c:
         send_lines_tcp(b.host, b.port, ["b 2 2"], connections=1)
         send_lines_tcp(c.host, c.port, ["c 3 3"], connections=1)
     assert len(os.listdir(spool)) == 3, os.listdir(spool)
@@ -128,12 +129,12 @@ def test_two_listener_generations_never_clobber():
 
 def test_ack_means_spooled():
     """``OK`` is sent only once the connection's lines are in a listed
-    spool file — not while they wait in the rotation buffer for the
-    next rotation or ``stop()``."""
+    spool file — not while they wait in the open segment for the next
+    seal or ``stop()``."""
     from metricproxy_spark.sources.spool import list_files
 
     spool = tempfile.mkdtemp(prefix="mps_sl_")
-    with LineSocketListener(spool, mode="tcp", lines_per_file=2000) as l:
+    with LineSocketListener(spool, mode="tcp") as l:
         with socket.create_connection((l.host, l.port), timeout=10) as s:
             s.sendall(b"a 1 1\nb 2 2\nc 3 3\n")
             s.shutdown(socket.SHUT_WR)
@@ -143,3 +144,58 @@ def test_ack_means_spooled():
             with open(f) as fh:
                 spooled += fh.read().splitlines()
         assert spooled == ["a 1 1", "b 2 2", "c 3 3"]
+
+
+def test_quiet_and_long_lived_senders_become_visible(tmp_path):
+    """A few UDP lines, and a few lines on a TCP connection that stays
+    open, are published by the listener's own timer: neither waits for
+    more traffic, a ``seal()``/``stop()`` or the connection's close."""
+    from metricproxy_spark.sources.spool import list_files
+
+    def published(spool: str) -> list[str]:
+        out = []
+        for f in list_files(spool):
+            assert re.fullmatch(r"lines_\d{12}\.wire", os.path.basename(f))
+            with open(f) as fh:
+                out += fh.read().splitlines()
+        return out
+
+    udp_spool, tcp_spool = str(tmp_path / "udp"), str(tmp_path / "tcp")
+    udp_lines = ["u.a:1|c", "u.b:2|g", "u.c:3|ms"]
+    tcp_lines = ["t.a 1 1", "t.b 2 2", "t.c 3 3"]
+    with (
+        LineSocketListener(udp_spool, mode="udp") as u,
+        LineSocketListener(tcp_spool, mode="tcp") as t,
+        socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as us,
+        socket.create_connection((t.host, t.port), timeout=10) as ts,
+    ):
+        for ln in udp_lines:
+            us.sendto(f"{ln}\n".encode(), (u.host, u.port))
+        ts.sendall("".join(f"{ln}\n" for ln in tcp_lines).encode())
+        deadline = time.time() + 2
+        while time.time() < deadline and (
+            len(published(udp_spool)) < 3 or len(published(tcp_spool)) < 3
+        ):
+            time.sleep(0.02)
+        assert sorted(published(udp_spool)) == udp_lines
+        assert published(tcp_spool) == tcp_lines
+
+
+def test_restart_publishes_a_dead_listeners_segment_once(tmp_path):
+    """A listener that died left its received lines in a ``.seg_*``
+    segment; the next listener on that spool publishes them, cut to the
+    last complete line, exactly once across further restarts."""
+    from metricproxy_spark.sources.spool import list_files
+
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    (spool / ".seg_dead").write_bytes(b"a 1 1\nb 2 2\nc 3")
+    for _ in range(2):
+        with LineSocketListener(str(spool)) as l:
+            send_lines_tcp(l.host, l.port, ["d 4 4"], connections=1)
+    assert not [n for n in os.listdir(spool) if n.startswith(".")]
+    assert len(list_files(str(spool))) == 3
+    assert collections.Counter(_spool_lines(str(spool))) == collections.Counter(
+        ["a 1 1", "b 2 2", "d 4 4", "d 4 4"]
+    )
+    assert _spool_lines(str(spool))[:2] == ["a 1 1", "b 2 2"]
