@@ -14,15 +14,19 @@ streaming source directory (the file source is the testable stand-in —
 a Kafka topic drops in the same slot in production). Every listener's
 output is normalized to the canonical datapoint schema (§2.2) before
 the fan-out, exactly the reference's single in-memory datapoint model.
-All ForwardTo entries receive all datapoints (demux F1); BufferSize
-maps to load-shed emulation. DrainingThreads is accepted and ignored:
-a forwarder writes with one task per partition of the micro-batch, so
-its write parallelism is the source's split count.
+All ForwardTo entries receive all datapoints (demux F1); nothing is
+shed. ``BufferSize`` and ``DrainingThreads`` load but have no effect,
+and :func:`build_pipeline` warns once per key present. The spool is
+the buffer: a datapoint is acked and on disk before the pipeline
+reads it, so shedding would discard acked data. A forwarder writes
+with one task per partition of the micro-batch, so its write
+parallelism is the source's split count.
 """
 
 from __future__ import annotations
 
 import json
+import warnings
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -207,13 +211,13 @@ def build_pipeline(
     for s in streams[1:]:
         source = source.unionByName(s)
     sinks = [_build_sink(s) for s in cfg["ForwardTo"]]
-    max_rows = None
-    for fwd in cfg["ForwardTo"]:
-        if "BufferSize" in fwd:
-            # smallest configured buffer bounds the shared batch (F2)
-            b = int(fwd["BufferSize"])
-            max_rows = b if max_rows is None else min(max_rows, b)
-    pipe = ProxyPipeline(source=source, sinks=sinks, max_batch_rows=max_rows)
+    for key, reason in (
+        ("BufferSize", "the spool is the buffer; nothing accepted is dropped"),
+        ("DrainingThreads", "write parallelism is the source's split count"),
+    ):
+        if any(key in fwd for fwd in cfg["ForwardTo"]):
+            warnings.warn(f"ForwardTo {key} has no effect: {reason}", stacklevel=2)
+    pipe = ProxyPipeline(source=source, sinks=sinks)
     # Live network endpoints: a signalfx listener with a ListenAddr
     # gets a REAL HTTP server spooling into its Source dir. The caller
     # owns the lifecycle via pipe.live_listeners (stop() when done).

@@ -295,24 +295,21 @@ def stream_fanout_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "events", os.path.join(wd, "src")
     )
     stream = read_stream_table(spark, src)
-
-    def normalize(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.concat(F.lit("events."), F.col("event_type")).alias("metric"),
-            F.col("value"),
-            F.col("ts"),
-            F.create_map(
-                F.lit("user_id"), F.col("user_id").cast("string")
-            ).alias("dimensions"),
-        )
+    normalized = stream.select(
+        F.concat(F.lit("events."), F.col("event_type")).alias("metric"),
+        F.col("value"),
+        F.col("ts"),
+        F.create_map(
+            F.lit("user_id"), F.col("user_id").cast("string")
+        ).alias("dimensions"),
+    )
 
     sink_dirs = {
         name: os.path.join(wd, f"sink_{name}")
         for name in ("carbon", "csv", "signalfx")
     }
     pipe = ProxyPipeline(
-        source=stream,
-        transform=normalize,
+        source=normalized,
         sinks=[
             SinkSpec("carbon", carbon_sink(sink_dirs["carbon"], meta_col=None)),
             SinkSpec("csv", csv_sink(sink_dirs["csv"])),

@@ -11,7 +11,9 @@ Structured Streaming:
 
 - file/rate/socket ``readStream`` replaces listeners (``source``)
 - ``observe`` + ``StreamingQueryProgress`` replaces atomic counters
-- ``foreachBatch`` with a persisted batch replaces the demultiplexer
+- ``foreachBatch`` replaces the demultiplexer: one job writes every
+  line forwarder of a batch (a batch is persisted only for generic
+  writers)
 - per-sink checkpointed queries replace per-forwarder buffers
 - watermarks/windows/stateful ops provide the T1–T6 surface the
   north star adds on top of the proxy semantics.

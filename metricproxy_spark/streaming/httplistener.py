@@ -47,7 +47,9 @@ serves socket bytes, staged files, and live HTTP identically.
 Responses mirror the reference: ``"OK"`` for datapoint POSTs, plain
 ``OK`` for ``/healthz`` (S7), 404 otherwise. A POST must carry a
 numeric ``Content-Length``: 411 when it is missing (chunked uploads
-are not accepted), 400 when it is malformed, and nothing is spooled.
+are not accepted), 400 when it is malformed, 413 when it declares more
+than :data:`MAX_BODY_BYTES` (refused before the body is read, so one
+client cannot fill the driver's memory), and nothing is spooled.
 """
 
 from __future__ import annotations
@@ -88,10 +90,15 @@ INGEST_PATHS = (
 )
 
 
+MAX_BODY_BYTES = 64 << 20  # the largest body read into driver memory
+
+
 def _read_body(handler: BaseHTTPRequestHandler) -> bytes | None:
     """The request body as its ``Content-Length`` header declares it.
-    Answers 411 (header missing) or 400 (not a non-negative integer)
-    and returns None, so a bad request is never read or acted on."""
+    Answers 411 (header missing), 400 (not a non-negative integer) or
+    413 (over :data:`MAX_BODY_BYTES`) and returns None, so a bad request
+    is never read or acted on. Only the declared length is bounded, not
+    what a gzip body inflates to."""
     clen = handler.headers.get("Content-Length")
     if clen is None:
         handler.send_error(411)
@@ -99,6 +106,9 @@ def _read_body(handler: BaseHTTPRequestHandler) -> bytes | None:
     clen = clen.strip()
     if not (clen.isascii() and clen.isdigit()):
         handler.send_error(400, "malformed Content-Length")
+        return None
+    if int(clen) > MAX_BODY_BYTES:
+        handler.send_error(413, f"body over {MAX_BODY_BYTES} bytes")
         return None
     return handler.rfile.read(int(clen))
 

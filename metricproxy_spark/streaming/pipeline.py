@@ -1,4 +1,4 @@
-"""The proxy pipeline: demultiplex, buffer, count, drain (F1–F7).
+"""The proxy pipeline: demultiplex, count, drain (F1–F7).
 
 Reference shape [P: protocol/demultiplexer/demultiplexer.go —
 Demultiplexer.AddDatapoints; dp/dpbuffered/bufferedforwarder.go —
@@ -12,14 +12,15 @@ Spark mapping implemented here:
 - **Fan-out (F1)**: one ``foreachBatch`` hands the micro-batch to
   every sink — one source scan per batch regardless of sink count,
   exactly the demultiplexer's "loop over sinks" with the slice shared.
-  The line forwarders (:class:`~metricproxy_spark.streaming.sinks.LineSink`)
-  are written together by one
-  :func:`~metricproxy_spark.streaming.sinks.write_lines` job — a JVM
-  text write partitioned by sink, whose observed row count feeds the
-  counters — so a batch served only by them is ONE Spark job: no
-  persist, no count job, no Python worker. Generic writers, or load shedding,
-  need the slice more than once; then the batch is persisted once,
-  counted, and every sink reads the cache.
+  :meth:`ProxyPipeline._deliver` is the one place a batch reaches its
+  sinks. The line forwarders
+  (:class:`~metricproxy_spark.streaming.sinks.LineSink`) are written
+  together by one :func:`~metricproxy_spark.streaming.sinks.write_lines`
+  job — a JVM text write partitioned by sink, whose observed row count
+  is the batch's count — so a batch served only by them is ONE Spark
+  job: no persist, no count job, no Python worker. A generic writer
+  reads the slice again; then the batch is persisted once, every sink
+  reads the cache, and the cache is released before the next batch.
 - **Counters (A1/F7)**: per-batch, per-sink row counts accumulated
   driver-side (``foreachBatch`` runs on the driver) — the analog of the
   proxy's atomic ``TotalDatapoints`` counters, readable at any time in
@@ -27,18 +28,20 @@ Spark mapping implemented here:
   batch as an ``observe`` metric, folded by a ``StreamingQueryListener``
   (every progress event, however long the run) into
   ``observed_datapoints``.
-- **Load shedding (F2)**: the reference *drops* datapoints past
-  ``BufferSize`` rather than block the listener. Spark's backpressure
-  is pull-based (a slow sink slows the trigger, nothing is lost), so
-  shedding is opt-in emulation: ``max_batch_rows`` caps each
-  micro-batch with ``limit`` and counts the dropped remainder —
-  semantics documented as *approximate* (drop choice is arbitrary,
-  like the reference's "whatever overflowed").
+- **No load shedding (F2)**: the reference *drops* datapoints past
+  ``BufferSize`` so that a slow forwarder never blocks its listener.
+  Here the spool already decouples the listener from the pipeline, and
+  Spark's backpressure is pull-based (a slow sink slows the trigger),
+  so the pipeline delivers every row the source hands it: dropping
+  would only discard acked, durable datapoints. Overload is for the
+  front door to refuse, and a bound on intake per trigger belongs to
+  the source (e.g. the file source's ``maxFilesPerTrigger``).
 - **Per-sink isolation (F5)**: ``independent=True`` starts one
   streaming query per sink, each with its own checkpoint subdir and
-  trigger — a slow sink then only delays itself (the buffered-forwarder
-  property). The default shared-batch mode matches the reference's
-  synchronous demux instead.
+  trigger, each delivering through the same ``_deliver`` — a slow sink
+  then only delays itself (the buffered-forwarder property). The
+  default shared-batch mode matches the reference's synchronous demux
+  instead.
 - **Graceful drain (F6)**: ``run_available_now`` = flush the live
   listeners' buffers (``seal``), process everything, then stop — the
   SIGTERM drain path.
@@ -49,6 +52,7 @@ from __future__ import annotations
 import os
 import threading
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -126,9 +130,7 @@ class _ObservedDatapoints(StreamingQueryListener):
 @dataclass
 class ProxyPipeline:
     source: DataFrame
-    transform: Callable[[DataFrame], DataFrame] | None = None
     sinks: list[SinkSpec] = field(default_factory=list)
-    max_batch_rows: int | None = None
     stats: dict[str, int] = field(default_factory=dict)
     # live network endpoints feeding this pipeline's sources (e.g. the
     # HTTP ingest listener a config's ListenAddr starts); owned by the
@@ -179,43 +181,34 @@ class ProxyPipeline:
                 self._observer = None
         return dict(self.stats)
 
-    def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        df = self.transform(batch) if self.transform else batch
-        lines = [s for s in self.sinks if s.lines is not None]
-        writers = [s for s in self.sinks if s.lines is None]
-        if lines and not writers and self.max_batch_rows is None:
-            # Every sink is a line forwarder: one job writes them all and
-            # its row count is the batch's.
-            n = write_lines(df, [s.lines for s in lines])
-            self._count("datapoints_in", n)
-            for sink in lines:
-                self._count(f"sink.{sink.name}.datapoints", n)
-            return
-        # Persist once, serve all sinks: the demultiplexer's shared
-        # slice. Count via the persisted data (one job; sinks reuse).
-        # Capture the persisted handle BEFORE the limit() shedding path
-        # reassigns df, and unpersist that same handle — otherwise every
-        # transformed micro-batch leaks its cached blocks for the life
-        # of the stream (cache debt that eventually evicts/OOMs).
-        persisted = df.persist()
+    def _deliver(
+        self, sinks: list[SinkSpec], batch: DataFrame, batch_id: int
+    ) -> int:
+        """Hand ``batch`` to every sink of ``sinks``; returns its row
+        count, which each sink's counter gets.
+
+        The line sinks are written by one :func:`write_lines` job whose
+        observed row count is the batch's. A generic writer reads the
+        batch again, so then the batch is persisted first (and counted
+        by a job of its own if no line sink counts it), and unpersisted
+        when every sink has it."""
+        lines = [s.lines for s in sinks if s.lines is not None]
+        writers = [s for s in sinks if s.lines is None]
+        if writers:
+            batch = batch.persist()
         try:
-            n = persisted.count()
-            self._count("datapoints_in", n)
-            if self.max_batch_rows is not None and n > self.max_batch_rows:
-                # F2 emulation: shed everything past the cap, count it —
-                # the buffered forwarder's drop-on-overflow.
-                self._count("datapoints_dropped", n - self.max_batch_rows)
-                df = persisted.limit(self.max_batch_rows)
-                n = self.max_batch_rows
-            if lines:
-                write_lines(df, [s.lines for s in lines])
-                for sink in lines:
-                    self._count(f"sink.{sink.name}.datapoints", n)
+            n = write_lines(batch, lines) if lines else batch.count()
             for sink in writers:
-                sink.writer(df, batch_id)
-                self._count(f"sink.{sink.name}.datapoints", n)
+                sink.writer(batch, batch_id)
         finally:
-            persisted.unpersist()
+            if writers:
+                batch.unpersist()
+        for sink in sinks:
+            self._count(f"sink.{sink.name}.datapoints", n)
+        return n
+
+    def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        self._count("datapoints_in", self._deliver(self.sinks, batch, batch_id))
 
     def start(
         self,
@@ -232,52 +225,31 @@ class ProxyPipeline:
         ``processing_time`` trigger (default "5 seconds") — the daemon
         mode `serve` uses."""
 
-        def with_trigger(writer):
-            if available_now:
-                return writer.trigger(availableNow=True)
-            return writer.trigger(
-                processingTime=processing_time or "5 seconds"
+        def start_query(source: DataFrame, batch_fn, name: str) -> StreamingQuery:
+            writer = source.writeStream.foreachBatch(batch_fn).option(
+                "checkpointLocation", os.path.join(checkpoint_dir, name)
             )
+            if available_now:
+                writer = writer.trigger(availableNow=True)
+            else:
+                writer = writer.trigger(
+                    processingTime=processing_time or "5 seconds"
+                )
+            return writer.start()
 
         if not independent:
             if self._observer is None:
                 self._observer = _ObservedDatapoints()
                 self.source.sparkSession.streams.addListener(self._observer)
-            q = (
-                with_trigger(
-                    self._observed_source().writeStream.foreachBatch(
-                        self._process_batch
-                    ).option(
-                        "checkpointLocation",
-                        os.path.join(checkpoint_dir, "demux"),
-                    )
-                )
-                .start()
-            )
+            q = start_query(self._observed_source(), self._process_batch, "demux")
             self._observing.add(q.id)
             return [q]
-        queries = []
-        for sink in self.sinks:
-            def per_sink(batch: DataFrame, batch_id: int, _s=sink) -> None:
-                df = self.transform(batch) if self.transform else batch
-                if _s.lines is not None:
-                    n = write_lines(df, [_s.lines])
-                else:
-                    _s.writer(df, batch_id)
-                    n = df.count()  # a second scan of the source
-                self._count(f"sink.{_s.name}.datapoints", n)
-
-            q = (
-                with_trigger(
-                    self.source.writeStream.foreachBatch(per_sink).option(
-                        "checkpointLocation",
-                        os.path.join(checkpoint_dir, f"sink_{sink.name}"),
-                    )
-                )
-                .start()
+        return [
+            start_query(
+                self.source, partial(self._deliver, [sink]), f"sink_{sink.name}"
             )
-            queries.append(q)
-        return queries
+            for sink in self.sinks
+        ]
 
     def run_available_now(self, checkpoint_dir: str, independent: bool = False) -> dict[str, int]:
         """Seal the live listeners, drain everything now available and

@@ -18,7 +18,9 @@ import pytest
 from metricproxy_spark.sources.httpwire import register_httpwire
 from metricproxy_spark.sources.spool import list_files
 from metricproxy_spark.streaming.httplistener import (
+    MAX_BODY_BYTES,
     HttpIngestListener,
+    RemoteReadServer,
     http_spool_stream,
 )
 
@@ -241,6 +243,25 @@ def test_bad_content_length_is_refused_and_not_spooled(
         assert resp.split(b" ", 2)[1:2] == [status], resp[:200]
         assert lis.accepted == 0
     assert list(spool.iterdir()) == []
+
+
+def test_oversized_body_is_refused_before_it_is_read(tmp_path):
+    """A Content-Length past MAX_BODY_BYTES gets a 413 from the request
+    head alone: the client sends no body, the server reads none, and
+    nothing is spooled. The remote-read server shares the check."""
+    head = b"POST %s HTTP/1.1\r\nHost: x\r\nContent-Length: %d\r\n\r\n"
+    spool = tmp_path / "spool"
+    with HttpIngestListener(str(spool)) as lis:
+        resp = _raw_post(lis.host, lis.port, head % (b"/v2/datapoint", 1 << 40))
+        assert resp.split(b" ", 2)[1:2] == [b"413"], resp[:200]
+        assert lis.accepted == 0
+    assert list(spool.iterdir()) == []
+    with RemoteReadServer([]) as srv:
+        resp = _raw_post(
+            srv.host, srv.port, head % (b"/api/v1/read", MAX_BODY_BYTES + 1)
+        )
+        assert resp.split(b" ", 2)[1:2] == [b"413"], resp[:200]
+        assert srv.served == 0
 
 
 def test_undecodable_gzip_is_refused_and_not_spooled(tmp_path):

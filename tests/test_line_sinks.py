@@ -288,6 +288,56 @@ def test_independent_line_sinks_count_without_a_second_scan(spark, tmp_path):
         assert len([ln for ln in _lines(str(tmp_path / d)) if ln]) == 300
 
 
+def test_line_sink_beside_a_generic_writer_needs_no_count_job(spark, tmp_path):
+    """With a line forwarder and a generic writer on one pipeline, the
+    line write's row count is the batch's: the pipeline runs that one
+    write job beside the writer's own jobs (no count job), both sinks
+    get the same count, and the batch's cache is released."""
+    from metricproxy_spark.streaming.pipeline import ProxyPipeline, SinkSpec
+    from metricproxy_spark.streaming.source import read_stream_table
+
+    src = str(tmp_path / "src")
+    spark.range(0, 300, numPartitions=1).select(
+        F.concat(F.lit("m."), (F.col("id") % 3).cast("string")).alias("metric"),
+        F.col("id").cast("double").alias("value"),
+        F.timestamp_seconds(F.col("id") + 1700000000).alias("ts"),
+    ).write.parquet(src)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    seen: list[float] = []
+    writer_jobs: set[int] = set()
+
+    def collecting(df, batch_id):
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        before = set(tracker.getJobIdsForGroup(group))
+        seen.extend(r.value for r in df.select("value").collect())
+        writer_jobs.update(set(tracker.getJobIdsForGroup(group)) - before)
+
+    pipe = ProxyPipeline(
+        source=read_stream_table(spark, src),
+        sinks=[
+            SinkSpec("csv", csv_sink(str(tmp_path / "csv"))),
+            SinkSpec("collect", collecting),
+        ],
+    )
+    jsc = sc._jsc
+    cached_before = jsc.getPersistentRDDs().size()
+    (query,) = pipe.start(str(tmp_path / "ckpt"))
+    query.awaitTermination()
+    batches = [p for p in query.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 1
+    jobs = tracker.getJobIdsForGroup(str(query.runId))
+    assert writer_jobs and len(jobs) == 1 + len(writer_jobs), (jobs, writer_jobs)
+    assert jsc.getPersistentRDDs().size() == cached_before
+    assert sorted(seen) == [float(i) for i in range(300)]
+    assert pipe.stats == {
+        "datapoints_in": 300,
+        "sink.csv.datapoints": 300,
+        "sink.collect.datapoints": 300,
+    }
+    assert len([ln for ln in _lines(str(tmp_path / "csv")) if ln]) == 300
+
+
 def test_split_output_files_keep_every_line(spark, tmp_path):
     """With maxRecordsPerFile a task writes several files per sink; each
     keeps its own name."""

@@ -73,7 +73,10 @@ def test_carbon_to_csv_and_carbon_pipeline(spark, tmp_path):
     assert "servers.api.cpu" in joined and "dc -> us" in joined
 
 
-def test_buffer_size_sheds(spark, tmp_path):
+def test_buffer_size_warns_and_drops_nothing(spark, tmp_path):
+    """BufferSize and DrainingThreads load but have no effect: every line
+    is delivered, nothing is counted as dropped, and build_pipeline warns
+    once per key, naming it."""
     src = str(tmp_path / "in")
     _write_carbon_lines(
         src, [f"m{i} {i} 170000000{i % 10}" for i in range(50)]
@@ -85,14 +88,28 @@ def test_buffer_size_sheds(spark, tmp_path):
                 "Type": "csv",
                 "Path": str(tmp_path / "out"),
                 "BufferSize": 20,
-            }
+                "DrainingThreads": 4,
+            },
+            {
+                "Type": "carbon",
+                "Path": str(tmp_path / "carbon_out"),
+                "BufferSize": 10,
+            },
         ],
     }
-    pipe = build_pipeline(spark, cfg)
+    with pytest.warns(UserWarning) as warned:
+        pipe = build_pipeline(spark, cfg)
+    messages = sorted(
+        str(w.message) for w in warned if "has no effect" in str(w.message)
+    )
+    assert len(messages) == 2, messages
+    assert "BufferSize" in messages[0] and "spool" in messages[0]
+    assert "DrainingThreads" in messages[1] and "split count" in messages[1]
     stats = pipe.run_available_now(str(tmp_path / "ckpt"))
     assert stats["datapoints_in"] == 50
-    assert stats["datapoints_dropped"] == 30
-    assert count_rows_in_dir(spark, str(tmp_path / "out"), "csv") == 20
+    assert "datapoints_dropped" not in stats
+    assert count_rows_in_dir(spark, str(tmp_path / "out"), "csv") == 50
+    assert count_rows_in_dir(spark, str(tmp_path / "carbon_out"), "text") == 50
 
 
 def test_signalfx_live_listener_from_config(spark, tmp_path):
