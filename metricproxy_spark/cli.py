@@ -128,7 +128,6 @@ def _serve(args) -> int:
             q.stop()
         for q in queries:
             q.awaitTermination()
-            pipe.drain_observed_metrics(q)
         print(json.dumps(dict(pipe.stats), sort_keys=True), flush=True)
         return 0
     finally:

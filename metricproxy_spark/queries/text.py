@@ -972,9 +972,9 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring-matching primitive paragraph/suffix dedup builds on.
     Selection (k-gram hashing, window minima, rightmost tie-break) runs
     in the vectorized mapInPandas twin — per-partition numpy sliding
-    windows, no shuffle (the array-HOF form is the executable spec;
-    Catalyst interprets nested HOF lambdas per element, measured ~300×
-    slower, and pytest asserts the two forms are row-identical). Only
+    windows, no shuffle (the array-HOF form is the executable spec and
+    costs about the same since it binds each row's words and k-gram
+    hashes once; pytest asserts the two forms are row-identical). Only
     the selected (pos, fp) pairs are shuffled for the row-dedup — ~2/w
     of the k-gram stream. ``spread`` widens the scan when the source
     produced fewer splits than cores (no-op at real scale)."""

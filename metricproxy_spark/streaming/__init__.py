@@ -10,7 +10,8 @@ bufferedforwarder.go]. This package re-expresses that runtime on
 Structured Streaming:
 
 - file/rate/socket ``readStream`` replaces listeners (``source``)
-- ``observe`` + ``StreamingQueryProgress`` replaces atomic counters
+- driver-side per-batch counts replace atomic counters (the line
+  write's ``Observation`` is the batch count)
 - ``foreachBatch`` replaces the demultiplexer: one job writes every
   line forwarder of a batch (a batch is persisted only for generic
   writers)

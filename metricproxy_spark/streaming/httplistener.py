@@ -97,8 +97,9 @@ def _read_body(handler: BaseHTTPRequestHandler) -> bytes | None:
     """The request body as its ``Content-Length`` header declares it.
     Answers 411 (header missing), 400 (not a non-negative integer) or
     413 (over :data:`MAX_BODY_BYTES`) and returns None, so a bad request
-    is never read or acted on. Only the declared length is bounded, not
-    what a gzip body inflates to."""
+    is never read or acted on. The length is compared in digits before
+    it is converted, so a value too long for ``int()`` is a 413 too. Only
+    the declared length is bounded, not what a gzip body inflates to."""
     clen = handler.headers.get("Content-Length")
     if clen is None:
         handler.send_error(411)
@@ -107,10 +108,14 @@ def _read_body(handler: BaseHTTPRequestHandler) -> bytes | None:
     if not (clen.isascii() and clen.isdigit()):
         handler.send_error(400, "malformed Content-Length")
         return None
-    if int(clen) > MAX_BODY_BYTES:
+    digits = clen.lstrip("0") or "0"
+    if (
+        len(digits) > len(str(MAX_BODY_BYTES))
+        or int(digits) > MAX_BODY_BYTES
+    ):
         handler.send_error(413, f"body over {MAX_BODY_BYTES} bytes")
         return None
-    return handler.rfile.read(int(clen))
+    return handler.rfile.read(int(digits))
 
 
 class _IngestHandler(BaseHTTPRequestHandler):

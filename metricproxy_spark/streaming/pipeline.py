@@ -21,13 +21,14 @@ Spark mapping implemented here:
   job: no persist, no count job, no Python worker. A generic writer
   reads the slice again; then the batch is persisted once, every sink
   reads the cache, and the cache is released before the next batch.
-- **Counters (A1/F7)**: per-batch, per-sink row counts accumulated
-  driver-side (``foreachBatch`` runs on the driver) — the analog of the
+- **Counters (A1/F7)**: ``_deliver`` is the one counter path. It adds
+  each batch's row count to ``datapoints_in`` and to every
+  ``sink.<name>.datapoints`` on the driver (``foreachBatch`` runs
+  there, once per batch, however long the run) — the analog of the
   proxy's atomic ``TotalDatapoints`` counters, readable at any time in
-  :attr:`ProxyPipeline.stats`. The source's own row count rides each
-  batch as an ``observe`` metric, folded by a ``StreamingQueryListener``
-  (every progress event, however long the run) into
-  ``observed_datapoints``.
+  :attr:`ProxyPipeline.stats`. The count itself is the ``Observation``
+  that :func:`~metricproxy_spark.streaming.sinks.write_lines` attaches
+  to its write, so counting costs no job of its own.
 - **No load shedding (F2)**: the reference *drops* datapoints past
   ``BufferSize`` so that a slow forwarder never blocks its listener.
   Here the spool already decouples the listener from the pipeline, and
@@ -50,13 +51,12 @@ Spark mapping implemented here:
 from __future__ import annotations
 
 import os
-import threading
 from dataclasses import dataclass, field
 from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery
 
 from metricproxy_spark.streaming.sinks import LineSink, write_lines
 
@@ -81,52 +81,6 @@ class SinkSpec:
         self.lines = self.writer if isinstance(self.writer, LineSink) else None
 
 
-OBSERVATION_NAME = "proxy_stats"
-
-
-class _ObservedDatapoints(StreamingQueryListener):
-    """Sums the observed ``datapoints`` of every progress event per
-    query id, and notes which queries ended. Unlike
-    ``recentProgress``, which keeps only the last
-    ``spark.sql.streaming.numRecentProgressUpdates`` events, it misses
-    none."""
-
-    def __init__(self) -> None:
-        self._cond = threading.Condition()
-        self._totals: dict[str, int] = {}
-        self._ended: set[str] = set()
-
-    def onQueryStarted(self, event) -> None:
-        pass
-
-    def onQueryProgress(self, event) -> None:
-        om = event.progress.observedMetrics.get(OBSERVATION_NAME)
-        if om is not None:  # a Row — index, don't .get
-            key = str(event.progress.id)
-            with self._cond:
-                self._totals[key] = self._totals.get(key, 0) + int(
-                    om["datapoints"]
-                )
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        with self._cond:
-            self._ended.add(str(event.id))
-            self._cond.notify_all()
-
-    def take(self, query_id: str, ended: bool) -> int:
-        """The datapoints not yet taken for ``query_id``. ``ended``: the
-        query has stopped, so wait (bounded) for its last events, which
-        reach listeners asynchronously."""
-        with self._cond:
-            if ended:
-                self._cond.wait_for(lambda: query_id in self._ended, 30)
-                self._ended.discard(query_id)
-            return self._totals.pop(query_id, 0)
-
-
 @dataclass
 class ProxyPipeline:
     source: DataFrame
@@ -136,8 +90,6 @@ class ProxyPipeline:
     # HTTP ingest listener a config's ListenAddr starts); owned by the
     # caller — see close_listeners()
     live_listeners: list = field(default_factory=list)
-    _observer: _ObservedDatapoints | None = field(default=None, init=False, repr=False)
-    _observing: set[str] = field(default_factory=set, init=False, repr=False)
 
     def close_listeners(self) -> None:
         """Stop every live network endpoint attached by build_pipeline
@@ -147,39 +99,6 @@ class ProxyPipeline:
 
     def _count(self, key: str, n: int) -> None:
         self.stats[key] = self.stats.get(key, 0) + n
-
-    def _observed_source(self) -> DataFrame:
-        """A1 the Spark way: attach an ``observe`` to the source so
-        every micro-batch reports row/value counters through
-        ``StreamingQueryProgress.observedMetrics`` — the exact analog
-        of the reference's lock-free stat counters read by the stats
-        loop [P: golib dpsink/counter.go — Counter]. Zero extra jobs:
-        metrics ride the batch's existing action."""
-        from pyspark.sql import functions as F
-
-        return self.source.observe(
-            OBSERVATION_NAME,
-            F.count(F.lit(1)).alias("datapoints"),
-        )
-
-    def drain_observed_metrics(self, query) -> dict[str, int]:
-        """Fold the query's observed metrics into stats (call after
-        awaitTermination; also usable live, then it folds what has
-        been reported so far)."""
-        if self._observer is None or query.id not in self._observing:
-            return dict(self.stats)
-        ended = not query.isActive
-        total = self._observer.take(query.id, ended)
-        if total:
-            self.stats["observed_datapoints"] = (
-                self.stats.get("observed_datapoints", 0) + total
-            )
-        if ended:
-            self._observing.discard(query.id)
-            if not self._observing:
-                self.source.sparkSession.streams.removeListener(self._observer)
-                self._observer = None
-        return dict(self.stats)
 
     def _deliver(
         self, sinks: list[SinkSpec], batch: DataFrame, batch_id: int
@@ -225,8 +144,8 @@ class ProxyPipeline:
         ``processing_time`` trigger (default "5 seconds") — the daemon
         mode `serve` uses."""
 
-        def start_query(source: DataFrame, batch_fn, name: str) -> StreamingQuery:
-            writer = source.writeStream.foreachBatch(batch_fn).option(
+        def start_query(batch_fn, name: str) -> StreamingQuery:
+            writer = self.source.writeStream.foreachBatch(batch_fn).option(
                 "checkpointLocation", os.path.join(checkpoint_dir, name)
             )
             if available_now:
@@ -238,16 +157,9 @@ class ProxyPipeline:
             return writer.start()
 
         if not independent:
-            if self._observer is None:
-                self._observer = _ObservedDatapoints()
-                self.source.sparkSession.streams.addListener(self._observer)
-            q = start_query(self._observed_source(), self._process_batch, "demux")
-            self._observing.add(q.id)
-            return [q]
+            return [start_query(self._process_batch, "demux")]
         return [
-            start_query(
-                self.source, partial(self._deliver, [sink]), f"sink_{sink.name}"
-            )
+            start_query(partial(self._deliver, [sink]), f"sink_{sink.name}")
             for sink in self.sinks
         ]
 
@@ -258,6 +170,4 @@ class ProxyPipeline:
             lis.seal()
         for q in self.start(checkpoint_dir, independent=independent):
             q.awaitTermination()
-            if not independent:
-                self.drain_observed_metrics(q)
         return dict(self.stats)

@@ -219,15 +219,16 @@ def _raw_post(host, port, head: bytes) -> bytes:
         (b"Content-Length: -1\r\n", b"400"),
         (b"Content-Length: abc\r\n", b"400"),
         (b"Transfer-Encoding: chunked\r\n", b"411"),
+        (b"Content-Length: " + b"9" * 5000 + b"\r\n", b"413"),
     ],
-    ids=["negative", "non_numeric", "missing_chunked"],
+    ids=["negative", "non_numeric", "missing_chunked", "huge"],
 )
 def test_bad_content_length_is_refused_and_not_spooled(
     tmp_path, headers, status
 ):
-    """A POST whose Content-Length is missing or malformed gets an
-    immediate 4xx and spools nothing — never a hang, a dropped
-    connection, or a 200 for an empty body."""
+    """A POST whose Content-Length is missing, malformed or too long to
+    convert to an int gets an immediate 4xx and spools nothing — never
+    a hang, a dropped connection, or a 200 for an empty body."""
     spool = tmp_path / "spool"
     body = b'{"gauge": []}'
     with HttpIngestListener(str(spool)) as lis:

@@ -208,7 +208,7 @@ def test_statsd_live_listener_from_config(spark, tmp_path):
         lis.seal()
         (q,) = pipe.start(str(tmp_path / "ckpt"))
         q.awaitTermination()
-        stats = pipe.drain_observed_metrics(q)
+        stats = pipe.stats
         assert stats["datapoints_in"] == 4
         assert count_rows_in_dir(spark, str(tmp_path / "csv_out"), "csv") == 4
         # Spark's own file source, not a Python stream reader
@@ -243,7 +243,7 @@ def test_influx_listener_from_config(spark, tmp_path):
     pipe = build_pipeline(spark, cfg)
     (q,) = pipe.start(str(tmp_path / "ckpt"))
     q.awaitTermination()
-    stats = pipe.drain_observed_metrics(q)
+    stats = pipe.stats
     assert stats["datapoints_in"] == 2
     assert count_rows_in_dir(spark, str(tmp_path / "csv_out"), "csv") == 2
     (src,) = q.lastProgress["sources"]

@@ -259,32 +259,26 @@ def test_streamed_sessions_match_batch(spark, tmp_path):
     assert len(got) > 0
 
 
-def test_observed_metrics_match_counts(spark, tmp_path):
-    """A1 via observe(): StreamingQueryProgress.observedMetrics report
-    the same datapoint totals the driver-side counters saw."""
-    src_dir = str(tmp_path / "src")
-    rows = [(i, float(i)) for i in range(80)]
-    _write_parquet_stream_src(
-        spark, rows, "id long, value double", src_dir, n_files=2
-    )
-    stream = read_stream_table(spark, src_dir, max_files_per_trigger=1)
-    sink = CollectingSink()
-    pipe = ProxyPipeline(source=stream, sinks=[SinkSpec("a", sink)])
-    stats = pipe.run_available_now(str(tmp_path / "ckpt"))
-    assert stats["datapoints_in"] == 80
-    assert stats.get("observed_datapoints") == 80
-
-
-def test_observed_metrics_count_every_batch_of_a_long_run(spark, tmp_path):
-    """``observed_datapoints`` folds every batch's progress event, not
-    only the few ``recentProgress`` retains."""
+def test_driver_counters_cover_every_batch_of_a_long_run(spark, tmp_path):
+    """A1: ``_deliver``'s driver-side counters add every batch of a run
+    longer than ``numRecentProgressUpdates`` keeps, and the pipeline
+    registers no listener of its own to count them."""
     src_dir = str(tmp_path / "src")
     rows = [(i, float(i)) for i in range(90)]
     _write_parquet_stream_src(
         spark, rows, "id long, value double", src_dir, n_files=3
     )
+    streams = spark._jsparkSession.streams()
+    listeners_before = len(streams.listListeners())
+    listeners_seen = []
+
+    class ListenerCountingSink(CollectingSink):
+        def __call__(self, df, batch_id):
+            listeners_seen.append(len(streams.listListeners()))
+            super().__call__(df, batch_id)
+
     stream = read_stream_table(spark, src_dir, max_files_per_trigger=1)
-    sink = CollectingSink()
+    sink = ListenerCountingSink()
     pipe = ProxyPipeline(source=stream, sinks=[SinkSpec("a", sink)])
     key = "spark.sql.streaming.numRecentProgressUpdates"
     prev = spark.conf.get(key)
@@ -294,7 +288,10 @@ def test_observed_metrics_count_every_batch_of_a_long_run(spark, tmp_path):
     finally:
         spark.conf.set(key, prev)
     assert sink.batches == [30, 30, 30]
-    assert stats["observed_datapoints"] == 90
+    assert stats["datapoints_in"] == 90
+    assert stats["sink.a.datapoints"] == 90
+    assert "observed_datapoints" not in stats
+    assert listeners_seen == [listeners_before] * 3
 
 
 def test_counter_to_rate_v2_parity(spark, tmp_path):
