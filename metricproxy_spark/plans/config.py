@@ -11,7 +11,10 @@ Reference config shape [P: config/config.go — ProxyConfig]:
 
 One listener in the reference is a network server; here it is a
 streaming source directory (the file source is the testable stand-in —
-a Kafka topic drops in the same slot in production). Every listener's
+a Kafka topic drops in the same slot in production). A ``ListenAddr``
+binds a real server that spools into that directory: HTTP for
+signalfx, a line socket for carbon, statsd and influx (TCP, or
+``Protocol``); parquet takes none. Every listener's
 output is normalized to the canonical datapoint schema (§2.2) before
 the fan-out, exactly the reference's single in-memory datapoint model.
 All ForwardTo entries receive all datapoints (demux F1); nothing is
@@ -26,6 +29,7 @@ parallelism is the source's split count.
 from __future__ import annotations
 
 import json
+import os
 import warnings
 from typing import Any
 
@@ -44,7 +48,7 @@ from metricproxy_spark.streaming.sinks import (
 )
 from metricproxy_spark.streaming.socketlistener import (
     LineSocketListener,
-    line_spool_stream,
+    line_spool,
 )
 from metricproxy_spark.streaming.source import read_stream_table
 
@@ -95,6 +99,10 @@ def _build_listener(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
     src = spec["Source"]  # directory (file stream); Kafka topic in prod
     mft = spec.get("MaxFilesPerTrigger")
     if ltype == "carbon":
+        if spec.get("ListenAddr"):
+            # the listener spools its lines_*.wire files into Source;
+            # the file source refuses a directory that is not there yet
+            os.makedirs(src, exist_ok=True)
         lines = (
             spark.readStream.format("text")
             .option("maxFilesPerTrigger", mft)
@@ -111,6 +119,8 @@ def _build_listener(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
             raise ValueError(f"unknown MetricDeconstructor {decon!r}")
         return _canonicalize(parsed)
     if ltype == "parquet":
+        if spec.get("ListenAddr"):
+            raise ValueError("a parquet listener takes no ListenAddr")
         # pre-normalized datapoints (the internal replay/loopback path)
         return _canonicalize(
             read_stream_table(spark, src, max_files_per_trigger=mft)
@@ -140,7 +150,7 @@ def _build_listener(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
         # processing time, the statsd-server contract.
         from metricproxy_spark.sources.statsd import parse_statsd_lines
 
-        lines = line_spool_stream(spark, src)
+        lines = line_spool(spark.readStream, src)
         parsed = parse_statsd_lines(lines.select("line"))
         mtype_map = (
             F.when(F.col("mtype") == "g", "gauge")
@@ -165,7 +175,7 @@ def _build_listener(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
         # tags ride the dimensions map.
         from metricproxy_spark.sources.influx import parse_influx_lines
 
-        lines = line_spool_stream(spark, src)
+        lines = line_spool(spark.readStream, src)
         typed = parse_influx_lines(lines.select("line"))
         return _canonicalize(
             typed.select(
@@ -219,7 +229,8 @@ def build_pipeline(
             warnings.warn(f"ForwardTo {key} has no effect: {reason}", stacklevel=2)
     pipe = ProxyPipeline(source=source, sinks=sinks)
     # Live network endpoints: a signalfx listener with a ListenAddr
-    # gets a REAL HTTP server spooling into its Source dir. The caller
+    # gets a REAL HTTP server spooling into its Source dir; a carbon,
+    # statsd or influx one a line socket (TCP, or ``Protocol``). The caller
     # owns the lifecycle via pipe.live_listeners (stop() when done).
     # Started LAST, after every listener/sink spec has parsed, and
     # unwound on failure: a bad ListenAddr in the Nth spec must not
@@ -240,7 +251,7 @@ def build_pipeline(
                 )
                 lis.start()
                 pipe.live_listeners.append(lis)
-            elif ltype in ("statsd", "influx"):
+            elif ltype in ("carbon", "statsd", "influx"):
                 lis = LineSocketListener(
                     spec["Source"],
                     mode=spec.get("Protocol", "tcp").lower(),

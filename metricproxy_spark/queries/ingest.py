@@ -647,21 +647,20 @@ _CARBON_LINE_VALID_SQL = """
     """,
 )
 def ingest_carbon_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1 as a native connector: carbon wire files read through the
-    custom Python Data Source (``spark.read.format("carbonwire")``,
-    PySpark 4 DataSource API) and parsed by the same C1 parser as the
-    socket listener — proving the connector yields byte-identical lines
-    (the oracle re-derives every parsed field from the source table).
+    """S1 at rest: carbon wire files read as a line spool
+    (:func:`~metricproxy_spark.streaming.socketlistener.line_spool`,
+    Spark's text source with the spool's line rules) and parsed by the
+    same C1 parser as the socket listener — proving the spool reader
+    yields byte-identical lines (the oracle re-derives every parsed
+    field from the source table).
 
-    Scan parallelism is partition-per-file, planner-visible — the
-    contract a 1000-executor cluster needs from any source. The staged
-    dir is written once per (session, sf) and reused.
+    Scan parallelism is the text source's byte-range file splits,
+    planner-visible — the contract a 1000-executor cluster needs from
+    any source. The staged dir is written once per (session, sf) and
+    reused.
     """
-    from metricproxy_spark.io import ensure_package_on_workers
-    from metricproxy_spark.sources.pyds import register_carbonwire
+    from metricproxy_spark.streaming.socketlistener import line_spool
 
-    ensure_package_on_workers(spark)
-    register_carbonwire(spark)
     # Staging is keyed by (sf, content fingerprint) — content is a
     # pure function of the events table and the fingerprint invalidates
     # on testdata regeneration — and published by atomic rename, so
@@ -680,21 +679,7 @@ def ingest_carbon_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.rename(staging, wire_dir)
         except OSError:  # lost the publish race; theirs is identical
             shutil.rmtree(staging, ignore_errors=True)
-    # Size chunks for ~2 splits per core: parallelism comes from the
-    # connector's byte-range partitioning, not from file count.
-    total = sum(
-        os.path.getsize(os.path.join(wire_dir, f))
-        for f in os.listdir(wire_dir)
-        if not f.startswith(("_", "."))
-    )
-    chunk = max(64 * 1024, total // (2 * spark.sparkContext.defaultParallelism))
-    lines = (
-        spark.read.format("carbonwire")
-        .option("path", wire_dir)
-        .option("chunk_bytes", str(chunk))
-        .load()
-    )
-    parsed = parse_carbon_lines(lines)
+    parsed = parse_carbon_lines(line_spool(spark.read, wire_dir))
     return parsed.select("metric", "value", "epoch_s")
 
 
@@ -1024,65 +1009,37 @@ def ingest_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ingest_carbon_connector_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K2 as a first-class connector SINK (PySpark 4 Python DataSource
-    writer API): ``df.write.format("carbonwire")`` lands graphite
-    plaintext with the standard two-phase task commit — staged
-    per-partition files renamed into place only by the driver-side job
-    commit (plus ``_SUCCESS``), so partial jobs are never visible and
-    speculative attempts can't double-write. The proof is a full
-    write→read→parse cycle through the connector pair: the oracle
-    re-derives every field from the source table, so a hash match
-    pins byte fidelity through BOTH directions of the wire format.
+    """K2 written by the forwarders' own publish path: the carbon
+    lines go through :func:`~metricproxy_spark.streaming.sinks.
+    write_lines` (one JVM text write into a hidden scratch tree, then
+    driver-side renames into place plus ``_SUCCESS``, so a failed job
+    publishes nothing) and are read back as a line spool
+    (:func:`~metricproxy_spark.streaming.socketlistener.line_spool`).
+    The proof is a full write→read→parse cycle: the oracle re-derives
+    every field from the source table, so a hash match pins byte
+    fidelity through BOTH directions of the wire format.
 
     The sink output is STAGED once per sf fingerprint (same
-    atomic-rename discipline as every shared artifact): the 2-phase
-    commit write runs on the first, cold call — warm calls measure
-    the connector READ+parse, the repeatable half. The commit
-    protocol itself stays pinned cold by tests/test_pyds.py."""
-    from metricproxy_spark.io import ensure_package_on_workers
-    from metricproxy_spark.sources.pyds import register_carbonwire
+    atomic-rename discipline as every shared artifact): the write runs
+    on the first, cold call — warm calls measure the READ+parse, the
+    repeatable half. The write contract itself stays pinned by
+    tests/test_line_sinks.py."""
+    from metricproxy_spark.streaming.sinks import LineSink, write_lines
+    from metricproxy_spark.streaming.socketlistener import line_spool
 
-    ensure_package_on_workers(spark)
-    register_carbonwire(spark)
-    out_dir = staged_artifact_dir("wire_sink", sf_dir)
+    out_dir = staged_artifact_dir("line_sink", sf_dir)
     if not os.path.isdir(out_dir):
         staging = out_dir + f".staging.{os.getpid()}"
         ev = load_table(spark, sf_dir, "events")
-        # One output file per partition: size partitions by VOLUME
-        # (~50k lines ≈ a few MB each, capped at the core count) —
-        # the same repartition-to-size-files contract as the built-in
-        # file sinks. Python writer tasks carry ~150ms fixed overhead
-        # each, so width must track data, not cores, at the small
-        # end.
-        n_rows = ev.count()  # parquet metadata count, no scan
-        n_parts = max(
-            1, min(spark.sparkContext.defaultParallelism, n_rows // 50_000)
-        )
-        (
-            ev.select(_carbon_line(valid_only=True).alias("line"))
-            .repartition(n_parts)
-            .write.format("carbonwire")
-            .mode("overwrite")
-            .save(staging)
+        write_lines(
+            ev.select(_carbon_line(valid_only=True).alias("line")),
+            [LineSink(staging, ".carbon", lambda df: F.col("line"))],
         )
         try:
             os.rename(staging, out_dir)
         except OSError:  # lost the publish race; winner is identical
             shutil.rmtree(staging, ignore_errors=True)
-    total = sum(
-        os.path.getsize(os.path.join(out_dir, f))
-        for f in os.listdir(out_dir)
-        if not f.startswith(("_", "."))
-    )
-    chunk = max(
-        64 * 1024, total // (2 * spark.sparkContext.defaultParallelism)
-    )
-    back = (
-        spark.read.format("carbonwire")
-        .option("path", out_dir)
-        .option("chunk_bytes", str(chunk))
-        .load()
-    )
+    back = line_spool(spark.read, out_dir)
     return parse_carbon_lines(back).select("metric", "value", "epoch_s")
 
 
@@ -1417,16 +1374,15 @@ def ingest_statsd_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     LineSocketListener` (the telegraf socket_listener transport for
     statsd — lossless, unlike datagram UDP whose at-most-once
     semantics are exercised in tests/test_socketlistener.py), spooled
-    verbatim to line files, scanned back through the byte-range
-    `carbonwire` connector, and parsed/aggregated by the SAME
-    functions as the at-rest twin. Oracle is the identical SQL — the
-    whole live chain (accept, newline framing, segment seal,
-    connector splits, parse, flush agg) is value-checked end to end.
+    verbatim to line files, read back through Spark's text source
+    (``line_spool``), and parsed/aggregated by the SAME functions as
+    the at-rest twin. Oracle is the identical SQL — the whole live
+    chain (accept, newline framing, segment seal, text splits, parse,
+    flush agg) is value-checked end to end.
 
     The sending loop is the CLIENT side of the wire — a bounded load
     generator that holds its own payload by definition; the engine
     side (spool scan -> parse -> agg) stays distributed."""
-    from metricproxy_spark.sources.pyds import register_carbonwire
     from metricproxy_spark.sources.statsd import (
         aggregate_statsd,
         parse_statsd_lines,
@@ -1434,6 +1390,7 @@ def ingest_statsd_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from metricproxy_spark.streaming.socketlistener import (
         LineSocketListener,
+        line_spool,
         send_lines_tcp,
     )
 
@@ -1449,13 +1406,7 @@ def ingest_statsd_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     spool = tempfile.mkdtemp(prefix="mps_statsd_live_")
     with LineSocketListener(spool, mode="tcp") as lis:
         send_lines_tcp(lis.host, lis.port, payload)
-    register_carbonwire(spark)
-    back = (
-        spark.read.format("carbonwire")
-        .option("path", spool)
-        .load()
-        .select("line")
-    )
+    back = line_spool(spark.read, spool).select("line")
     return aggregate_statsd(parse_statsd_lines(back))
 
 
@@ -1490,8 +1441,8 @@ def ingest_influx_line(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ingest_influx_live", oracle=_INFLUX_ORACLE)
 def ingest_influx_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S-ext LIVE: influx line protocol over REAL loopback TCP (the
-    telegraf socket_listener transport) into the line spool, scanned
-    back via the `carbonwire` byte-range connector and parsed by the
+    telegraf socket_listener transport) into the line spool, read back
+    through Spark's text source (``line_spool``) and parsed by the
     SAME functions as the at-rest twin — identical oracle SQL, so the
     live chain is value-checked end to end. See `ingest_statsd_live`
     for the transport/scale notes."""
@@ -1500,9 +1451,9 @@ def ingest_influx_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         influx_wire_lines,
         parse_influx_lines,
     )
-    from metricproxy_spark.sources.pyds import register_carbonwire
     from metricproxy_spark.streaming.socketlistener import (
         LineSocketListener,
+        line_spool,
         send_lines_tcp,
     )
 
@@ -1518,13 +1469,7 @@ def ingest_influx_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     spool = tempfile.mkdtemp(prefix="mps_influx_live_")
     with LineSocketListener(spool, mode="tcp") as lis:
         send_lines_tcp(lis.host, lis.port, payload)
-    register_carbonwire(spark)
-    back = (
-        spark.read.format("carbonwire")
-        .option("path", spool)
-        .load()
-        .select("line")
-    )
+    back = line_spool(spark.read, spool).select("line")
     return aggregate_influx(parse_influx_lines(back))
 
 

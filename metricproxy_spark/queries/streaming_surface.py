@@ -263,14 +263,9 @@ def stream_counter_to_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scope the partition count to the key cardinality for this query
     # only (state-partition count is fixed at first checkpoint, so
     # this also keeps restarts consistent). ~3s saved of a 9s query.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _run_to_memory(
-            rates, os.path.join(wd, "ckpt"), mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _run_to_memory(
+        rates, os.path.join(wd, "ckpt"), mode="append", state_partitions=8
+    )
 
 
 @register(
@@ -519,14 +514,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batch. Scope to a modest count for this query (fixed at
     # first checkpoint); a production deployment sizes this to key
     # cardinality x state size instead.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _run_to_memory(
-            joined, os.path.join(wd, "ckpt"), mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _run_to_memory(
+        joined, os.path.join(wd, "ckpt"), mode="append", state_partitions=8
+    )
 
 
 @register(
@@ -609,14 +599,9 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gap_s"
         ),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _run_to_memory(
-            joined, os.path.join(wd, "ckpt"), mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _run_to_memory(
+        joined, os.path.join(wd, "ckpt"), mode="append", state_partitions=8
+    )
 
 
 @register(
@@ -752,14 +737,12 @@ def stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="ts",
     )
     stream = read_stream_table(spark, src, max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        snapshots = _run_to_memory(
-            streaming_topk(stream), os.path.join(wd, "ckpt"), mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    snapshots = _run_to_memory(
+        streaming_topk(stream),
+        os.path.join(wd, "ckpt"),
+        mode="append",
+        state_partitions=8,
+    )
     w = Window.partitionBy("event_type")
     return (
         snapshots.withColumn("_vmax", F.max("version").over(w))
@@ -890,12 +873,7 @@ def stream_downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Key space is |types|·|hours| (~3.4k) — scope the state store to 8
     # partitions so a vanilla 200-partition session doesn't spin 200
     # state dirs per micro-batch for a few thousand keys.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _run_to_memory(agg, os.path.join(wd, "ckpt"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
 
 
 @register(
@@ -979,15 +957,10 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # ~5 metric keys: scope the state-store width (200 default
         # partitions would spin 200 state dirs for 5 keys)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-            result = spark.createDataFrame(
-                out.collect(), "metric string, n bigint, sum_value double"
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+        result = spark.createDataFrame(
+            out.collect(), "metric string, n bigint, sum_value double"
+        )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -1000,7 +973,7 @@ def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The statsd front door fully STREAMED: wire lines pushed over
     real loopback TCP into the line-socket listener's spool, the
     spool consumed EXACTLY ONCE through Spark's text file source
-    (``line_spool_stream``: files tracked by name in the checkpoint),
+    (``line_spool``: files tracked by name in the checkpoint),
     parsed by the same shared statsd parser, flush-aggregated in
     complete mode — the streamed result hash-matches the SAME DuckDB
     oracle as the at-rest (`ingest_statsd`) and live-batch
@@ -1015,7 +988,7 @@ def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from metricproxy_spark.streaming.socketlistener import (
         LineSocketListener,
-        line_spool_stream,
+        line_spool,
         send_lines_tcp,
     )
 
@@ -1035,7 +1008,7 @@ def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(spool, exist_ok=True)
     with LineSocketListener(spool, mode="tcp") as lis:
         send_lines_tcp(lis.host, lis.port, payload)
-    lines = line_spool_stream(spark, spool).select("line")
+    lines = line_spool(spark.readStream, spool).select("line")
     parsed = parse_statsd_lines(lines)
     # Streaming disallows count_distinct: the STREAMING agg groups by
     # (name, mtype, member) — set members dedup into state keys, so
@@ -1049,24 +1022,19 @@ def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("scaled").alias("total_dec"),
     )
     # ~100 (name, type) keys: scope the state-store width
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(pre, os.path.join(wd, "ckpt"))
-        rolled = out.groupBy("name", "mtype").agg(
-            F.sum("n_l").cast("bigint").alias("n_lines"),
-            F.sum("total_dec").cast("double").alias("total"),
-            F.when(
-                F.first("mtype") == "s", F.count("member")
-            ).alias("n_members"),
-        )
-        result = spark.createDataFrame(
-            rolled.collect(),
-            "name string, mtype string, n_lines bigint,"
-            " total double, n_members bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(pre, os.path.join(wd, "ckpt"), state_partitions=8)
+    rolled = out.groupBy("name", "mtype").agg(
+        F.sum("n_l").cast("bigint").alias("n_lines"),
+        F.sum("total_dec").cast("double").alias("total"),
+        F.when(
+            F.first("mtype") == "s", F.count("member")
+        ).alias("n_members"),
+    )
+    result = spark.createDataFrame(
+        rolled.collect(),
+        "name string, mtype string, n_lines bigint,"
+        " total double, n_members bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -1104,7 +1072,7 @@ def stream_influx_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from metricproxy_spark.streaming.socketlistener import (
         LineSocketListener,
-        line_spool_stream,
+        line_spool,
         send_lines_tcp,
     )
 
@@ -1124,20 +1092,15 @@ def stream_influx_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(spool, exist_ok=True)
     with LineSocketListener(spool, mode="tcp") as lis:
         send_lines_tcp(lis.host, lis.port, payload)
-    lines = line_spool_stream(spark, spool).select("line")
+    lines = line_spool(spark.readStream, spool).select("line")
     agg = aggregate_influx(parse_influx_lines(lines))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.collect(),
-            "measurement string, host string, n_points bigint,"
-            " sum_value double, sum_count bigint,"
-            " min_ts_ns bigint, max_ts_ns bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.collect(),
+        "measurement string, host string, n_points bigint,"
+        " sum_value double, sum_count bigint,"
+        " min_ts_ns bigint, max_ts_ns bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -1162,7 +1125,7 @@ def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graphite tagged-carbon fully STREAMED (the transport chain of
     stream_statsd_pipeline): wire lines over real loopback TCP into
     the line-socket spool, consumed exactly-once through Spark's text
-    file source (``line_spool_stream``), parsed by the shared graphite
+    file source (``line_spool``), parsed by the shared graphite
     parser, complete-mode rollup per (name, host-tag) with
     decimal-exact sums — hash-matches the same oracle as the at-rest
     twin (`ingest_graphite_tags`) on the deterministic 1/3 subset.
@@ -1174,7 +1137,7 @@ def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from metricproxy_spark.streaming.socketlistener import (
         LineSocketListener,
-        line_spool_stream,
+        line_spool,
         send_lines_tcp,
     )
 
@@ -1192,7 +1155,7 @@ def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(spool, exist_ok=True)
     with LineSocketListener(spool, mode="tcp") as lis:
         send_lines_tcp(lis.host, lis.port, payload)
-    lines = line_spool_stream(spark, spool).select("line")
+    lines = line_spool(spark.readStream, spool).select("line")
     parsed = parse_graphite_lines(lines)
     pre = parsed.groupBy(
         "name", F.col("tags").getItem("host").alias("host")
@@ -1202,24 +1165,19 @@ def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_sec").alias("min_t"),
         F.max("ts_sec").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(pre, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "name",
-                "host",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_sec"),
-                F.col("max_t").alias("max_ts_sec"),
-            ).collect(),
-            "name string, host string, n_points bigint, sum_value double,"
-            " min_ts_sec bigint, max_ts_sec bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(pre, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            "name",
+            "host",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_sec"),
+            F.col("max_t").alias("max_ts_sec"),
+        ).collect(),
+        "name string, host string, n_points bigint, sum_value double,"
+        " min_ts_sec bigint, max_ts_sec bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -1301,25 +1259,20 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ns").alias("min_t"),
         F.max("ts_ns").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "name",
-                "mtype",
-                "host",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ns"),
-                F.col("max_t").alias("max_ts_ns"),
-            ).collect(),
-            "name string, mtype string, host string, n_points bigint,"
-            " sum_value double, min_ts_ns bigint, max_ts_ns bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            "name",
+            "mtype",
+            "host",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ns"),
+            F.col("max_t").alias("max_ts_ns"),
+        ).collect(),
+        "name string, mtype string, host string, n_points bigint,"
+        " sum_value double, min_ts_ns bigint, max_ts_ns bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -1445,17 +1398,12 @@ def stream_collectd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_value"),
         )
         # 6 (metric, type) keys: scope the state-store width
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-            result = spark.createDataFrame(
-                out.collect(),
-                "metric string, metric_type string, n_points bigint,"
-                " sum_value double",
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+        result = spark.createDataFrame(
+            out.collect(),
+            "metric string, metric_type string, n_points bigint,"
+            " sum_value double",
+        )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -1480,7 +1428,7 @@ def stream_sfx_v1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SignalFx v1 newline-JSON fully STREAMED (r6 VERDICT task 4):
     wire lines pushed over real loopback TCP into the line-socket
     listener's spool, consumed EXACTLY ONCE through Spark's text file
-    source (``line_spool_stream``), parsed by the same S4 parser as
+    source (``line_spool``), parsed by the same S4 parser as
     ``ingest_sfx_v1_registry`` with the S5 metric-type registry joined
     STREAM-STATIC (broadcast — the bounded dimension never shuffles the
     stream), then rolled up per (metric, source, metric_type) with
@@ -1490,7 +1438,7 @@ def stream_sfx_v1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.sources.signalfx import parse_sfx_v1_json
     from metricproxy_spark.streaming.socketlistener import (
         LineSocketListener,
-        line_spool_stream,
+        line_spool,
         send_lines_tcp,
     )
 
@@ -1519,7 +1467,7 @@ def stream_sfx_v1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("error", "counter"), ("purchase", "cumulative_counter")],
         "sf_metric string, metric_type string",
     )
-    lines = line_spool_stream(spark, spool).select("line")
+    lines = line_spool(spark.readStream, spool).select("line")
     parsed = parse_sfx_v1_json(lines, registry)
     agg = parsed.groupBy("metric", "source", "metric_type").agg(
         F.count(F.lit(1)).alias("n_points"),
@@ -1528,17 +1476,12 @@ def stream_sfx_v1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_value"),
     )
     # ~15 (metric, source) keys: scope the state-store width
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.collect(),
-            "metric string, source string, metric_type string,"
-            " n_points bigint, sum_value double",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.collect(),
+        "metric string, source string, metric_type string,"
+        " n_points bigint, sum_value double",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -1639,23 +1582,18 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "metric string, n_points bigint, sum_value double,"
-            " min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            "metric",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "metric string, n_points bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -1783,23 +1721,18 @@ def stream_gorilla_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("s_v").alias("sum_v_scaled"),
     )
     wd = _workdir()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "event_type",
-                F.col("n_blocks").cast("bigint"),
-                F.col("n_points").cast("bigint"),
-                F.col("sum_ts").cast("bigint"),
-                F.col("sum_v_scaled").cast("bigint"),
-            ).collect(),
-            "event_type string, n_blocks bigint, n_points bigint,"
-            " sum_ts bigint, sum_v_scaled bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            "event_type",
+            F.col("n_blocks").cast("bigint"),
+            F.col("n_points").cast("bigint"),
+            F.col("sum_ts").cast("bigint"),
+            F.col("sum_v_scaled").cast("bigint"),
+        ).collect(),
+        "event_type string, n_blocks bigint, n_points bigint,"
+        " sum_ts bigint, sum_v_scaled bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -1905,23 +1838,18 @@ def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "metric string, n_points bigint, sum_value double,"
-            " min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            "metric",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "metric string, n_points bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -2039,24 +1967,19 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                "dim_type",
-                F.col("n_s").cast("bigint").alias("n_samples"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "metric string, dim_type string, n_samples bigint,"
-            " sum_value double, min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            "metric",
+            "dim_type",
+            F.col("n_s").cast("bigint").alias("n_samples"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "metric string, dim_type string, n_samples bigint,"
+        " sum_value double, min_ts_ms bigint, max_ts_ms bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -2206,24 +2129,19 @@ def stream_otlp_protobuf_pipeline(
         F.min("t_ns").alias("min_t"),
         F.max("t_ns").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                F.col("n_g").cast("bigint").alias("n_points"),
-                F.col("sum_g").cast("double").alias("sum_gauge"),
-                F.col("sum_c").cast("bigint").alias("sum_counter"),
-                F.col("min_t").alias("min_t_ns"),
-                F.col("max_t").alias("max_t_ns"),
-            ).collect(),
-            "metric string, n_points bigint, sum_gauge double,"
-            " sum_counter bigint, min_t_ns bigint, max_t_ns bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            "metric",
+            F.col("n_g").cast("bigint").alias("n_points"),
+            F.col("sum_g").cast("double").alias("sum_gauge"),
+            F.col("sum_c").cast("bigint").alias("sum_counter"),
+            F.col("min_t").alias("min_t_ns"),
+            F.col("max_t").alias("max_t_ns"),
+        ).collect(),
+        "metric string, n_points bigint, sum_gauge double,"
+        " sum_counter bigint, min_t_ns bigint, max_t_ns bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -2328,14 +2246,9 @@ def stream_alert_for_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Key space is |series| (a handful): scope the state store like the
     # sibling stateful queries so a vanilla 200-partition session does
     # not spin 200 state dirs per micro-batch.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(
-            snapshots, os.path.join(wd, "ckpt"), mode="append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(
+        snapshots, os.path.join(wd, "ckpt"), mode="append", state_partitions=8
+    )
     w = Window.partitionBy("event_type")
     return (
         out.withColumn("_vmax", F.max("version").over(w))
@@ -2448,23 +2361,18 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "metric string, n_points bigint, sum_value double,"
-            " min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            "metric",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "metric string, n_points bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -2576,23 +2484,18 @@ def stream_kafka_recordbatch_pipeline(
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "dim_type",
-                F.col("n_r").cast("bigint").alias("n_records"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "dim_type string, n_records bigint, sum_value double,"
-            " min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            "dim_type",
+            F.col("n_r").cast("bigint").alias("n_records"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "dim_type string, n_records bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -2707,23 +2610,18 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("t_ns").alias("min_t"),
         F.max("t_ns").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                F.col("sev").alias("severity_number"),
-                F.col("n_r").cast("bigint").alias("n_records"),
-                F.col("sum_u").cast("bigint").alias("sum_user"),
-                F.col("min_t").alias("min_t_ns"),
-                F.col("max_t").alias("max_t_ns"),
-            ).collect(),
-            "severity_number int, n_records bigint, sum_user bigint,"
-            " min_t_ns long, max_t_ns long",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            F.col("sev").alias("severity_number"),
+            F.col("n_r").cast("bigint").alias("n_records"),
+            F.col("sum_u").cast("bigint").alias("sum_user"),
+            F.col("min_t").alias("min_t_ns"),
+            F.col("max_t").alias("max_t_ns"),
+        ).collect(),
+        "severity_number int, n_records bigint, sum_user bigint,"
+        " min_t_ns long, max_t_ns long",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 
@@ -2844,23 +2742,18 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"))
-        result = spark.createDataFrame(
-            out.select(
-                "metric",
-                F.col("n_p").cast("bigint").alias("n_points"),
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("min_t").alias("min_ts_ms"),
-                F.col("max_t").alias("max_ts_ms"),
-            ).collect(),
-            "metric string, n_points bigint, sum_value double,"
-            " min_ts_ms bigint, max_ts_ms bigint",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
+    result = spark.createDataFrame(
+        out.select(
+            "metric",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ).collect(),
+        "metric string, n_points bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+    )
     shutil.rmtree(wd, ignore_errors=True)
     return result
 

@@ -19,11 +19,10 @@ connection's ``OK`` ack goes out after its lines are sealed into a
 published file. ``start()`` publishes the segments a dead listener left
 behind.
 
-The spool is plain text, one line per record, read by
-:func:`line_spool_stream` (Spark's text file source) or in batch by
-``spark.read.format("carbonwire")``; the SAME JVM-side parsers serve
-both, so live ingest is value-checkable against the batch twin's
-oracle.
+The spool is plain text, one line per record, read in batch and in
+stream by :func:`line_spool` (Spark's text file source); the SAME
+JVM-side parsers serve both, so live ingest is value-checkable against
+the batch twin's oracle.
 
 Two transports:
 
@@ -42,8 +41,9 @@ import socket
 import socketserver
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 
 from metricproxy_spark.sources.spool import SEAL_INTERVAL_S, SegmentSpool
 
@@ -152,15 +152,18 @@ class LineSocketListener:
         self.stop()
 
 
-def line_spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
-    """A line spool as a stream of ``(line, src_file)`` rows through
-    Spark's text file source, with ``carbonwire``'s rules: split on
-    ``\\n`` only (a ``\\r`` stays in the line), drop empty lines, and
-    ``src_file`` is the file's base name."""
+def line_spool(
+    reader: DataFrameReader | DataStreamReader, spool_dir: str
+) -> DataFrame:
+    """A line spool as ``(line, src_file)`` rows through Spark's text
+    file source, in batch (``spark.read``) or in stream
+    (``spark.readStream``): split on ``\\n`` only (a ``\\r`` stays in
+    the line), drop empty lines, and ``src_file`` is the file's base
+    name. A missing directory is created."""
     # the file source refuses a missing directory
     os.makedirs(spool_dir, exist_ok=True)
     return (
-        spark.readStream.option("lineSep", "\n")
+        reader.option("lineSep", "\n")
         .text(spool_dir)
         .where(F.col("value") != "")
         .select(

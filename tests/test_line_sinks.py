@@ -196,6 +196,12 @@ def test_sinks_sharing_a_directory_keep_their_own_files(spark, tmp_path):
     assert write_lines(df, [a, b]) == 100
     want = sorted(f"{k}{i}".encode() for k in "ab" for i in range(100))
     assert [ln for ln in _lines(str(tmp_path)) if ln] == want
+    # a second call appends next to the first call's files, never over them
+    first = set(glob.glob(os.path.join(tmp_path, "part-*")))
+    assert write_lines(df, [a]) == 100
+    assert first < set(glob.glob(os.path.join(tmp_path, "part-*")))
+    want = sorted(want + [f"a{i}".encode() for i in range(100)])
+    assert [ln for ln in _lines(str(tmp_path)) if ln] == want
 
 
 def test_failing_line_leaves_no_file_in_any_forwarder(spark, tmp_path, small_arrow_batches):

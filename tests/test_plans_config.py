@@ -248,3 +248,52 @@ def test_influx_listener_from_config(spark, tmp_path):
     assert count_rows_in_dir(spark, str(tmp_path / "csv_out"), "csv") == 2
     (src,) = q.lastProgress["sources"]
     assert src["description"].startswith("FileStreamSource")
+
+
+def test_carbon_listen_addr_binds_a_line_socket(spark, tmp_path, monkeypatch):
+    """A carbon ListenFrom with a ListenAddr binds a real TCP line
+    socket spooling into ``Source``: lines sent to it all reach the CSV
+    forwarder after one availableNow drain. A parquet listener with a
+    ListenAddr is refused before any port is bound."""
+    from metricproxy_spark.plans import config
+    from metricproxy_spark.streaming.socketlistener import send_lines_tcp
+
+    out = str(tmp_path / "csv_out")
+    lines = [f"live.m{i} {i}.5 {1700000000 + i}" for i in range(40)]
+    cfg = {
+        "ListenFrom": [
+            {
+                "Type": "carbon",
+                # not created here: the listener spools into it
+                "Source": str(tmp_path / "carbon_spool"),
+                "ListenAddr": "127.0.0.1:0",
+            }
+        ],
+        "ForwardTo": [{"Type": "csv", "Name": "csv", "Path": out}],
+    }
+    pipe = build_pipeline(spark, cfg)
+    try:
+        [lis] = pipe.live_listeners
+        assert lis.url == f"tcp://127.0.0.1:{lis.port}"
+        send_lines_tcp(lis.host, lis.port, lines, connections=2)
+        stats = pipe.run_available_now(str(tmp_path / "ckpt"))
+    finally:
+        pipe.close_listeners()
+    assert stats["datapoints_in"] == stats["sink.csv.datapoints"] == 40
+    got = sorted((r[0], float(r[1])) for r in spark.read.csv(out).collect())
+    assert got == sorted((f"live.m{i}", i + 0.5) for i in range(40))
+
+    bound = []
+    monkeypatch.setattr(
+        config.LineSocketListener, "start", lambda self: bound.append(self)
+    )
+    cfg["ListenFrom"].append(
+        {
+            "Type": "parquet",
+            "Source": str(tmp_path / "pq"),
+            "ListenAddr": "127.0.0.1:0",
+        }
+    )
+    with pytest.raises(ValueError, match="ListenAddr"):
+        build_pipeline(spark, cfg)
+    assert bound == []

@@ -1,6 +1,7 @@
 """LineSocketListener: TCP losslessness, UDP datagram mode, lines on
 disk at receipt and published within a seal interval, restart and
-recovery discipline, and connector round-trip."""
+recovery discipline, and the spool read back through ``line_spool``
+in batch and in stream."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import time
 
 from metricproxy_spark.streaming.socketlistener import (
     LineSocketListener,
+    line_spool,
     send_lines_tcp,
 )
 
@@ -84,20 +86,119 @@ class TestUdp:
         assert collections.Counter(got) == collections.Counter(payload)
 
 
-class TestConnectorRoundTrip:
-    def test_spool_is_carbonwire_readable(self, spark):
-        from metricproxy_spark.sources.pyds import register_carbonwire
-
+class TestSpoolRoundTrip:
+    def test_spool_reads_back_through_line_spool(self, spark):
         payload = [f"w.{i} {i}.5 1700000{i:03d}" for i in range(300)]
         spool = tempfile.mkdtemp(prefix="mps_sl_")
         with LineSocketListener(spool, mode="tcp") as l:
             send_lines_tcp(l.host, l.port, payload, connections=3)
-        register_carbonwire(spark)
-        back = (
-            spark.read.format("carbonwire").option("path", spool).load()
-        )
-        got = [r.line for r in back.collect()]
+        got = [r.line for r in line_spool(spark.read, spool).collect()]
         assert collections.Counter(got) == collections.Counter(payload)
+
+
+def _write_wire(dirpath: str, name: str, lines: list[str]) -> None:
+    os.makedirs(dirpath, exist_ok=True)
+    with open(os.path.join(dirpath, name), "w") as fh:
+        fh.write("\n".join(lines) + "\n")
+
+
+def test_stream_picks_up_new_files_exactly_once(spark):
+    """A line spool streams through ``line_spool`` (Spark's text
+    source); a restarted query reads only the file that arrived since."""
+    d = tempfile.mkdtemp(prefix="mps_sl_src_")
+    ckpt = tempfile.mkdtemp(prefix="mps_sl_ckpt_")
+    out = tempfile.mkdtemp(prefix="mps_sl_out_")
+    _write_wire(d, "00.txt", ["a 1 1700000000"])
+    _write_wire(d, "01.txt", ["b 2 1700000001"])
+
+    def drain() -> int:
+        q = (
+            line_spool(spark.readStream, d)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.read.parquet(out).count()
+
+    assert drain() == 2
+    # a new file lands; a restarted query resumes from the checkpointed
+    # offset and appends ONLY the new file's rows
+    _write_wire(d, "02.txt", ["c 3 1700000002", "d 4 1700000003"])
+    assert drain() == 4
+    assert sorted(
+        (r.line, r.src_file) for r in spark.read.parquet(out).collect()
+    ) == [
+        ("a 1 1700000000", "00.txt"),
+        ("b 2 1700000001", "01.txt"),
+        ("c 3 1700000002", "02.txt"),
+        ("d 4 1700000003", "02.txt"),
+    ]
+
+
+def test_line_spool_byte_range_splits_keep_every_line_once(spark, tmp_path):
+    """A file larger than one split is read in several byte-range
+    splits; every line, those straddling a split boundary included, is
+    read exactly once."""
+    lines = [f"metric.{i} {i} {1700000000 + i}" for i in range(5000)]
+    _write_wire(str(tmp_path), "big.wire", lines)
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16384")
+    try:
+        df = line_spool(spark.read, str(tmp_path))
+        assert df.rdd.getNumPartitions() > 1
+        got = sorted(r.line for r in df.collect())
+    finally:
+        spark.conf.set(key, prev)
+    assert got == sorted(lines)
+
+
+def test_line_spool_batch_and_stream_rows_match_the_bytes(spark, tmp_path):
+    """On a spool with CRLF, blank lines, invalid UTF-8, a missing final
+    newline and hidden ``.seg_``/``_`` files, the batch and the stream
+    read of ``line_spool`` both yield exactly the rows the spool rule
+    gives on the file bytes: split on ``\\n``, drop empty lines, decode
+    UTF-8 with replacement, ``src_file`` the base name."""
+    d = tmp_path / "spool"
+    d.mkdir()
+    (d / "lines_000000000000.wire").write_bytes(
+        b"a 1 1\r\n\r\n\nb 2 2\n\xff\xfe bad \xc3\n"
+    )
+    (d / "lines_000000000001.wire").write_bytes(
+        "\n".join(f"m.{i} {i} {i}" for i in range(20_000)).encode()
+        + "\nh\u00e9llo \u65e5\u672c\r\nlast no newline".encode()
+    )
+    (d / "lines_000000000002.wire").write_bytes(b"")
+    (d / ".seg_open").write_bytes(b"hidden 1 1\n")
+    (d / "_SUCCESS").write_bytes(b"hidden 2 2\n")
+    want = sorted(
+        (ln.decode("utf-8", errors="replace"), f.name)
+        for f in d.iterdir()
+        if not f.name.startswith((".", "_"))
+        for ln in f.read_bytes().split(b"\n")
+        if ln
+    )
+    assert len(want) == 20_006
+
+    q = (
+        line_spool(spark.readStream, str(d))
+        .writeStream.format("memory")
+        .queryName("line_spool_parity")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    try:
+        streamed = spark.table("line_spool_parity").collect()
+    finally:
+        spark.catalog.dropTempView("line_spool_parity")
+    batch = line_spool(spark.read, str(d)).collect()
+    key = lambda r: (r.line, r.src_file)  # noqa: E731
+    assert sorted(map(key, streamed)) == want
+    assert sorted(map(key, batch)) == want
 
 
 def test_send_lines_tcp_empty_is_noop():

@@ -130,12 +130,15 @@ def test_empty_segment_spool_publishes_nothing(tmp_path):
     assert os.listdir(tmp_path / "spool") == []
 
 
-@pytest.mark.parametrize("fmt", ["httpwire", "carbonwire", "warcwire"])
+@pytest.mark.parametrize("fmt", ["httpwire", "line_spool", "warcwire"])
 def test_empty_spool_scans_as_zero_rows(spark, tmp_path, fmt):
     from metricproxy_spark.sources.httpwire import register_httpwire
-    from metricproxy_spark.sources.pyds import register_carbonwire
     from metricproxy_spark.sources.warc import register_warcwire
+    from metricproxy_spark.streaming.socketlistener import line_spool
 
-    for register in (register_httpwire, register_carbonwire, register_warcwire):
+    if fmt == "line_spool":
+        assert line_spool(spark.read, str(tmp_path)).count() == 0
+        return
+    for register in (register_httpwire, register_warcwire):
         register(spark)
     assert spark.read.format(fmt).option("path", str(tmp_path)).load().count() == 0
