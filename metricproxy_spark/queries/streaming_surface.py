@@ -891,7 +891,7 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full LIVE front door as one streamed query: a real HTTP
     server accepts loopback POSTs of sfx v2 JSON (the client posts a
     deterministic events subset in 11 requests), the accepted spool is
-    consumed EXACTLY ONCE through the httpwire streaming connector,
+    consumed EXACTLY ONCE through Spark's JSON file source,
     parsed by the same C3 parser as every other path, and aggregated
     per metric with decimal-exact sums in complete mode — so even the
     live-network streamed result hash-matches the DuckDB batch oracle.
@@ -1201,8 +1201,8 @@ _share_graphite_oracle()
 def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OTLP fully STREAMED: the OTLP/JSON requests of the live twin
     POSTed over real loopback HTTP to `/v1/metrics`, the accepted
-    spool consumed EXACTLY ONCE through the httpwire STREAMING
-    connector, decoded by the shared OTLP parser (explicit from_json
+    spool consumed EXACTLY ONCE through Spark's JSON file source
+    (``http_spool_stream``), decoded by the shared OTLP parser (explicit from_json
     schema + explodes) and rolled up per (name, type, host) with
     decimal-exact sums in complete mode — hash-matches the SAME
     DuckDB oracle as `ingest_otlp_json`-family on the deterministic
@@ -1318,7 +1318,7 @@ def stream_collectd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     statsd/influx/graphite: a real HTTP server accepts loopback POSTs
     to ``/post-collectd`` (each body a JSON array of write_http
     elements, chunked into 11 requests), the accepted spool is consumed
-    EXACTLY ONCE through the httpwire streaming connector, exploded by
+    EXACTLY ONCE through Spark's JSON file source, exploded by
     the same S6+C2 parser as ``ingest_collectd_explode`` (one datapoint
     per values[i], type[.type_instance][.dsname] naming, dstype
     mapping), and rolled up per (metric, metric_type) with
@@ -1502,7 +1502,7 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MessagePack fully STREAMED: binary msgpack frames POSTed over
     real loopback HTTP to `/v1/msgpack` as base64 text (the httpwire
     spool is string-typed — the documented binary-over-text seam),
-    consumed EXACTLY ONCE through the httpwire streaming connector,
+    consumed EXACTLY ONCE through Spark's JSON file source,
     unbase64'd back to bytes IN the stream, decoded by the
     `sources/msgpack.py` stream framer in Arrow batches, and rolled
     up per metric with decimal-exact sums in complete mode — the
@@ -1752,8 +1752,8 @@ def stream_gorilla_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CBOR fully STREAMED: RFC 8742 CBOR Sequence frames POSTed over
     real loopback HTTP to `/v1/cbor` as base64 text (the httpwire
-    spool's binary-over-text seam), consumed exactly once through the
-    httpwire streaming connector, unbase64'd IN the stream, decoded by
+    spool's binary-over-text seam), consumed exactly once through Spark's
+    JSON file source, unbase64'd IN the stream, decoded by
     the `sources/cbor.py` sequence framer in Arrow batches (every
     third datapoint indefinite-framed, so the streaming decode path
     covers RFC 8949 §3.2 too), and rolled up per metric with
@@ -1872,8 +1872,8 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     protobuf ``WriteRequest`` bodies POSTed over real loopback HTTP to
     the listener's ``/api/v1/write`` route (the spec's mandatory
     endpoint) as base64 text (the httpwire spool's binary-over-text
-    seam), consumed exactly once through the httpwire streaming
-    connector, unbase64'd IN the stream, decompressed + protobuf-walked
+    seam), consumed exactly once through Spark's JSON file
+    source, unbase64'd IN the stream, decompressed + protobuf-walked
     by the from-scratch codecs (`sources/snappy.py`,
     `sources/remote_write.py`) in Arrow batches, and rolled up per
     (metric, type-label) with decimal-exact sums in complete mode —
@@ -2005,8 +2005,8 @@ def stream_otlp_protobuf_pipeline(
     bodies POSTed over real loopback HTTP to the listener's
     ``/v1/metrics`` route (the OTLP/HTTP endpoint, here with the
     `application/x-protobuf` binding its spec pairs with the JSON one)
-    as base64 text, consumed exactly once through the httpwire
-    streaming connector, decoded by the from-scratch wire codec
+    as base64 text, consumed exactly once through Spark's JSON
+    file source, decoded by the from-scratch wire codec
     (`sources/otlp_protobuf.py`) in Arrow batches — per-type GAUGE
     (double) and monotonic SUM (sfixed64) metrics in every request —
     and rolled up per metric with decimal-exact sums in complete mode.
@@ -2275,7 +2275,7 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified per member) each wrapping a batch of carbon plaintext
     lines (the gzipped graphite bulk-upload shape), POSTed over real
     loopback HTTP to `/v1/gzip` as base64 text, consumed exactly once
-    through the httpwire streaming connector, ungzipped + line-parsed
+    through Spark's JSON file source, ungzipped + line-parsed
     IN the stream (Arrow batches), and rolled up per metric with
     decimal-exact sums in complete mode — the streamed member of the
     DEFLATE transport family (`ingest_gzip_documents` is the at-rest
@@ -2397,7 +2397,7 @@ def stream_kafka_recordbatch_pipeline(
     batches (CRC-32C-verified, compression cycling none/gzip/
     xerial-snappy/LZ4-frame — `sources/kafka_records.py`) are the
     producer's wire, POSTed over real loopback HTTP as base64 text,
-    consumed exactly once through the httpwire streaming connector,
+    consumed exactly once through Spark's JSON file source,
     batch-decoded IN the stream (CRC first, then the compression
     unwrap, then the zigzag record walk), and rolled up per type with
     decimal-exact sums in complete mode. `ingest_kafka_recordbatch`
@@ -2519,8 +2519,8 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     transport): ExportLogsServiceRequest blobs
     (`sources/otlp_logs.py` — severity enums, AnyValue bodies,
     KeyValue attrs) POSTed over real loopback HTTP to `/v1/metrics`'
-    sibling route as base64 text, consumed exactly once through the
-    httpwire streaming connector, protobuf-decoded IN the stream and
+    sibling route as base64 text, consumed exactly once through Spark's
+    JSON file source, protobuf-decoded IN the stream and
     rolled up per severity in complete mode (the user attribute folds
     into an exact BIGINT sum — streaming aggregation forbids DISTINCT,
     an honest micro-batch bound). `ingest_otlp_logs` is the at-rest
@@ -2642,8 +2642,8 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZSTD fully STREAMED — the 16th streamed wire family: each
     frame wraps a batch of carbon plaintext lines (the `.zst` bulk-
     upload shape), POSTed over real loopback HTTP to `/v1/zstd` as
-    base64 text, consumed exactly once through the httpwire streaming
-    connector, decoded IN the stream (Arrow batches) by the
+    base64 text, consumed exactly once through Spark's JSON file
+    source, decoded IN the stream (Arrow batches) by the
     from-scratch RFC 8878 decoder (`sources/zstd.py`) and rolled up
     per metric with decimal-exact sums in complete mode —
     `ingest_zstd_shards` is the at-rest twin. Frames ALTERNATE between

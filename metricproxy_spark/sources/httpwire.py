@@ -25,11 +25,11 @@ content_type, src_file)``.
   of parallelism is the file; files are bin-packed into partitions of
   ~``chunk_bytes`` (default 8 MB) so a million tiny requests don't
   become a million tasks, and a handful of huge ones still fan out.
-- Streaming: ``readStream`` over the same directory, with the spool
-  offset contract of :mod:`metricproxy_spark.sources.spool`; each
-  micro-batch's files are bin-packed like the batch reader's. A live
-  listener's spool streams through Spark's JSON file source instead
-  (:func:`metricproxy_spark.streaming.httplistener.http_spool_stream`).
+- Streaming: none here. Every request spool streams through Spark's
+  JSON file source
+  (:func:`metricproxy_spark.streaming.httplistener.http_spool_stream`),
+  which first hands the directory to :func:`adopt_request_files`: the
+  ``*.http`` files it holds become one ``req_*.jsonl`` segment.
 
 Body PARSING stays in the protocol modules
 (:func:`metricproxy_spark.sources.signalfx.parse_sfx_v2_json`,
@@ -41,17 +41,20 @@ feed ``sfxdim_*`` request dims, exactly how the listener routes.
 
 from __future__ import annotations
 
+import fcntl
 import gzip
 import json
 import os
+import zlib
 from typing import Tuple
 
 from pyspark.sql.datasource import DataSource, InputPartition
 from pyspark.sql.types import StringType, StructField, StructType
 
 from metricproxy_spark.sources.spool import (
+    SegmentSpool,
     SpoolReader,
-    SpoolStreamReader,
+    list_files,
     register,
 )
 
@@ -206,9 +209,6 @@ class HttpWireDataSource(DataSource):
             int(self.options.get("chunk_bytes", 8 * 1024 * 1024)),
         )
 
-    def streamReader(self, schema) -> SpoolStreamReader:
-        return SpoolStreamReader(self.reader(schema))
-
 
 def format_http_request(
     body: bytes,
@@ -232,6 +232,87 @@ def format_http_request(
         + f"Content-Length: {len(body)}\r\n\r\n"
     )
     return head.encode("latin-1") + body
+
+
+ADOPTING = ".adopting"
+
+
+def _request_lines(paths: list[str]) -> bytes:
+    """The request files ``paths`` as spool lines, in order. Raises
+    ``ValueError`` naming the first file whose body does not decode."""
+    lines = []
+    for p in paths:
+        with open(p, "rb") as fh:
+            raw = fh.read()
+        try:
+            body, method, path, query, ctype = parse_http_request(raw)
+        except (OSError, EOFError, zlib.error) as e:
+            raise ValueError(f"undecodable request body in {p}: {e}") from e
+        target = f"{path}?{query}" if query else path
+        lines.append(spool_line(method, target, ctype, body))
+    return b"".join(lines)
+
+
+def _finish_adoption(spool_dir: str, stage: str, lines: bytes | None = None) -> None:
+    """Publish the requests moved into ``stage`` as one segment, unless
+    a crash came after that, then remove ``stage``. ``lines`` are the
+    moved files' spool lines when the caller decoded them already."""
+    segment = os.path.join(stage, ".segment")
+    try:
+        # a second link: published before the crash
+        published = os.stat(segment).st_nlink > 1
+    except FileNotFoundError:
+        published = False
+    moved = [f for f in list_files(stage) if f.endswith(".http")]
+    if not published:
+        if lines is None:
+            lines = _request_lines(moved)
+        if lines:
+            with open(segment, "wb") as fh:
+                fh.write(lines)
+            spool = SegmentSpool(spool_dir, "req_", ".jsonl")
+            spool.skip_published()
+            spool.publish(segment)
+    for f in moved:
+        os.unlink(f)
+    if os.path.exists(segment):
+        os.unlink(segment)
+    os.rmdir(stage)
+
+
+def adopt_request_files(spool_dir: str) -> int:
+    """Turn the ``*.http`` request files of ``spool_dir`` into one
+    ``req_*.jsonl`` segment of :func:`spool_line` lines, in
+    :func:`list_files` order, published under the listener's
+    ``link(2)``-claimed names (:class:`SegmentSpool`); returns how many
+    files were adopted. A file that is written in place may be adopted
+    half written: stage it under a hidden name and rename it in.
+
+    Every request is published exactly once, under a crash at any step
+    and under callers racing on one directory: an adoption holds
+    ``flock`` on the directory, moves the files into the hidden
+    :data:`ADOPTING` directory, builds the segment there and links it
+    into the spool; the segment's second link marks it published (the
+    rule of ``SegmentSpool``'s recovery). The next call finishes a
+    crashed adoption first. A file whose gzip body does not decode
+    raises ``ValueError`` naming it before anything is moved."""
+    fd = os.open(spool_dir, os.O_RDONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        stage = os.path.join(spool_dir, ADOPTING)
+        if os.path.isdir(stage):
+            _finish_adoption(spool_dir, stage)
+        files = [f for f in list_files(spool_dir) if f.endswith(".http")]
+        if not files:
+            return 0
+        lines = _request_lines(files)
+        os.mkdir(stage)
+        for f in files:
+            os.rename(f, os.path.join(stage, os.path.basename(f)))
+        _finish_adoption(spool_dir, stage, lines)
+        return len(files)
+    finally:
+        os.close(fd)  # and with it the lock
 
 
 def register_httpwire(spark) -> None:

@@ -4,9 +4,10 @@ listeners.
 A live listener terminates the network into a *spool*: accepted data
 becomes files ``{prefix}{seq:012d}{suffix}`` in a spool directory,
 published atomically so a reader never sees a partial file. A
-connector reads the directory back as a batch scan or as a replayable
-stream. This is the Kafka split: the listener is the durable network
-terminator, Spark is the engine with replay.
+connector reads the directory back as a batch scan, and Spark's file
+sources read it as a replayable stream. This is the Kafka split: the
+listener is the durable network terminator, Spark is the engine with
+replay.
 
 One writer fills a spool: :class:`SegmentSpool` group-commits. Each
 accepted batch of lines is appended to the writer's open hidden
@@ -17,18 +18,16 @@ segment under ``flock``; ``resume()`` publishes the segments of dead
 writers, cut to their last complete line, and never touches a live
 writer's. Both live listeners (HTTP and line socket) write through it.
 
-**Offset contract.** A directory's files are listed by
-:func:`list_files` — names starting with ``_`` or ``.`` (markers, temp
-files, staged files and open segments) are hidden, and digit runs sort
-numerically (``req_2 < req_10``). The writer resumes after the highest
-existing sequence number (whatever the suffix) and claims each name
-with ``link(2)``, so names only ever *append* and two writers sharing a
-directory can never overwrite each other's files. Listener spools are
-streamed by Spark's own file source, which tracks files by name. The
-Python-source offset ``{"files": N}`` (:class:`SpoolStreamReader`: the
-first N listed files have been consumed) serves only ``httpwire``
-streams of hand-staged ``*.http`` request directories; the engine
-checkpoints it, so a restart replays deterministically.
+**Listing.** A directory's files are listed by :func:`list_files` —
+names starting with ``_`` or ``.`` (markers, temp files, staged files,
+open segments, ``httpwire``'s ``.adopting`` directory) are hidden, and
+digit runs sort numerically (``req_2 < req_10``). The writer resumes
+after the highest existing sequence number (whatever the suffix) and
+claims each name with ``link(2)``, so names only ever *append* and two
+writers sharing a directory can never overwrite each other's files.
+Every spool is streamed by Spark's own file source, which tracks files
+by name in its checkpoint; the Python connectors built on this module
+are batch readers.
 
 Sinks publish with a two-phase commit (:class:`SpoolWriter`): tasks
 write hidden ``._staged_`` files, the driver renames the complete set
@@ -36,8 +35,7 @@ into place and drops ``_SUCCESS``.
 
 The module is self-contained (stdlib + pyspark imports only), and so
 are the connectors built on it apart from importing it: :func:`register`
-pickles both BY VALUE, because the streaming source runner cannot
-import this repo.
+pickles both BY VALUE.
 """
 
 from __future__ import annotations
@@ -53,13 +51,12 @@ from pyspark import TaskContext
 from pyspark.sql.datasource import (
     DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
     WriterCommitMessage,
 )
 
-# The one no-op partition: an idle stream poll (start == end) and an
-# empty batch scan still plan a task, and it reads nothing.
+# The one no-op partition: an empty batch scan still plans a task, and
+# it reads nothing.
 IDLE = InputPartition(None)
 
 
@@ -92,8 +89,7 @@ def list_files(path: str) -> list[str]:
 class SpoolReader(DataSourceReader):
     """Batch scan of a spool directory. A connector supplies
     ``plan(files) -> [InputPartition]`` (its split rule) and
-    ``read_split(value)`` (its format decoder); the same two methods
-    drive :class:`SpoolStreamReader`."""
+    ``read_split(value)`` (its format decoder)."""
 
     def __init__(self, path: str):
         self.path = path
@@ -112,32 +108,6 @@ class SpoolReader(DataSourceReader):
         if partition is None or partition.value is None:
             return iter(())
         return self.read_split(partition.value)
-
-
-class SpoolStreamReader(DataSourceStreamReader):
-    """Offset ``{"files": N}`` over a :class:`SpoolReader`: each
-    micro-batch's new files are planned by the connector's batch rule
-    and decoded on the executors, never materialized on the driver."""
-
-    def __init__(self, reader: SpoolReader):
-        self._reader = reader
-
-    def initialOffset(self) -> dict:
-        return {"files": 0}
-
-    def latestOffset(self) -> dict:
-        return {"files": len(list_files(self._reader.path))}
-
-    def partitions(self, start: dict, end: dict):
-        files = list_files(self._reader.path)
-        new = files[start.get("files", 0) : end.get("files", 0)]
-        return self._reader.plan(new) or [IDLE]
-
-    def read(self, partition):
-        return self._reader.read(partition)
-
-    def commit(self, end: dict) -> None:
-        pass
 
 
 @dataclass
@@ -246,9 +216,16 @@ class SegmentSpool:
         self.appended = 0  # lines
 
     def resume(self) -> None:
+        """:meth:`skip_published`, then publish the dead writers'
+        segments."""
+        self.skip_published()
+        for f in sorted(os.listdir(self._dir)):
+            if f.startswith(SEGMENT):
+                self._recover(os.path.join(self._dir, f))
+
+    def skip_published(self) -> None:
         """Continue after the highest ``{prefix}{seq}`` of any suffix,
-        so new files sort after those of an earlier spool format, and
-        publish the dead writers' segments."""
+        so new files sort after those of an earlier spool format."""
         os.makedirs(self._dir, exist_ok=True)
         lo = len(self._prefix)
         seqs = [
@@ -259,9 +236,6 @@ class SegmentSpool:
         ]
         with self._lock:
             self._seq = max(seqs) + 1 if seqs else 0
-        for f in sorted(os.listdir(self._dir)):
-            if f.startswith(SEGMENT):
-                self._recover(os.path.join(self._dir, f))
 
     def start(self, seal_interval: float) -> None:
         self.resume()
@@ -289,9 +263,10 @@ class SegmentSpool:
             self._seq += 1
             return seq
 
-    def _publish(self, src: str) -> str:
+    def publish(self, src: str) -> str:
         """Hard-link the complete file ``src`` under the next free
-        name; returns the new path."""
+        name; returns the new path. ``src`` keeps its own name, so its
+        link count tells whether a crash came before or after this."""
         seq = self._claim()
         while True:
             final = os.path.join(
@@ -329,7 +304,7 @@ class SegmentSpool:
                     # the file source drops files much older than the
                     # newest it has seen (maxFileAge)
                     os.utime(path)
-                    self._publish(path)
+                    self.publish(path)
             os.unlink(path)
         finally:
             os.close(fd)
@@ -371,7 +346,7 @@ class SegmentSpool:
         with self._lock:
             if self._fd is None:
                 return None
-            final = self._publish(self._segment)
+            final = self.publish(self._segment)
             os.unlink(self._segment)
             os.close(self._fd)
             self._fd = None
@@ -394,6 +369,10 @@ def pickle_module_by_value(module_name: str) -> None:
     pickling embeds the class bodies in the pickle itself, so the
     runner needs no import path at all. Only valid for modules that
     are self-contained (stdlib + pyspark imports only).
+
+    No connector has a stream reader any more, so that runner no
+    longer loads one; the batch connectors still register by value
+    until a run without it shows executors resolve them by reference.
     """
     import sys
 

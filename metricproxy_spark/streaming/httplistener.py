@@ -10,7 +10,9 @@ ACCEPTS live network POSTs and terminates them into a spool directory
 that the engine reads back:
 
 - batch: ``spark.read.format("httpwire").option("path", spool)``
-- streaming: :func:`http_spool_stream` (Spark's JSON file source).
+- streaming: :func:`http_spool_stream` (Spark's JSON file source, for
+  every spool; ``*.http`` request files are adopted into a ``*.jsonl``
+  segment when the stream is planned).
 
 **Spool format.** Each accepted request is decoded at the door —
 gunzipped if ``Content-Encoding: gzip``, then UTF-8 with errors
@@ -64,14 +66,11 @@ from pyspark.sql import functions as F
 
 from metricproxy_spark.sources.httpwire import (
     LINE_SCHEMA,
+    adopt_request_files,
     decode_body,
     spool_line,
 )
-from metricproxy_spark.sources.spool import (
-    SEAL_INTERVAL_S,
-    SegmentSpool,
-    list_files,
-)
+from metricproxy_spark.sources.spool import SEAL_INTERVAL_S, SegmentSpool
 
 
 # sfx v2/v1 + collectd write_http + the OTLP/HTTP metrics binding
@@ -237,24 +236,18 @@ def http_spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
     the ``httpwire`` columns — compose with the protocol parsers for a
     full live pipeline.
 
-    A listener's spool (``*.jsonl`` segments) streams through Spark's
-    JSON file source, so no Python worker runs on the read side. A
-    directory that already holds ``*.http`` request files when the
-    stream is planned is a hand-staged request directory and streams
-    through ``httpwire``, which reads both formats."""
-    if os.path.exists(spool_dir) and any(
-        f.endswith(".http") for f in list_files(spool_dir)
-    ):
-        from metricproxy_spark.sources.httpwire import register_httpwire
-
-        register_httpwire(spark)
-        return (
-            spark.readStream.format("httpwire")
-            .option("path", spool_dir)
-            .load()
-        )
+    The spool's ``req_*.jsonl`` segments stream through Spark's JSON
+    file source, so no Python worker runs on the read side. ``*.http``
+    request files in the directory (a hand-staged request directory, or
+    a spool written before the listener spooled JSON lines) are first
+    adopted into one segment by
+    :func:`~metricproxy_spark.sources.httpwire.adopt_request_files`; an
+    adopted row's ``src_file`` is that segment's name. A ``*.http`` file
+    dropped in while the stream runs is adopted when a stream over the
+    directory is next planned, e.g. at a restart."""
     # the file source refuses a missing directory
     os.makedirs(spool_dir, exist_ok=True)
+    adopt_request_files(spool_dir)
     return (
         spark.readStream.schema(LINE_SCHEMA)
         .option("pathGlobFilter", "*.jsonl")

@@ -412,18 +412,18 @@ _PARITY_REQUESTS = [
 
 
 def test_jsonl_spool_reads_like_request_files(spark, tmp_path):
-    """The same requests, spooled by the listener and read through
-    ``http_spool_stream`` (JSON file source), and staged as ``.http``
-    request files read through ``httpwire``, give identical rows."""
+    """The same requests, spooled by the listener, and staged as
+    ``.http`` request files, both stream through ``http_spool_stream``
+    on the JSON file source and give the rows a batch ``httpwire`` read
+    of the staged files gives (``src_file`` aside: an adopted row's is
+    its segment's name)."""
     from metricproxy_spark.sources.httpwire import format_http_request
 
     spool, staged = tmp_path / "spool", tmp_path / "staged"
     staged.mkdir()
     with HttpIngestListener(str(spool)) as lis:
         for i, (body, target, headers) in enumerate(_PARITY_REQUESTS):
-            # one request per segment, so file names line up
             assert _post(lis.host, lis.port, target, body, headers)[0] == 200
-            lis.seal()
             path, _, query = target.partition("?")
             raw = format_http_request(
                 body, path=path, query=query, content_type=headers.get("Content-Type", "")
@@ -433,6 +433,12 @@ def test_jsonl_spool_reads_like_request_files(spark, tmp_path):
                     b"\r\nContent-Length", b"\r\nContent-Encoding: gzip\r\nContent-Length"
                 )
             (staged / f"req_{i:012d}.http").write_bytes(raw)
+    register_httpwire(spark)
+    want = sorted(
+        tuple(r)[:-1]
+        for r in spark.read.format("httpwire").option("path", str(staged)).load().collect()
+    )
+    assert len(want) == len(_PARITY_REQUESTS)
 
     def rows(directory):
         out = []
@@ -446,24 +452,23 @@ def test_jsonl_spool_reads_like_request_files(spark, tmp_path):
         q.awaitTermination()
         assert q.lastProgress is not None
         source = q.lastProgress["sources"][0]["description"]
-        return sorted((tuple(r)[:-1], r.src_file.split(".")[0]) for r in out), source
+        return sorted(tuple(r)[:-1] for r in out), source
 
-    got, via_json = rows(spool)
-    want, via_httpwire = rows(staged)
-    assert via_json.startswith("FileStreamSource")
-    assert not via_httpwire.startswith("FileStreamSource")
-    assert len(got) == len(_PARITY_REQUESTS)
+    got, via_listener = rows(spool)
+    adopted, via_staged = rows(staged)
+    assert via_listener.startswith("FileStreamSource")
+    assert via_staged.startswith("FileStreamSource")
     assert got == want
+    assert adopted == want
     # httpwire over the listener's spool reads the same rows too
-    register_httpwire(spark)
     batch = spark.read.format("httpwire").option("path", str(spool)).load().collect()
-    assert sorted((tuple(r)[:-1], r.src_file.split(".")[0]) for r in batch) == want
+    assert sorted(tuple(r)[:-1] for r in batch) == want
 
 
 def test_config_listener_streams_through_the_file_source(spark, tmp_path):
-    """A ``ListenAddr`` signalfx stream is planned on Spark's JSON file
-    source; a staged ``.http`` request directory still streams through
-    ``httpwire``, and both deliver every point."""
+    """A ``ListenAddr`` signalfx stream and a staged ``.http`` request
+    directory are both planned on Spark's JSON file source, and both
+    deliver every point."""
     from metricproxy_spark.plans import build_pipeline
     from metricproxy_spark.sources.httpwire import format_http_request
 
@@ -500,5 +505,5 @@ def test_config_listener_streams_through_the_file_source(spark, tmp_path):
     assert desc.startswith("FileStreamSource"), desc
     assert stats["datapoints_in"] == n == 4
     desc, stats, n = drain(staged, False, "staged")
-    assert not desc.startswith("FileStreamSource"), desc
+    assert desc.startswith("FileStreamSource"), desc
     assert stats["datapoints_in"] == n == 6
