@@ -11,10 +11,18 @@ Reference config shape [P: config/config.go — ProxyConfig]:
 
 One listener in the reference is a network server; here it is a
 streaming source directory (the file source is the testable stand-in —
-a Kafka topic drops in the same slot in production). A ``ListenAddr``
-binds a real server that spools into that directory: HTTP for
-signalfx, a line socket for carbon, statsd and influx (TCP, or
-``Protocol``); parquet takes none. Every listener's
+a Kafka topic drops in the same slot in production). Each ``Type`` is
+declared once, as the row of :data:`LISTENERS` that gives both its
+stream and its server. A ``ListenAddr`` binds a real server that spools into
+that directory: HTTP for signalfx, a line socket for carbon, statsd
+and influx (TCP, or ``Protocol``); parquet has no server, so it takes
+none. Every server is built before any starts. A spool listener reads
+through one ``spark.readStream`` reader built per spec: signalfx
+through :func:`~metricproxy_spark.streaming.httplistener.http_spool`,
+carbon, statsd and influx through
+:func:`~metricproxy_spark.streaming.socketlistener.line_spool`.
+``MaxFilesPerTrigger`` sets ``maxFilesPerTrigger`` for every type,
+parquet included. Every listener's
 output is normalized to the canonical datapoint schema (§2.2) before
 the fan-out, exactly the reference's single in-memory datapoint model.
 All ForwardTo entries receive all datapoints (demux F1); nothing is
@@ -29,16 +37,21 @@ parallelism is the source's split count.
 from __future__ import annotations
 
 import json
-import os
 import warnings
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 
 from metricproxy_spark.sources.carbon import (
     commakeys_deconstruct,
     parse_carbon_lines,
+)
+from metricproxy_spark.streaming.httplistener import (
+    HttpIngestListener,
+    SpoolServer,
+    http_spool,
 )
 from metricproxy_spark.streaming.pipeline import ProxyPipeline, SinkSpec
 from metricproxy_spark.streaming.sinks import (
@@ -94,102 +107,131 @@ def _canonicalize(df: DataFrame) -> DataFrame:
     return out.select(*CANONICAL_COLS)
 
 
-def _build_listener(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
+def _carbon(
+    spark: SparkSession, reader: DataStreamReader, spec: dict[str, Any]
+) -> DataFrame:
+    parsed = parse_carbon_lines(line_spool(reader, spec["Source"]))
+    decon = spec.get("MetricDeconstructor", "identity")
+    if decon == "commakeys":
+        return commakeys_deconstruct(parsed, "metric")
+    if decon != "identity":
+        raise ValueError(f"unknown MetricDeconstructor {decon!r}")
+    return parsed
+
+
+def _parquet(
+    spark: SparkSession, reader: DataStreamReader, spec: dict[str, Any]
+) -> DataFrame:
+    # pre-normalized datapoints (the internal replay/loopback path); the
+    # stream needs the schema of the staged files, so it builds its own
+    # reader with the same bound
+    return read_stream_table(
+        spark, spec["Source"], spec.get("MaxFilesPerTrigger")
+    )
+
+
+def _signalfx(
+    spark: SparkSession, reader: DataStreamReader, spec: dict[str, Any]
+) -> DataFrame:
+    # The reference's HTTP front door [P: signalfxlistener.go].
+    from metricproxy_spark.sources.signalfx import parse_sfx_v2_json
+
+    requests = http_spool(reader, spec["Source"])
+    parsed = parse_sfx_v2_json(requests, body_col="body")
+    return parsed.select("metric", "value", "ts", "metric_type", "dimensions")
+
+
+def _statsd(
+    spark: SparkSession, reader: DataStreamReader, spec: dict[str, Any]
+) -> DataFrame:
+    # statsd lines carry no timestamp — points are stamped at
+    # processing time, the statsd-server contract.
+    from metricproxy_spark.sources.statsd import parse_statsd_lines
+
+    lines = line_spool(reader, spec["Source"]).select("line")
+    parsed = parse_statsd_lines(lines)
+    mtype_map = (
+        F.when(F.col("mtype") == "g", "gauge")
+        .when(F.col("mtype") == "ms", "gauge")
+        .when(F.col("mtype") == "c", "count")
+        .otherwise("count")  # sets report as counts of members
+    )
+    return parsed.select(
+        F.col("name").alias("metric"),
+        F.col("scaled").cast("double").alias("value"),
+        F.when(F.col("mtype") == "s", F.col("raw_val")).alias("value_str"),
+        F.current_timestamp().alias("ts"),
+        mtype_map.alias("metric_type"),
+    )
+
+
+def _influx(
+    spark: SparkSession, reader: DataStreamReader, spec: dict[str, Any]
+) -> DataFrame:
+    # the ns wire timestamp truncates to the canonical µs timestamp and
+    # tags ride the dimensions map
+    from metricproxy_spark.sources.influx import parse_influx_lines
+
+    lines = line_spool(reader, spec["Source"]).select("line")
+    typed = parse_influx_lines(lines)
+    return typed.select(
+        F.col("measurement").alias("metric"),
+        F.col("val").alias("value"),
+        F.expr("timestamp_micros(ts_ns div 1000)").alias("ts"),
+        F.lit("gauge").alias("metric_type"),
+        F.map_from_arrays(
+            F.array(F.lit("host"), F.lit("region")),
+            F.array("host", "region"),
+        ).alias("dimensions"),
+    )
+
+
+def _line_server(
+    spec: dict[str, Any], host: str, port: int
+) -> LineSocketListener:
+    mode = spec.get("Protocol", "tcp").lower()
+    return LineSocketListener(spec["Source"], mode, host, port)
+
+
+def _http_server(
+    spec: dict[str, Any], host: str, port: int
+) -> HttpIngestListener:
+    return HttpIngestListener(spec["Source"], host, port)
+
+
+# Each ListenFrom Type, declared once: its stream from the spec's
+# reader, and the server a ListenAddr binds (None: it takes none).
+LISTENERS = {
+    "carbon": (_carbon, _line_server),
+    "statsd": (_statsd, _line_server),
+    "influx": (_influx, _line_server),
+    "signalfx": (_signalfx, _http_server),
+    "parquet": (_parquet, None),
+}
+
+
+def _build_listener(
+    spark: SparkSession, spec: dict[str, Any]
+) -> tuple[DataFrame, SpoolServer | None]:
+    """One ``ListenFrom`` entry: its canonical stream and, when it has a
+    ``ListenAddr``, its unstarted server spooling into ``Source``."""
     ltype = spec["Type"].lower()
-    src = spec["Source"]  # directory (file stream); Kafka topic in prod
-    mft = spec.get("MaxFilesPerTrigger")
-    if ltype == "carbon":
-        if spec.get("ListenAddr"):
-            # the listener spools its lines_*.wire files into Source;
-            # the file source refuses a directory that is not there yet
-            os.makedirs(src, exist_ok=True)
-        lines = (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", mft)
-            .load(src)
-            if mft
-            else spark.readStream.format("text").load(src)
+    if ltype not in LISTENERS:
+        raise ValueError(f"unknown listener type {spec['Type']!r}")
+    stream, make_server = LISTENERS[ltype]
+    server = None
+    if spec.get("ListenAddr"):
+        if make_server is None:
+            raise ValueError(f"a {ltype} listener takes no ListenAddr")
+        host, _, port = spec["ListenAddr"].rpartition(":")
+        server = make_server(spec, host or "127.0.0.1", int(port))
+    # Source is a directory (file stream); a Kafka topic in production
+    reader = spark.readStream
+    if spec.get("MaxFilesPerTrigger"):
+        reader = reader.option(
+            "maxFilesPerTrigger", spec["MaxFilesPerTrigger"]
         )
-        lines = lines.withColumnRenamed("value", "line")
-        parsed = parse_carbon_lines(lines, "line")
-        decon = spec.get("MetricDeconstructor", "identity")
-        if decon == "commakeys":
-            parsed = commakeys_deconstruct(parsed, "metric")
-        elif decon != "identity":
-            raise ValueError(f"unknown MetricDeconstructor {decon!r}")
-        return _canonicalize(parsed)
-    if ltype == "parquet":
-        if spec.get("ListenAddr"):
-            raise ValueError("a parquet listener takes no ListenAddr")
-        # pre-normalized datapoints (the internal replay/loopback path)
-        return _canonicalize(
-            read_stream_table(spark, src, max_files_per_trigger=mft)
-        )
-    if ltype == "signalfx":
-        # The reference's HTTP front door [P: signalfxlistener.go].
-        # ``Source`` is the request spool (httpwire at-rest format); a
-        # LIVE server bound per ``ListenAddr`` is started separately by
-        # build_pipeline and spools into the same directory, so config
-        # users get a real network endpoint feeding this stream.
-        from metricproxy_spark.sources.signalfx import parse_sfx_v2_json
-        from metricproxy_spark.streaming.httplistener import (
-            http_spool_stream,
-        )
-
-        parsed = parse_sfx_v2_json(
-            http_spool_stream(spark, src), body_col="body"
-        )
-        return _canonicalize(
-            parsed.select("metric", "value", "ts", "metric_type", "dimensions")
-        )
-    if ltype == "statsd":
-        # UDP/TCP statsd terminated by the line-socket listener; the
-        # spool streams through Spark's text source and the SAME
-        # parser as the at-rest/live/streamed query twins.
-        # statsd lines carry no timestamp — points are stamped at
-        # processing time, the statsd-server contract.
-        from metricproxy_spark.sources.statsd import parse_statsd_lines
-
-        lines = line_spool(spark.readStream, src)
-        parsed = parse_statsd_lines(lines.select("line"))
-        mtype_map = (
-            F.when(F.col("mtype") == "g", "gauge")
-            .when(F.col("mtype") == "ms", "gauge")
-            .when(F.col("mtype") == "c", "count")
-            .otherwise("count")  # sets report as counts of members
-        )
-        return _canonicalize(
-            parsed.select(
-                F.col("name").alias("metric"),
-                F.col("scaled").cast("double").alias("value"),
-                F.when(F.col("mtype") == "s", F.col("raw_val")).alias(
-                    "value_str"
-                ),
-                F.current_timestamp().alias("ts"),
-                mtype_map.alias("metric_type"),
-            )
-        )
-    if ltype == "influx":
-        # Influx line protocol through the same spool chain; the ns
-        # wire timestamp truncates to the canonical µs timestamp and
-        # tags ride the dimensions map.
-        from metricproxy_spark.sources.influx import parse_influx_lines
-
-        lines = line_spool(spark.readStream, src)
-        typed = parse_influx_lines(lines.select("line"))
-        return _canonicalize(
-            typed.select(
-                F.col("measurement").alias("metric"),
-                F.col("val").alias("value"),
-                F.expr("timestamp_micros(ts_ns div 1000)").alias("ts"),
-                F.lit("gauge").alias("metric_type"),
-                F.map_from_arrays(
-                    F.array(F.lit("host"), F.lit("region")),
-                    F.array("host", "region"),
-                ).alias("dimensions"),
-            )
-        )
-    raise ValueError(f"unknown listener type {spec['Type']!r}")
+    return _canonicalize(stream(spark, reader, spec)), server
 
 
 def _build_sink(spec: dict[str, Any]) -> SinkSpec:
@@ -216,10 +258,10 @@ def build_pipeline(
     ``run_available_now(checkpoint_dir)`` (drain mode) or ``start``.
     """
     cfg = load_config(config)
-    streams = [_build_listener(spark, s) for s in cfg["ListenFrom"]]
-    source = streams[0]
-    for s in streams[1:]:
-        source = source.unionByName(s)
+    listeners = [_build_listener(spark, s) for s in cfg["ListenFrom"]]
+    source = listeners[0][0]
+    for stream, _ in listeners[1:]:
+        source = source.unionByName(stream)
     sinks = [_build_sink(s) for s in cfg["ForwardTo"]]
     for key, reason in (
         ("BufferSize", "the spool is the buffer; nothing accepted is dropped"),
@@ -228,38 +270,15 @@ def build_pipeline(
         if any(key in fwd for fwd in cfg["ForwardTo"]):
             warnings.warn(f"ForwardTo {key} has no effect: {reason}", stacklevel=2)
     pipe = ProxyPipeline(source=source, sinks=sinks)
-    # Live network endpoints: a signalfx listener with a ListenAddr
-    # gets a REAL HTTP server spooling into its Source dir; a carbon,
-    # statsd or influx one a line socket (TCP, or ``Protocol``). The caller
-    # owns the lifecycle via pipe.live_listeners (stop() when done).
-    # Started LAST, after every listener/sink spec has parsed, and
-    # unwound on failure: a bad ListenAddr in the Nth spec must not
-    # leak the N-1 already-bound ports/threads (round-4 ADVICE).
+    # The caller owns the servers via pipe.live_listeners (stop() when
+    # done). They start LAST, after every listener/sink spec has parsed
+    # and every server is built, and are unwound on failure: a port the
+    # Nth fails to bind must not leak the N-1 already-bound ports and
+    # threads.
+    pipe.live_listeners.extend(lis for _, lis in listeners if lis is not None)
     try:
-        for spec in cfg["ListenFrom"]:
-            ltype = spec["Type"].lower()
-            if not spec.get("ListenAddr"):
-                continue
-            host, _, port = spec["ListenAddr"].rpartition(":")
-            if ltype == "signalfx":
-                from metricproxy_spark.streaming.httplistener import (
-                    HttpIngestListener,
-                )
-
-                lis = HttpIngestListener(
-                    spec["Source"], host=host or "127.0.0.1", port=int(port)
-                )
-                lis.start()
-                pipe.live_listeners.append(lis)
-            elif ltype in ("carbon", "statsd", "influx"):
-                lis = LineSocketListener(
-                    spec["Source"],
-                    mode=spec.get("Protocol", "tcp").lower(),
-                    host=host or "127.0.0.1",
-                    port=int(port),
-                )
-                lis.start()
-                pipe.live_listeners.append(lis)
+        for lis in pipe.live_listeners:
+            lis.start()
     except Exception:
         pipe.close_listeners()
         raise

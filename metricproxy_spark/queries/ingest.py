@@ -1058,16 +1058,17 @@ def ingest_carbon_connector_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ingest_http_listener_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 LIVE: a real HTTP server (``streaming.httplistener``) binds a
     loopback port, a client posts sfx v2 JSON bodies (half gzip-encoded)
-    over actual TCP, and the accepted requests — spooled verbatim in
-    httpwire at-rest format — are parsed by the SAME C3 parser as every
-    other path. The oracle re-derives every field from the source
+    over actual TCP, and the accepted requests — spooled as JSON lines
+    and read back in batch by Spark's JSON file source
+    (``http_spool(spark.read, spool)``) — are parsed by the SAME C3
+    parser as every other path. The oracle re-derives every field from the source
     table, so the whole live chain (accept, Content-Length, gzip
     decode, JSON unpivot) is value-checked end to end.
 
     The posting loop is the CLIENT side of the wire — a bounded load
     generator that by definition holds its own payload (at 100 TB the
     clients are the fleet posting to many listener replicas; the
-    engine side stays distributed: spool → connector scan → parse).
+    engine side stays distributed: spool → file scan → parse).
     The posted subset is deterministic (event_id % 5 = 0 and half the
     users, grouped into
     requests by user_id % 23) so the result is a pure function of the
@@ -1076,12 +1077,11 @@ def ingest_http_listener_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import http.client
     import json as _json
 
-    from metricproxy_spark.io import ensure_package_on_workers
-    from metricproxy_spark.sources.httpwire import register_httpwire
-    from metricproxy_spark.streaming.httplistener import HttpIngestListener
+    from metricproxy_spark.streaming.httplistener import (
+        HttpIngestListener,
+        http_spool,
+    )
 
-    ensure_package_on_workers(spark)
-    register_httpwire(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .where((F.col("event_id") % 5 == 0) & (F.col("user_id") % 4 < 2))
@@ -1128,7 +1128,7 @@ def ingest_http_listener_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             resp = conn.getresponse()
             assert resp.status == 200 and resp.read() == b'"OK"'
         conn.close()
-    reqs = spark.read.format("httpwire").option("path", spool).load()
+    reqs = http_spool(spark.read, spool)
     parsed = parse_sfx_v2_json(reqs, body_col="body")
     return parsed.select(
         "metric",
@@ -1751,8 +1751,9 @@ def ingest_otlp_http_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``/v1/metrics`` OTLP/HTTP binding, half the requests
     gzip-encoded as OTLP exporters do) into
     :class:`~metricproxy_spark.streaming.httplistener.
-    HttpIngestListener`, spooled verbatim, scanned back through the
-    ``httpwire`` connector and decoded/aggregated by the SAME
+    HttpIngestListener`, spooled as JSON lines, read back in batch by
+    Spark's JSON file source (``http_spool(spark.read, spool)``) and
+    decoded/aggregated by the SAME
     functions as the at-rest twin — identical oracle arithmetic, so
     accept, Content-Length, gzip decode, nested JSON parse and rollup
     are all value-checked end to end.
@@ -1763,17 +1764,16 @@ def ingest_otlp_http_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import gzip as _gzip
     import http.client
 
-    from metricproxy_spark.io import ensure_package_on_workers
-    from metricproxy_spark.sources.httpwire import register_httpwire
     from metricproxy_spark.sources.otlp import (
         aggregate_otlp,
         otlp_request_json,
         parse_otlp_requests,
     )
-    from metricproxy_spark.streaming.httplistener import HttpIngestListener
+    from metricproxy_spark.streaming.httplistener import (
+        HttpIngestListener,
+        http_spool,
+    )
 
-    ensure_package_on_workers(spark)
-    register_httpwire(spark)
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") % 13 == 0)
     from metricproxy_spark.operators.scale import guarded_wire_payload
 
@@ -1794,7 +1794,7 @@ def ingest_otlp_http_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             assert resp.status == 200
             resp.read()
         conn.close()
-    reqs = spark.read.format("httpwire").option("path", spool).load()
+    reqs = http_spool(spark.read, spool)
     return aggregate_otlp(
         parse_otlp_requests(reqs.select(F.col("body").alias("request")))
     )

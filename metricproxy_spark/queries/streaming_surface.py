@@ -904,7 +904,7 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.sources.signalfx import parse_sfx_v2_json
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     from metricproxy_spark.operators.scale import guarded_wire_pandas
@@ -947,7 +947,7 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         conn.close()
         lis.seal()  # every acked request visible to the stream
         parsed = parse_sfx_v2_json(
-            http_spool_stream(spark, spool), body_col="body"
+            http_spool(spark.readStream, spool), body_col="body"
         )
         agg = parsed.groupBy(F.col("metric")).agg(
             F.count(F.lit(1)).alias("n"),
@@ -1202,7 +1202,7 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OTLP fully STREAMED: the OTLP/JSON requests of the live twin
     POSTed over real loopback HTTP to `/v1/metrics`, the accepted
     spool consumed EXACTLY ONCE through Spark's JSON file source
-    (``http_spool_stream``), decoded by the shared OTLP parser (explicit from_json
+    (``http_spool``), decoded by the shared OTLP parser (explicit from_json
     schema + explodes) and rolled up per (name, type, host) with
     decimal-exact sums in complete mode — hash-matches the SAME
     DuckDB oracle as `ingest_otlp_json`-family on the deterministic
@@ -1221,7 +1221,7 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     ensure_package_on_workers(spark)
@@ -1249,7 +1249,7 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             resp.read()
         conn.close()
     points = parse_otlp_requests(
-        http_spool_stream(spark, spool).select(
+        http_spool(spark.readStream, spool).select(
             F.col("body").alias("request")
         )
     )
@@ -1332,7 +1332,7 @@ def stream_collectd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.sources.collectd import parse_collectd_json
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     ensure_package_on_workers(spark)
@@ -1389,7 +1389,7 @@ def stream_collectd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         conn.close()
         lis.seal()  # every acked request visible to the stream
         parsed = parse_collectd_json(
-            http_spool_stream(spark, spool), body_col="body"
+            http_spool(spark.readStream, spool), body_col="body"
         )
         agg = parsed.groupBy("metric", "metric_type").agg(
             F.count(F.lit(1)).alias("n_points"),
@@ -1518,7 +1518,7 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.operators.scale import guarded_wire_pandas
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     ensure_package_on_workers(spark)
@@ -1559,7 +1559,7 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             resp.read()
         conn.close()
 
-    bodies = http_spool_stream(spark, spool).select(
+    bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -1770,7 +1770,7 @@ def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.operators.scale import guarded_wire_pandas
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     ensure_package_on_workers(spark)
@@ -1815,7 +1815,7 @@ def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             resp.read()
         conn.close()
 
-    bodies = http_spool_stream(spark, spool).select(
+    bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -1889,7 +1889,7 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.operators.scale import guarded_wire_pandas
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     ensure_package_on_workers(spark)
@@ -1937,7 +1937,7 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             resp.read()
         conn.close()
 
-    frames = http_spool_stream(spark, spool).select(
+    frames = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("body")
     )
 
@@ -2023,7 +2023,7 @@ def stream_otlp_protobuf_pipeline(
     from metricproxy_spark.operators.scale import guarded_wire_pandas
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     ensure_package_on_workers(spark)
@@ -2091,7 +2091,7 @@ def stream_otlp_protobuf_pipeline(
             resp.read()
         conn.close()
 
-    frames = http_spool_stream(spark, spool).select(
+    frames = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("body")
     )
 
@@ -2292,7 +2292,7 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.operators.scale import guarded_wire_pandas
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     ensure_package_on_workers(spark)
@@ -2334,7 +2334,7 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             resp.read()
         conn.close()
 
-    bodies = http_spool_stream(spark, spool).select(
+    bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -2413,7 +2413,7 @@ def stream_kafka_recordbatch_pipeline(
     from metricproxy_spark.operators.scale import guarded_wire_pandas
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     ensure_package_on_workers(spark)
@@ -2455,7 +2455,7 @@ def stream_kafka_recordbatch_pipeline(
             resp.read()
         conn.close()
 
-    bodies = http_spool_stream(spark, spool).select(
+    bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -2534,7 +2534,7 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.operators.scale import guarded_wire_pandas
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     ensure_package_on_workers(spark)
@@ -2588,7 +2588,7 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             resp.read()
         conn.close()
 
-    bodies = http_spool_stream(spark, spool).select(
+    bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 
@@ -2663,7 +2663,7 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.operators.scale import guarded_wire_pandas
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
-        http_spool_stream,
+        http_spool,
     )
 
     ensure_package_on_workers(spark)
@@ -2715,7 +2715,7 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             resp.read()
         conn.close()
 
-    bodies = http_spool_stream(spark, spool).select(
+    bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
     )
 

@@ -34,8 +34,12 @@ def parse_carbon_lines(
     meta (raw-line passthrough, C7). Invalid rows (field count != 3,
     empty name, unparseable timestamp) are dropped when
     ``drop_invalid`` else kept with ``is_valid = false`` for counting.
+    One trailing ``\\r`` (a CRLF line end) is stripped first.
     """
     line = F.col(line_col)
+    line = F.when(
+        line.endswith("\r"), line.substr(F.lit(1), F.length(line) - 1)
+    ).otherwise(line)
     parts = F.split(line, " ")
     name = F.get(parts, 0)
     raw_value = F.get(parts, 1)

@@ -27,7 +27,7 @@ content_type, src_file)``.
   become a million tasks, and a handful of huge ones still fan out.
 - Streaming: none here. Every request spool streams through Spark's
   JSON file source
-  (:func:`metricproxy_spark.streaming.httplistener.http_spool_stream`),
+  (:func:`metricproxy_spark.streaming.httplistener.http_spool`),
   which first hands the directory to :func:`adopt_request_files`: the
   ``*.http`` files it holds become one ``req_*.jsonl`` segment.
 

@@ -9,7 +9,8 @@ protocol/demultiplexer/demultiplexer.go; dp/dpbuffered/
 bufferedforwarder.go]. This package re-expresses that runtime on
 Structured Streaming:
 
-- file/rate/socket ``readStream`` replaces listeners (``source``)
+- listeners spool into a directory replayed by the file ``readStream``
+  (``source``, ``httplistener``, ``socketlistener``)
 - driver-side per-batch counts replace atomic counters (the line
   write's ``Observation`` is the batch count)
 - ``foreachBatch`` replaces the demultiplexer: one job writes every

@@ -7,12 +7,10 @@ and ``GET /healthz`` answers the load balancer
 signalfxlistener.go — healthz handler]. A Spark driver can host the
 same front door: this module runs a real ``ThreadingHTTPServer`` that
 ACCEPTS live network POSTs and terminates them into a spool directory
-that the engine reads back:
-
-- batch: ``spark.read.format("httpwire").option("path", spool)``
-- streaming: :func:`http_spool_stream` (Spark's JSON file source, for
-  every spool; ``*.http`` request files are adopted into a ``*.jsonl``
-  segment when the stream is planned).
+that the engine reads back with :func:`http_spool` (Spark's JSON
+file source), in batch (``http_spool(spark.read, spool)``) or in
+stream (``http_spool(spark.readStream, spool)``); ``*.http`` request
+files are adopted into a ``*.jsonl`` segment when the read is planned.
 
 **Spool format.** Each accepted request is decoded at the door —
 gunzipped if ``Content-Encoding: gzip``, then UTF-8 with errors
@@ -39,8 +37,9 @@ cut to their last complete line, so an acked request is never lost to
 a process crash. A live listener's segment is held under ``flock`` and
 never published by anyone else: listeners may share a directory. The
 spool mechanics, the periodic sealer included, are
-:class:`metricproxy_spark.sources.spool.SegmentSpool`, which the
-line-socket listener shares.
+:class:`metricproxy_spark.sources.spool.SegmentSpool`; the server
+lifecycle around it is :class:`SpoolServer`. The line-socket listener
+shares both.
 
 One body parser
 (:func:`metricproxy_spark.sources.signalfx.parse_sfx_v2_json`, …)
@@ -57,12 +56,14 @@ client cannot fill the driver's memory), and nothing is spooled.
 from __future__ import annotations
 
 import os
+import socketserver
 import threading
 import zlib
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 
 from metricproxy_spark.sources.httpwire import (
     LINE_SCHEMA,
@@ -117,6 +118,19 @@ def _read_body(handler: BaseHTTPRequestHandler) -> bytes | None:
     return handler.rfile.read(int(digits))
 
 
+def _get_healthz(handler: BaseHTTPRequestHandler) -> None:
+    """S7: ``GET /healthz`` answers ``OK``; any other GET is a 404."""
+    if handler.path.split("?")[0] != "/healthz":
+        handler.send_error(404)
+        return
+    body = b"OK"
+    handler.send_response(200)
+    handler.send_header("Content-Type", "text/plain")
+    handler.send_header("Content-Length", str(len(body)))
+    handler.end_headers()
+    handler.wfile.write(body)
+
+
 class _IngestHandler(BaseHTTPRequestHandler):
     # set per-server via a subclass attribute
     listener: "HttpIngestListener"
@@ -124,16 +138,7 @@ class _IngestHandler(BaseHTTPRequestHandler):
     def log_message(self, *_a) -> None:  # quiet; stats are counted
         pass
 
-    def do_GET(self) -> None:  # S7 healthz
-        if self.path.split("?")[0] == "/healthz":
-            body = b"OK"
-            self.send_response(200)
-            self.send_header("Content-Type", "text/plain")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-        else:
-            self.send_error(404)
+    do_GET = _get_healthz
 
     def do_POST(self) -> None:
         path = self.path.split("?")[0]
@@ -167,46 +172,50 @@ class _IngestHandler(BaseHTTPRequestHandler):
         self.wfile.write(resp)
 
 
-class HttpIngestListener:
-    """A live HTTP ingest endpoint spooling JSON-lines segments.
+class SpoolServer:
+    """A socket server, run on a thread, spooling what it accepts into
+    a :class:`SegmentSpool` named ``spool_names``. A subclass gives the
+    transport: ``scheme`` and :meth:`_make_server`.
 
     >>> lis = HttpIngestListener(spool_dir)
-    >>> host, port = lis.start()          # real TCP bind (port=0 = OS pick)
-    >>> ... clients POST to http://host:port/v2/datapoint ...
-    >>> lis.seal()                        # every acked request visible
-    >>> lis.stop()                        # accept loop drained, sealed
+    >>> host, port = lis.start()          # real bind (port=0 = OS pick)
+    >>> ... clients send to lis.url ...
+    >>> lis.seal()                        # everything acked is visible
+    >>> lis.stop()                        # serve loop ended, sealed
     """
+
+    scheme: str
+    spool_names: tuple[str, str]
 
     def __init__(
         self, spool_dir: str, host: str = "127.0.0.1", port: int = 0
     ):
         self.spool_dir = spool_dir
         self.host, self.port = host, port
-        self._spool = SegmentSpool(spool_dir, "req_", ".jsonl")
-        self._server: ThreadingHTTPServer | None = None
+        self._spool = SegmentSpool(spool_dir, *self.spool_names)
+        self._server: socketserver.BaseServer | None = None
         self._thread: threading.Thread | None = None
 
     @property
     def accepted(self) -> int:
+        """Lines spooled: HTTP requests, or a line socket's lines."""
         return self._spool.appended
 
     @property
     def url(self) -> str:
-        return f"http://{self.host}:{self.port}"
+        return f"{self.scheme}://{self.host}:{self.port}"
+
+    def _make_server(self) -> socketserver.BaseServer:
+        raise NotImplementedError
 
     def seal(self) -> None:
-        """Publish every request acked so far."""
+        """Publish everything accepted so far."""
         self._spool.seal()
 
     def start(self) -> tuple[str, int]:
         # A restarted listener appends after the existing spool files
         # and publishes what a dead one left unsealed.
-        handler = type(
-            "_BoundHandler", (_IngestHandler,), {"listener": self}
-        )
-        self._server = ThreadingHTTPServer(
-            (self.host, self.port), handler
-        )
+        self._server = self._make_server()
         self.port = self._server.server_address[1]
         self._spool.start(SEAL_INTERVAL_S)
         self._thread = threading.Thread(
@@ -223,7 +232,7 @@ class HttpIngestListener:
             self._server = None
         self._spool.stop()
 
-    def __enter__(self) -> "HttpIngestListener":
+    def __enter__(self):
         self.start()
         return self
 
@@ -231,25 +240,42 @@ class HttpIngestListener:
         self.stop()
 
 
-def http_spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
-    """A request spool as a stream: one row per accepted request, with
-    the ``httpwire`` columns — compose with the protocol parsers for a
-    full live pipeline.
+class HttpIngestListener(SpoolServer):
+    """A live HTTP ingest endpoint spooling ``req_*.jsonl`` segments,
+    one JSON line per accepted request."""
 
-    The spool's ``req_*.jsonl`` segments stream through Spark's JSON
-    file source, so no Python worker runs on the read side. ``*.http``
-    request files in the directory (a hand-staged request directory, or
-    a spool written before the listener spooled JSON lines) are first
-    adopted into one segment by
+    scheme, spool_names = "http", ("req_", ".jsonl")
+
+    def _make_server(self) -> ThreadingHTTPServer:
+        handler = type(
+            "_BoundHandler", (_IngestHandler,), {"listener": self}
+        )
+        return ThreadingHTTPServer((self.host, self.port), handler)
+
+
+def http_spool(
+    reader: DataFrameReader | DataStreamReader, spool_dir: str
+) -> DataFrame:
+    """A request spool as rows with the ``httpwire`` columns, one per
+    accepted request, through Spark's JSON file source, in batch
+    (``spark.read``) or in stream (``spark.readStream``): compose with
+    the protocol parsers for a full pipeline. The mirror of
+    :func:`~metricproxy_spark.streaming.socketlistener.line_spool`; a
+    missing directory is created.
+
+    Only ``req_*.jsonl`` segments are read, so no Python worker runs on
+    the read side. ``*.http`` request files in the directory (a
+    hand-staged request directory, or a spool written before the
+    listener spooled JSON lines) are first adopted into one segment by
     :func:`~metricproxy_spark.sources.httpwire.adopt_request_files`; an
     adopted row's ``src_file`` is that segment's name. A ``*.http`` file
-    dropped in while the stream runs is adopted when a stream over the
+    dropped in while a stream runs is adopted when a read of the
     directory is next planned, e.g. at a restart."""
     # the file source refuses a missing directory
     os.makedirs(spool_dir, exist_ok=True)
     adopt_request_files(spool_dir)
     return (
-        spark.readStream.schema(LINE_SCHEMA)
+        reader.schema(LINE_SCHEMA)
         .option("pathGlobFilter", "*.jsonl")
         # a body is one JSON string: lift Jackson's 20M-char cap
         .option("maxStringLen", 2**31 - 1)
@@ -322,16 +348,7 @@ class RemoteReadServer:
             def log_message(self, *_a) -> None:
                 pass
 
-            def do_GET(self) -> None:
-                if self.path.split("?")[0] == "/healthz":
-                    body = b"OK"
-                    self.send_response(200)
-                    self.send_header("Content-Type", "text/plain")
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
-                else:
-                    self.send_error(404)
+            do_GET = _get_healthz
 
             def do_POST(self) -> None:
                 if self.path.split("?")[0] != "/api/v1/read":

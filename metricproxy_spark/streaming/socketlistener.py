@@ -6,8 +6,9 @@ statsd classically over UDP datagrams, influx line protocol over
 either (telegraf's socket_listener). This module is the engine's
 socket front door for LINE-shaped wire formats: accept bytes, split
 on newlines, and spool the lines verbatim through the same
-:class:`~metricproxy_spark.sources.spool.SegmentSpool` the HTTP
-listener uses.
+:class:`~metricproxy_spark.sources.spool.SegmentSpool` and server
+lifecycle (:class:`~metricproxy_spark.streaming.httplistener.SpoolServer`)
+the HTTP listener uses; ``accepted`` counts lines.
 
 **Ack, seal, visibility.** Every received chunk's complete lines
 (each TCP ``recv``, each UDP datagram) are appended to the listener's
@@ -39,18 +40,19 @@ from __future__ import annotations
 import os
 import socket
 import socketserver
-import threading
 
 from pyspark.sql import DataFrame, DataFrameReader
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamReader
 
-from metricproxy_spark.sources.spool import SEAL_INTERVAL_S, SegmentSpool
+from metricproxy_spark.streaming.httplistener import SpoolServer
 
 
-class LineSocketListener:
+class LineSocketListener(SpoolServer):
     """Accept newline-delimited wire lines on a real socket and spool
     them to ``{spool_dir}/lines_{seq:012d}.wire`` files."""
+
+    spool_names = ("lines_", ".wire")
 
     def __init__(
         self,
@@ -61,20 +63,8 @@ class LineSocketListener:
     ):
         if mode not in ("tcp", "udp"):
             raise ValueError(f"mode must be tcp or udp, got {mode!r}")
-        self.spool_dir = spool_dir
-        self.mode = mode
-        self.host, self.port = host, port
-        self._spool = SegmentSpool(spool_dir, "lines_", ".wire")
-        self._server: socketserver.BaseServer | None = None
-        self._thread: threading.Thread | None = None
-
-    @property
-    def accepted_lines(self) -> int:
-        return self._spool.appended
-
-    @property
-    def url(self) -> str:
-        return f"{self.mode}://{self.host}:{self.port}"
+        super().__init__(spool_dir, host, port)
+        self.scheme = mode
 
     def _ingest(self, lines: list[bytes]) -> None:
         lines = [ln.rstrip(b"\r") for ln in lines]
@@ -82,15 +72,10 @@ class LineSocketListener:
         if lines:
             self._spool.append(b"\n".join(lines) + b"\n")
 
-    def seal(self) -> None:
-        """Publish every line received so far."""
-        self._spool.seal()
-
-    # -- lifecycle -----------------------------------------------------
-    def start(self) -> tuple[str, int]:
+    def _make_server(self) -> socketserver.BaseServer:
         listener = self
 
-        if self.mode == "tcp":
+        if self.scheme == "tcp":
 
             class _TcpHandler(socketserver.BaseRequestHandler):
                 def handle(self) -> None:
@@ -113,43 +98,19 @@ class LineSocketListener:
                 # it sends after stop() is sealed at once
                 daemon_threads = True
 
-            self._server = _Server((self.host, self.port), _TcpHandler)
-        else:
+            return _Server((self.host, self.port), _TcpHandler)
 
-            class _UdpHandler(socketserver.BaseRequestHandler):
-                def handle(self) -> None:
-                    listener._ingest(self.request[0].split(b"\n"))
+        class _UdpHandler(socketserver.BaseRequestHandler):
+            def handle(self) -> None:
+                listener._ingest(self.request[0].split(b"\n"))
 
-            class _Server(socketserver.ThreadingUDPServer):  # type: ignore[no-redef]
-                daemon_threads = True
+        class _UdpServer(socketserver.ThreadingUDPServer):
+            daemon_threads = True
 
-            self._server = _Server((self.host, self.port), _UdpHandler)
-            # a deep receive buffer is the only mitigation UDP offers
-            self._server.socket.setsockopt(
-                socket.SOL_SOCKET, socket.SO_RCVBUF, 1 << 22
-            )
-        self.port = self._server.server_address[1]
-        self._spool.start(SEAL_INTERVAL_S)
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True
-        )
-        self._thread.start()
-        return self.host, self.port
-
-    def stop(self) -> None:
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._thread.join(timeout=10)
-            self._server = None
-        self._spool.stop()
-
-    def __enter__(self) -> "LineSocketListener":
-        self.start()
-        return self
-
-    def __exit__(self, *_exc) -> None:
-        self.stop()
+        server = _UdpServer((self.host, self.port), _UdpHandler)
+        # a deep receive buffer is the only mitigation UDP offers
+        server.socket.setsockopt(socket.SOL_SOCKET, socket.SO_RCVBUF, 1 << 22)
+        return server
 
 
 def line_spool(

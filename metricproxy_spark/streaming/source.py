@@ -5,8 +5,10 @@ equivalents are the built-in streaming sources. For reproducible tests
 and driver runs we use the *file* source over staged parquet: it gives
 deterministic replay, ordered micro-batches via ``maxFilesPerTrigger``,
 and exactly-once semantics with checkpoints — the properties the
-reference gets from TCP accept + bounded buffers, without the
-nondeterminism of a live socket.
+reference gets from TCP accept + bounded buffers. A live socket is
+served by the listeners in ``httplistener`` and ``socketlistener``,
+which spool into a directory that the same file sources replay; the
+``rate`` source is a synthetic load for soak tests.
 """
 
 from __future__ import annotations
@@ -94,29 +96,6 @@ def _bump_part_file_mtimes(path: str, base_seq: int = 0) -> None:
     for i, f in enumerate(parts):
         t = base + base_seq + i
         os.utime(os.path.join(path, f), (t, t))
-
-
-def carbon_socket_stream(
-    spark: SparkSession, host: str, port: int
-) -> DataFrame:
-    """S1 live form: the carbon TCP listener as Spark's socket source →
-    C1 line parse → canonical datapoint columns. The reference accepts
-    TCP connections and scans newline-delimited ``name value ts`` lines
-    [P: protocol/carbon/carbonlistener.go — Listener]; the socket
-    source delivers exactly those lines as a streaming 'value' column.
-    Dev/demo source (no replay, at-most-once) — production uses the
-    Kafka or file slot; the parse/normalize chain is byte-identical
-    across all three."""
-    from metricproxy_spark.sources.carbon import parse_carbon_lines
-
-    lines = (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-        .withColumnRenamed("value", "line")
-    )
-    return parse_carbon_lines(lines, "line")
 
 
 def rate_datapoints(

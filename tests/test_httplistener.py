@@ -21,7 +21,7 @@ from metricproxy_spark.streaming.httplistener import (
     MAX_BODY_BYTES,
     HttpIngestListener,
     RemoteReadServer,
-    http_spool_stream,
+    http_spool,
 )
 
 
@@ -155,7 +155,7 @@ def test_spool_stream_exactly_once(spark, tmp_path):
 
     def drain():
         q = (
-            http_spool_stream(spark, spool)
+            http_spool(spark.readStream, spool)
             .writeStream.foreachBatch(
                 lambda df, _bid: out.extend(
                     r.body for r in df.select("body").collect()
@@ -286,7 +286,7 @@ def test_undecodable_gzip_is_refused_and_not_spooled(tmp_path):
 def _drain_bodies(spark, spool, ckpt) -> list[str]:
     out: list[str] = []
     q = (
-        http_spool_stream(spark, spool)
+        http_spool(spark.readStream, spool)
         .writeStream.foreachBatch(
             lambda df, _bid: out.extend(r.body for r in df.select("body").collect())
         )
@@ -413,7 +413,7 @@ _PARITY_REQUESTS = [
 
 def test_jsonl_spool_reads_like_request_files(spark, tmp_path):
     """The same requests, spooled by the listener, and staged as
-    ``.http`` request files, both stream through ``http_spool_stream``
+    ``.http`` request files, both stream through ``http_spool``
     on the JSON file source and give the rows a batch ``httpwire`` read
     of the staged files gives (``src_file`` aside: an adopted row's is
     its segment's name)."""
@@ -443,7 +443,7 @@ def test_jsonl_spool_reads_like_request_files(spark, tmp_path):
     def rows(directory):
         out = []
         q = (
-            http_spool_stream(spark, str(directory))
+            http_spool(spark.readStream, str(directory))
             .writeStream.foreachBatch(lambda df, _b: out.extend(df.collect()))
             .option("checkpointLocation", str(tmp_path / f"ckpt-{directory.name}"))
             .trigger(availableNow=True)

@@ -20,7 +20,7 @@ from metricproxy_spark.sources.httpwire import (
     parse_http_request,
     register_httpwire,
 )
-from metricproxy_spark.streaming.httplistener import http_spool_stream
+from metricproxy_spark.streaming.httplistener import http_spool
 
 
 def _write_request(dirpath: str, name: str, raw: bytes) -> None:
@@ -90,7 +90,7 @@ def test_stream_picks_up_new_requests_exactly_once(spark):
 
     def drain() -> list[str]:
         q = (
-            http_spool_stream(spark, d)
+            http_spool(spark.readStream, d)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)

@@ -76,62 +76,6 @@ class TestKafkaTransforms:
         assert kafka_available(spark) is False
 
 
-class TestCarbonSocket:
-    def test_carbon_over_live_tcp_socket(self, spark, tmp_path):
-        """S1 end-to-end over a real TCP connection: an in-test server
-        plays the metrics client, Spark's socket source is the
-        listener, C1 parse normalizes — the closest local analog of
-        the reference's carbonlistener accept loop."""
-        import socket
-        import threading
-
-        from metricproxy_spark.streaming.source import carbon_socket_stream
-
-        srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        srv.bind(("127.0.0.1", 0))
-        srv.listen(1)
-        port = srv.getsockname()[1]
-        lines = [f"cpu.load.{i} {i}.5 170000000{i}" for i in range(10)]
-        stop_evt = threading.Event()
-
-        def serve():
-            conn, _ = srv.accept()
-            with conn:
-                conn.sendall(("\n".join(lines) + "\n").encode())
-                # keep the connection open until the query is done —
-                # the socket source treats EOF as stream end/failure
-                stop_evt.wait(timeout=60)
-
-        t = threading.Thread(target=serve, daemon=True)
-        t.start()
-        got = {"rows": []}
-
-        def sink(df, batch_id):
-            got["rows"].extend(
-                (r["metric"], r["value"]) for r in df.collect()
-            )
-
-        dp = carbon_socket_stream(spark, "127.0.0.1", port)
-        q = (
-            dp.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "ckpt_sock"))
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-        try:
-            deadline = time.time() + 45
-            while len(got["rows"]) < len(lines) and time.time() < deadline:
-                time.sleep(0.5)
-        finally:
-            stop_evt.set()
-            q.stop()
-            srv.close()
-        assert sorted(got["rows"]) == sorted(
-            (f"cpu.load.{i}", float(f"{i}.5")) for i in range(10)
-        )
-
-
 class TestRateSource:
     def test_rate_datapoints_live_stream(self, spark, tmp_path):
         from metricproxy_spark.streaming.source import rate_datapoints

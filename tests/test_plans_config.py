@@ -203,7 +203,7 @@ def test_statsd_live_listener_from_config(spark, tmp_path):
         s.sendto(b"api.lat:33|ms\nusers:u7|s\n", (lis.host, lis.port))
         s.close()
         deadline = time.time() + 10
-        while lis.accepted_lines < 4 and time.time() < deadline:
+        while lis.accepted < 4 and time.time() < deadline:
             time.sleep(0.02)
         lis.seal()
         (q,) = pipe.start(str(tmp_path / "ckpt"))
@@ -297,3 +297,132 @@ def test_carbon_listen_addr_binds_a_line_socket(spark, tmp_path, monkeypatch):
     with pytest.raises(ValueError, match="ListenAddr"):
         build_pipeline(spark, cfg)
     assert bound == []
+
+
+def _forwarded_lines(path: str) -> list[bytes]:
+    """Every line a line forwarder wrote under ``path``, sorted."""
+    lines = []
+    for name in sorted(os.listdir(path)):
+        if name.startswith("part-"):
+            with open(os.path.join(path, name), "rb") as fh:
+                lines += fh.read().splitlines(keepends=True)
+    return sorted(lines)
+
+
+def _stage_three_segments(ltype: str, spool: str) -> list[str]:
+    """Three sealed spool files of 4 points each, as the ``ltype``
+    listener writes them; returns the metric names."""
+    import http.client
+
+    from metricproxy_spark.streaming.httplistener import HttpIngestListener
+
+    sent = [[f"m.{seg}.{i}" for i in range(4)] for seg in range(3)]
+    if ltype == "carbon":
+        os.makedirs(spool)
+        for seg, names in enumerate(sent):
+            with open(os.path.join(spool, f"lines_{seg:012d}.wire"), "w") as fh:
+                fh.writelines(f"{m} {i} 1700000000\n" for i, m in enumerate(names))
+        return sum(sent, [])
+    with HttpIngestListener(spool) as lis:
+        for names in sent:
+            points = [
+                {
+                    "metric": m,
+                    "value": float(i),
+                    "timestamp": 1700000000000 + i,
+                    "dimensions": {},
+                }
+                for i, m in enumerate(names)
+            ]
+            conn = http.client.HTTPConnection(lis.host, lis.port, timeout=10)
+            conn.request(
+                "POST",
+                "/v2/datapoint",
+                body=json.dumps({"gauge": points}),
+                headers={"Content-Type": "application/json"},
+            )
+            assert conn.getresponse().status == 200
+            conn.close()
+            lis.seal()
+    assert len([f for f in os.listdir(spool) if f.startswith("req_")]) == 3
+    return sum(sent, [])
+
+
+@pytest.mark.parametrize("ltype", ["signalfx", "carbon"])
+def test_max_files_per_trigger_bounds_a_drain(spark, tmp_path, ltype):
+    """``MaxFilesPerTrigger`` holds for every listener type, through the
+    HTTP request spool as through a line spool: three sealed spool
+    files drain in three batches that have input rows, and every
+    forwarder gets each point once."""
+    spool = str(tmp_path / "spool")
+    sent = _stage_three_segments(ltype, spool)
+
+    out = {k: str(tmp_path / k) for k in ("csv", "carbon", "signalfx")}
+    cfg = {
+        "ListenFrom": [
+            {"Type": ltype, "Source": spool, "MaxFilesPerTrigger": 1}
+        ],
+        "ForwardTo": [{"Type": k, "Path": p} for k, p in out.items()],
+    }
+    pipe = build_pipeline(spark, cfg)
+    (q,) = pipe.start(str(tmp_path / "ckpt"))
+    q.awaitTermination()
+    # one spool file per batch: a request, or a file's 4 lines
+    rows = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+    assert rows == [1, 1, 1] if ltype == "signalfx" else [4, 4, 4]
+    assert pipe.stats["datapoints_in"] == len(sent)
+    metrics = {
+        "csv": [r[0] for r in spark.read.csv(out["csv"]).collect()],
+        "carbon": [
+            r.value.split(" ")[0]
+            for r in spark.read.text(out["carbon"]).collect()
+        ],
+        "signalfx": [
+            r.metric for r in spark.read.json(out["signalfx"]).collect()
+        ],
+    }
+    for kind, got in metrics.items():
+        assert sorted(got) == sorted(sent), kind
+
+
+def test_crlf_carbon_file_drains_like_its_lf_twin(spark, tmp_path):
+    """A carbon file with CRLF line ends and a blank line forwards the
+    same csv rows as its LF twin, and the carbon forwarder's raw
+    passthrough writes the lines without their ``\\r``."""
+    lines = ["a.b 1.5 1700000000", "", "c.d[dc=us] 2 1700000060", "bogus"]
+    forwarded = {}
+    for twin, end in (("lf", "\n"), ("crlf", "\r\n")):
+        src = tmp_path / twin / "in"
+        src.mkdir(parents=True)
+        (src / "carbon.txt").write_bytes(
+            "".join(ln + end for ln in lines).encode()
+        )
+        csv_out = str(tmp_path / twin / "csv")
+        carbon_out = str(tmp_path / twin / "carbon")
+        cfg = {
+            "ListenFrom": [
+                {
+                    "Type": "carbon",
+                    "Source": str(src),
+                    "MetricDeconstructor": "commakeys",
+                }
+            ],
+            "ForwardTo": [
+                {"Type": "csv", "Path": csv_out},
+                {"Type": "carbon", "Path": carbon_out},
+            ],
+        }
+        pipe = build_pipeline(spark, cfg)
+        stats = pipe.run_available_now(str(tmp_path / twin / "ckpt"))
+        assert stats["datapoints_in"] == 2
+        forwarded[twin] = (
+            _forwarded_lines(csv_out),
+            _forwarded_lines(carbon_out),
+        )
+    assert forwarded["crlf"] == forwarded["lf"]
+    csv_rows, carbon_bytes = forwarded["crlf"]
+    assert len(csv_rows) == 2 and not any(b"\r" in r for r in csv_rows)
+    assert carbon_bytes == [
+        b"a.b 1.5 1700000000\n",
+        b"c.d[dc=us] 2 1700000060\n",
+    ]

@@ -33,7 +33,7 @@ class TestTcp:
         spool = tempfile.mkdtemp(prefix="mps_sl_")
         with LineSocketListener(spool, mode="tcp") as l:
             send_lines_tcp(l.host, l.port, payload, connections=7)
-            assert l.accepted_lines == 5000
+            assert l.accepted == 5000
         got = _spool_lines(spool)
         assert collections.Counter(got) == collections.Counter(payload)
         # each of the 7 connections is sealed before its ack => at
@@ -78,7 +78,7 @@ class TestUdp:
                 )
             s.close()
             deadline = time.time() + 10
-            while l.accepted_lines < len(payload) and time.time() < deadline:
+            while l.accepted < len(payload) and time.time() < deadline:
                 time.sleep(0.02)
         got = _spool_lines(spool)
         # at-most-once: no duplication, no corruption; expect all 200
