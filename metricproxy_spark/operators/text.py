@@ -345,10 +345,13 @@ def winnow_fingerprints_vectorized(
     interpreted, per element. Here k-gram hashing is three shifted
     int64 folds and window selection is one ``sliding_window_view``
     argmin — per-partition numpy, no shuffle, same narrow 100 TB shape.
-    Since the HOF form binds each row's words and k-gram hashes once
-    (:func:`_let`) the two cost about the same on the fixtures (0.7–1.1 s
-    each over the sf0.01 corpus on 4 CPUs). The HOF form remains the
-    executable spec (equality is pytest-asserted); this is the hot path.
+    It is the faster form for winnowing: ``text_winnow_fingerprints``
+    took 1.08–1.24 s with it and 1.51–1.61 s with the HOF form in
+    ``bench.py`` (sf0.1, 4 CPUs), where the window selection's nested
+    per-element lambdas dominate. (Plain k-gram hashing has no twin:
+    there the Catalyst form is as fast or faster.) The HOF form remains
+    the executable spec (equality is pytest-asserted); this is the hot
+    path.
     """
     from typing import Iterator
 
@@ -391,58 +394,3 @@ def winnow_fingerprints_vectorized(
     return df.select(id_col, text_col).mapInPandas(
         gen, f"{id_col} long, pos int, fp bigint"
     )
-
-
-def kgram_hashes_vectorized(
-    df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    with_pos: bool = False,
-):
-    """Vectorized twin of :func:`kgram_hashes`, returning EXPLODED
-    occurrence rows ``(id_col, fp BIGINT)`` — one row per k-gram
-    occurrence (plus the 1-based start position ``pos INT`` when
-    ``with_pos``). Same rationale as
-    :func:`winnow_fingerprints_vectorized`: Catalyst interprets the
-    per-element polynomial lambda; three shifted int64 numpy folds do
-    the identical arithmetic per partition with no shuffle."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out_id, out_fp, out_pos = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                ws = ("" if text is None else text).strip(" ").lower().split(" ")
-                n = len(ws)
-                if n - (k - 1) < 1:
-                    continue
-                wv = np.array(
-                    [(ord(x[0]) if x else 0) * 1024 + len(x) for x in ws],
-                    np.int64,
-                )
-                acc = np.zeros(n - k + 1, np.int64)
-                for j in range(k):
-                    acc = acc * 131 + wv[j : n - k + 1 + j]
-                kg = acc % _MOD
-                out_id.extend([did] * len(kg))
-                out_fp.extend(kg.tolist())
-                if with_pos:
-                    out_pos.extend(range(1, len(kg) + 1))
-            if with_pos:
-                yield pd.DataFrame(
-                    {id_col: out_id, "pos": out_pos, "fp": out_fp}
-                )
-            else:
-                yield pd.DataFrame({id_col: out_id, "fp": out_fp})
-
-    schema = (
-        f"{id_col} long, pos int, fp bigint"
-        if with_pos
-        else f"{id_col} long, fp bigint"
-    )
-    return df.select(id_col, text_col).mapInPandas(gen, schema)

@@ -86,6 +86,8 @@ def load_config(path_or_dict: str | dict[str, Any]) -> dict[str, Any]:
     for key in ("ListenFrom", "ForwardTo"):
         if key not in cfg:
             raise ValueError(f"config missing {key!r}")
+    if not cfg["ListenFrom"]:
+        raise ValueError("config 'ListenFrom' lists no listener")
     return cfg
 
 

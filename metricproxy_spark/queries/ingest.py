@@ -1074,12 +1074,12 @@ def ingest_http_listener_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     requests by user_id % 23) so the result is a pure function of the
     events table."""
     import gzip as _gzip
-    import http.client
     import json as _json
 
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     ev = (
@@ -1097,37 +1097,29 @@ def ingest_http_listener_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.operators.scale import guarded_wire_pandas
 
     pdf = guarded_wire_pandas(ev)  # client-side payload, guard-bounded
+    requests = []
+    for req, grp in pdf.groupby("req"):
+        grp = grp.sort_values("event_id")
+        gauge = [
+            {
+                "metric": m,
+                "value": float(v),
+                "timestamp": int(t),
+                "dimensions": {"user_id": str(int(u))},
+            }
+            for m, v, t, u in zip(
+                grp["event_type"], grp["value"], grp["ts_ms"], grp["user_id"]
+            )
+        ]
+        body = _json.dumps({"gauge": gauge}).encode()
+        headers = {"Content-Type": "application/json"}
+        if int(req) % 2 == 0:
+            body = _gzip.compress(body)
+            headers["Content-Encoding"] = "gzip"
+        requests.append((body, headers))
     spool = tempfile.mkdtemp(prefix="mps_http_live_")
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for req, grp in pdf.groupby("req"):
-            grp = grp.sort_values("event_id")
-            body = _json.dumps(
-                {
-                    "gauge": [
-                        {
-                            "metric": m,
-                            "value": float(v),
-                            "timestamp": int(t),
-                            "dimensions": {"user_id": str(int(u))},
-                        }
-                        for m, v, t, u in zip(
-                            grp["event_type"],
-                            grp["value"],
-                            grp["ts_ms"],
-                            grp["user_id"],
-                        )
-                    ]
-                }
-            ).encode()
-            headers = {"Content-Type": "application/json"}
-            if int(req) % 2 == 0:
-                body = _gzip.compress(body)
-                headers["Content-Encoding"] = "gzip"
-            conn.request("POST", "/v2/datapoint", body=body, headers=headers)
-            resp = conn.getresponse()
-            assert resp.status == 200 and resp.read() == b'"OK"'
-        conn.close()
+        post_requests(lis.host, lis.port, "/v2/datapoint", requests)
     reqs = http_spool(spark.read, spool)
     parsed = parse_sfx_v2_json(reqs, body_col="body")
     return parsed.select(
@@ -1762,7 +1754,6 @@ def ingest_otlp_http_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator, one series subset: user_id % 13 = 0); the engine side
     (spool scan -> from_json -> explode -> agg) stays distributed."""
     import gzip as _gzip
-    import http.client
 
     from metricproxy_spark.sources.otlp import (
         aggregate_otlp,
@@ -1772,6 +1763,7 @@ def ingest_otlp_http_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") % 13 == 0)
@@ -1780,20 +1772,17 @@ def ingest_otlp_http_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload = [
         r.request for r in guarded_wire_payload(otlp_request_json(ev))
     ]  # client side
+    requests = []
+    for i, raw in enumerate(payload):
+        body = raw.encode()
+        headers = {"Content-Type": "application/json"}
+        if i % 2 == 0:
+            body = _gzip.compress(body)
+            headers["Content-Encoding"] = "gzip"
+        requests.append((body, headers))
     spool = tempfile.mkdtemp(prefix="mps_otlp_live_")
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for i, raw in enumerate(payload):
-            body = raw.encode()
-            headers = {"Content-Type": "application/json"}
-            if i % 2 == 0:
-                body = _gzip.compress(body)
-                headers["Content-Encoding"] = "gzip"
-            conn.request("POST", "/v1/metrics", body=body, headers=headers)
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+        post_requests(lis.host, lis.port, "/v1/metrics", requests)
     reqs = http_spool(spark.read, spool)
     return aggregate_otlp(
         parse_otlp_requests(reqs.select(F.col("body").alias("request")))

@@ -26,6 +26,7 @@ import itertools
 import os
 import shutil
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,6 +97,51 @@ def _run_to_memory(
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
+
+
+def _collect_streamed(
+    sdf: DataFrame,
+    wd: str,
+    schema: str,
+    finish: Callable[[DataFrame], DataFrame] = lambda out: out,
+) -> DataFrame:
+    """The streamed wire queries' one tail: run ``sdf`` in complete mode
+    into a memory sink checkpointed under the work directory ``wd``
+    (8 state partitions: they hold at most ~100 keys), collect
+    ``finish`` of the final table as a DataFrame of ``schema``, and
+    remove ``wd``, spool included, also when the run fails."""
+    try:
+        out = finish(
+            _run_to_memory(sdf, os.path.join(wd, "ckpt"), state_partitions=8)
+        )
+        return out.sparkSession.createDataFrame(out.collect(), schema)
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+
+
+def _frame_rollup(points: DataFrame, wd: str) -> DataFrame:
+    """Decoded ``(metric, value, ts_ms)`` frame points rolled up per
+    metric through :func:`_collect_streamed`: point count, decimal-exact
+    value sum and ``ts_ms`` range."""
+    agg = points.groupBy("metric").agg(
+        F.count(F.lit(1)).alias("n_p"),
+        F.sum(F.col("value").cast("decimal(27,4)")).alias("sum_dec"),
+        F.min("ts_ms").alias("min_t"),
+        F.max("ts_ms").alias("max_t"),
+    )
+    return _collect_streamed(
+        agg,
+        wd,
+        "metric string, n_points bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+        lambda out: out.select(
+            "metric",
+            F.col("n_p").cast("bigint").alias("n_points"),
+            F.col("sum_dec").cast("double").alias("sum_value"),
+            F.col("min_t").alias("min_ts_ms"),
+            F.col("max_t").alias("max_ts_ms"),
+        ),
+    )
 
 
 @register(
@@ -897,19 +943,18 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     live-network streamed result hash-matches the DuckDB batch oracle.
     JSON double repr round-trips IEEE-exactly, which is what makes a
     value-checked live wire possible."""
-    import http.client
     import json as _json
 
-    from metricproxy_spark.io import ensure_package_on_workers, load_table
+    from metricproxy_spark.io import load_table
     from metricproxy_spark.sources.signalfx import parse_sfx_v2_json
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     from metricproxy_spark.operators.scale import guarded_wire_pandas
 
-    ensure_package_on_workers(spark)
     wd = _workdir()
     pdf = guarded_wire_pandas(
         load_table(spark, sf_dir, "events")
@@ -922,47 +967,32 @@ def stream_http_live_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("user_id") % 11).alias("req"),
         )
     )
+    headers = {"Content-Type": "application/json"}
+    requests = []
+    for _req, grp in pdf.groupby("req"):
+        grp = grp.sort_values("event_id")
+        gauge = [
+            {"metric": m, "value": float(v), "timestamp": int(t)}
+            for m, v, t in zip(grp["event_type"], grp["value"], grp["ts_ms"])
+        ]
+        requests.append((_json.dumps({"gauge": gauge}).encode(), headers))
     spool = os.path.join(wd, "spool")
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for _req, grp in pdf.groupby("req"):
-            grp = grp.sort_values("event_id")
-            body = _json.dumps(
-                {
-                    "gauge": [
-                        {"metric": m, "value": float(v), "timestamp": int(t)}
-                        for m, v, t in zip(
-                            grp["event_type"], grp["value"], grp["ts_ms"]
-                        )
-                    ]
-                }
-            ).encode()
-            conn.request(
-                "POST",
-                "/v2/datapoint",
-                body=body,
-                headers={"Content-Type": "application/json"},
-            )
-            assert conn.getresponse().read() == b'"OK"'
-        conn.close()
-        lis.seal()  # every acked request visible to the stream
-        parsed = parse_sfx_v2_json(
-            http_spool(spark.readStream, spool), body_col="body"
-        )
-        agg = parsed.groupBy(F.col("metric")).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(27,4)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        # ~5 metric keys: scope the state-store width (200 default
-        # partitions would spin 200 state dirs for 5 keys)
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-        result = spark.createDataFrame(
-            out.collect(), "metric string, n bigint, sum_value double"
-        )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+        post_requests(lis.host, lis.port, "/v2/datapoint", requests)
+    parsed = parse_sfx_v2_json(
+        http_spool(spark.readStream, spool), body_col="body"
+    )
+    agg = parsed.groupBy(F.col("metric")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("value").cast("decimal(27,4)"))
+        .cast("double")
+        .alias("sum_value"),
+    )
+    # ~5 metric keys: scope the state-store width (200 default
+    # partitions would spin 200 state dirs for 5 keys)
+    return _collect_streamed(
+        agg, wd, "metric string, n bigint, sum_value double"
+    )
 
 
 @register(
@@ -1022,21 +1052,19 @@ def stream_statsd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("scaled").alias("total_dec"),
     )
     # ~100 (name, type) keys: scope the state-store width
-    out = _run_to_memory(pre, os.path.join(wd, "ckpt"), state_partitions=8)
-    rolled = out.groupBy("name", "mtype").agg(
-        F.sum("n_l").cast("bigint").alias("n_lines"),
-        F.sum("total_dec").cast("double").alias("total"),
-        F.when(
-            F.first("mtype") == "s", F.count("member")
-        ).alias("n_members"),
-    )
-    result = spark.createDataFrame(
-        rolled.collect(),
+    return _collect_streamed(
+        pre,
+        wd,
         "name string, mtype string, n_lines bigint,"
         " total double, n_members bigint",
+        lambda out: out.groupBy("name", "mtype").agg(
+            F.sum("n_l").cast("bigint").alias("n_lines"),
+            F.sum("total_dec").cast("double").alias("total"),
+            F.when(
+                F.first("mtype") == "s", F.count("member")
+            ).alias("n_members"),
+        ),
     )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
 
 
 def _share_statsd_oracle() -> None:
@@ -1094,15 +1122,13 @@ def stream_influx_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         send_lines_tcp(lis.host, lis.port, payload)
     lines = line_spool(spark.readStream, spool).select("line")
     agg = aggregate_influx(parse_influx_lines(lines))
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.collect(),
+    return _collect_streamed(
+        agg,
+        wd,
         "measurement string, host string, n_points bigint,"
         " sum_value double, sum_count bigint,"
         " min_ts_ns bigint, max_ts_ns bigint",
     )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
 
 
 def _share_influx_oracle() -> None:
@@ -1165,21 +1191,20 @@ def stream_graphite_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_sec").alias("min_t"),
         F.max("ts_sec").alias("max_t"),
     )
-    out = _run_to_memory(pre, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
+    return _collect_streamed(
+        pre,
+        wd,
+        "name string, host string, n_points bigint, sum_value double,"
+        " min_ts_sec bigint, max_ts_sec bigint",
+        lambda out: out.select(
             "name",
             "host",
             F.col("n_p").cast("bigint").alias("n_points"),
             F.col("sum_dec").cast("double").alias("sum_value"),
             F.col("min_t").alias("min_ts_sec"),
             F.col("max_t").alias("max_ts_sec"),
-        ).collect(),
-        "name string, host string, n_points bigint, sum_value double,"
-        " min_ts_sec bigint, max_ts_sec bigint",
+        ),
     )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
 
 
 def _share_graphite_oracle() -> None:
@@ -1212,9 +1237,7 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver-evidence note: pinned at the head of the round-7
     _PRIORITY window.
     """
-    import http.client
-
-    from metricproxy_spark.io import ensure_package_on_workers, load_table
+    from metricproxy_spark.io import load_table
     from metricproxy_spark.sources.otlp import (
         otlp_request_json,
         parse_otlp_requests,
@@ -1222,9 +1245,9 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
-    ensure_package_on_workers(spark)
     wd = _workdir()
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id") % 13 == 0
@@ -1235,19 +1258,10 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.request for r in guarded_wire_payload(otlp_request_json(ev))
     ]
     spool = os.path.join(wd, "spool")
+    headers = {"Content-Type": "application/json"}
+    requests = [(raw.encode(), headers) for raw in payload]
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for raw in payload:
-            conn.request(
-                "POST",
-                "/v1/metrics",
-                body=raw.encode(),
-                headers={"Content-Type": "application/json"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+        post_requests(lis.host, lis.port, "/v1/metrics", requests)
     points = parse_otlp_requests(
         http_spool(spark.readStream, spool).select(
             F.col("body").alias("request")
@@ -1259,9 +1273,12 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ns").alias("min_t"),
         F.max("ts_ns").alias("max_t"),
     )
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
+    return _collect_streamed(
+        agg,
+        wd,
+        "name string, mtype string, host string, n_points bigint,"
+        " sum_value double, min_ts_ns bigint, max_ts_ns bigint",
+        lambda out: out.select(
             "name",
             "mtype",
             "host",
@@ -1269,12 +1286,8 @@ def stream_otlp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sum_dec").cast("double").alias("sum_value"),
             F.col("min_t").alias("min_ts_ns"),
             F.col("max_t").alias("max_ts_ns"),
-        ).collect(),
-        "name string, mtype string, host string, n_points bigint,"
-        " sum_value double, min_ts_ns bigint, max_ts_ns bigint",
+        ),
     )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
 
 
 def _share_otlp_oracle() -> None:
@@ -1325,17 +1338,16 @@ def stream_collectd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact sums in complete mode — the streamed result
     hash-matches the batch DuckDB oracle because JSON double repr
     round-trips IEEE-exactly. Deterministic 1/5 events subset."""
-    import http.client
     import json as _json
 
-    from metricproxy_spark.io import ensure_package_on_workers, load_table
+    from metricproxy_spark.io import load_table
     from metricproxy_spark.sources.collectd import parse_collectd_json
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
-    ensure_package_on_workers(spark)
     wd = _workdir()
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") % 5 == 0)
     elem = F.to_json(
@@ -1373,39 +1385,30 @@ def stream_collectd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("user_id") % 11).alias("req"),
         )
     )
+    headers = {"Content-Type": "application/json"}
+    requests = []
+    for _req, grp in pdf.groupby("req"):
+        body = "[" + ",".join(grp.sort_values("event_id")["elem"]) + "]"
+        requests.append((body.encode(), headers))
     spool = os.path.join(wd, "spool")
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for _req, grp in pdf.groupby("req"):
-            grp = grp.sort_values("event_id")
-            body = ("[" + ",".join(grp["elem"]) + "]").encode()
-            conn.request(
-                "POST",
-                "/post-collectd",
-                body=body,
-                headers={"Content-Type": "application/json"},
-            )
-            assert conn.getresponse().read() == b'"OK"'
-        conn.close()
-        lis.seal()  # every acked request visible to the stream
-        parsed = parse_collectd_json(
-            http_spool(spark.readStream, spool), body_col="body"
-        )
-        agg = parsed.groupBy("metric", "metric_type").agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum(F.col("value").cast("decimal(27,4)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        # 6 (metric, type) keys: scope the state-store width
-        out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-        result = spark.createDataFrame(
-            out.collect(),
-            "metric string, metric_type string, n_points bigint,"
-            " sum_value double",
-        )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+        post_requests(lis.host, lis.port, "/post-collectd", requests)
+    parsed = parse_collectd_json(
+        http_spool(spark.readStream, spool), body_col="body"
+    )
+    agg = parsed.groupBy("metric", "metric_type").agg(
+        F.count(F.lit(1)).alias("n_points"),
+        F.sum(F.col("value").cast("decimal(27,4)"))
+        .cast("double")
+        .alias("sum_value"),
+    )
+    # 6 (metric, type) keys: scope the state-store width
+    return _collect_streamed(
+        agg,
+        wd,
+        "metric string, metric_type string, n_points bigint,"
+        " sum_value double",
+    )
 
 
 @register(
@@ -1476,14 +1479,12 @@ def stream_sfx_v1_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_value"),
     )
     # ~15 (metric, source) keys: scope the state-store width
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.collect(),
+    return _collect_streamed(
+        agg,
+        wd,
         "metric string, source string, metric_type string,"
         " n_points bigint, sum_value double",
     )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
 
 
 @register(
@@ -1510,7 +1511,6 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`ingest_msgpack_roundtrip` is the at-rest twin). Oracle is the
     direct SQL rollup of the deterministic event_id % 5 subset."""
     import base64
-    import http.client
 
     import pandas as pd
 
@@ -1519,6 +1519,7 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     ensure_package_on_workers(spark)
@@ -1545,19 +1546,10 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         frames.append(bytes(buf))
 
     spool = os.path.join(wd, "spool")
+    headers = {"Content-Type": "application/octet-stream;base64"}
+    requests = [(base64.b64encode(blob), headers) for blob in frames]
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/msgpack",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/octet-stream;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+        post_requests(lis.host, lis.port, "/v1/msgpack", requests)
 
     bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
@@ -1576,26 +1568,7 @@ def stream_msgpack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     points = bodies.mapInPandas(
         decode, "metric string, value double, ts_ms long"
     )
-    agg = points.groupBy("metric").agg(
-        F.count(F.lit(1)).alias("n_p"),
-        F.sum(F.col("value").cast("decimal(27,4)")).alias("sum_dec"),
-        F.min("ts_ms").alias("min_t"),
-        F.max("ts_ms").alias("max_t"),
-    )
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
-            "metric",
-            F.col("n_p").cast("bigint").alias("n_points"),
-            F.col("sum_dec").cast("double").alias("sum_value"),
-            F.col("min_t").alias("min_ts_ms"),
-            F.col("max_t").alias("max_ts_ms"),
-        ).collect(),
-        "metric string, n_points bigint, sum_value double,"
-        " min_ts_ms bigint, max_ts_ms bigint",
-    )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    return _frame_rollup(points, wd)
 
 
 @register(
@@ -1721,20 +1694,19 @@ def stream_gorilla_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("s_v").alias("sum_v_scaled"),
     )
     wd = _workdir()
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
+    return _collect_streamed(
+        agg,
+        wd,
+        "event_type string, n_blocks bigint, n_points bigint,"
+        " sum_ts bigint, sum_v_scaled bigint",
+        lambda out: out.select(
             "event_type",
             F.col("n_blocks").cast("bigint"),
             F.col("n_points").cast("bigint"),
             F.col("sum_ts").cast("bigint"),
             F.col("sum_v_scaled").cast("bigint"),
-        ).collect(),
-        "event_type string, n_blocks bigint, n_points bigint,"
-        " sum_ts bigint, sum_v_scaled bigint",
+        ),
     )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
 
 
 @register(
@@ -1762,7 +1734,6 @@ def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin). Oracle is the direct SQL rollup of the deterministic
     event_id % 5 = 1 subset."""
     import base64
-    import http.client
 
     import pandas as pd
 
@@ -1771,6 +1742,7 @@ def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     ensure_package_on_workers(spark)
@@ -1801,19 +1773,10 @@ def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         frames.append(bytes(buf))
 
     spool = os.path.join(wd, "spool")
+    headers = {"Content-Type": "application/cbor-seq;base64"}
+    requests = [(base64.b64encode(blob), headers) for blob in frames]
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/cbor",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/cbor-seq;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+        post_requests(lis.host, lis.port, "/v1/cbor", requests)
 
     bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
@@ -1832,26 +1795,7 @@ def stream_cbor_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     points = bodies.mapInPandas(
         decode, "metric string, value double, ts_ms long"
     )
-    agg = points.groupBy("metric").agg(
-        F.count(F.lit(1)).alias("n_p"),
-        F.sum(F.col("value").cast("decimal(27,4)")).alias("sum_dec"),
-        F.min("ts_ms").alias("min_t"),
-        F.max("ts_ms").alias("max_t"),
-    )
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
-            "metric",
-            F.col("n_p").cast("bigint").alias("n_points"),
-            F.col("sum_dec").cast("double").alias("sum_value"),
-            F.col("min_t").alias("min_ts_ms"),
-            F.col("max_t").alias("max_ts_ms"),
-        ).collect(),
-        "metric string, n_points bigint, sum_value double,"
-        " min_ts_ms bigint, max_ts_ms bigint",
-    )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    return _frame_rollup(points, wd)
 
 
 @register(
@@ -1881,7 +1825,6 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`ingest_remote_write` is the at-rest twin). Oracle is the direct
     SQL rollup of the deterministic event_id % 7 = 2 subset."""
     import base64
-    import http.client
 
     import pandas as pd
 
@@ -1890,6 +1833,7 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     ensure_package_on_workers(spark)
@@ -1922,20 +1866,13 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         bodies64.append(base64.b64encode(encode_remote_write_body(series)))
 
     spool = os.path.join(wd, "spool")
+    headers = {
+        "Content-Type": "application/x-protobuf;base64",
+        "Content-Encoding": "snappy",
+    }
+    requests = [(b64, headers) for b64 in bodies64]
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for b64 in bodies64:
-            conn.request(
-                "POST",
-                "/api/v1/write",
-                body=b64,
-                headers={"Content-Type": "application/x-protobuf;base64",
-                         "Content-Encoding": "snappy"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+        post_requests(lis.host, lis.port, "/api/v1/write", requests)
 
     frames = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("body")
@@ -1967,21 +1904,20 @@ def stream_remote_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
+    return _collect_streamed(
+        agg,
+        wd,
+        "metric string, dim_type string, n_samples bigint,"
+        " sum_value double, min_ts_ms bigint, max_ts_ms bigint",
+        lambda out: out.select(
             "metric",
             "dim_type",
             F.col("n_s").cast("bigint").alias("n_samples"),
             F.col("sum_dec").cast("double").alias("sum_value"),
             F.col("min_t").alias("min_ts_ms"),
             F.col("max_t").alias("max_ts_ms"),
-        ).collect(),
-        "metric string, dim_type string, n_samples bigint,"
-        " sum_value double, min_ts_ms bigint, max_ts_ms bigint",
+        ),
     )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2015,7 +1951,6 @@ def stream_otlp_protobuf_pipeline(
     the direct SQL rollup of the deterministic event_id % 9 = 4
     subset."""
     import base64
-    import http.client
 
     import pandas as pd
 
@@ -2024,6 +1959,7 @@ def stream_otlp_protobuf_pipeline(
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     ensure_package_on_workers(spark)
@@ -2077,19 +2013,10 @@ def stream_otlp_protobuf_pipeline(
         bodies64.append(base64.b64encode(body))
 
     spool = os.path.join(wd, "spool")
+    headers = {"Content-Type": "application/x-protobuf;base64"}
+    requests = [(b64, headers) for b64 in bodies64]
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for b64 in bodies64:
-            conn.request(
-                "POST",
-                "/v1/metrics",
-                body=b64,
-                headers={"Content-Type": "application/x-protobuf;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+        post_requests(lis.host, lis.port, "/v1/metrics", requests)
 
     frames = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("body")
@@ -2129,21 +2056,20 @@ def stream_otlp_protobuf_pipeline(
         F.min("t_ns").alias("min_t"),
         F.max("t_ns").alias("max_t"),
     )
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
+    return _collect_streamed(
+        agg,
+        wd,
+        "metric string, n_points bigint, sum_gauge double,"
+        " sum_counter bigint, min_t_ns bigint, max_t_ns bigint",
+        lambda out: out.select(
             "metric",
             F.col("n_g").cast("bigint").alias("n_points"),
             F.col("sum_g").cast("double").alias("sum_gauge"),
             F.col("sum_c").cast("bigint").alias("sum_counter"),
             F.col("min_t").alias("min_t_ns"),
             F.col("max_t").alias("max_t_ns"),
-        ).collect(),
-        "metric string, n_points bigint, sum_gauge double,"
-        " sum_counter bigint, min_t_ns bigint, max_t_ns bigint",
+        ),
     )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2284,7 +2210,6 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin), so the oracle's DECIMAL sum of the source column matches
     exactly."""
     import base64
-    import http.client
 
     import pandas as pd
 
@@ -2293,6 +2218,7 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     ensure_package_on_workers(spark)
@@ -2320,19 +2246,10 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         frames.append(compress_gzip(text.encode("utf-8")))
 
     spool = os.path.join(wd, "spool")
+    headers = {"Content-Type": "application/gzip;base64"}
+    requests = [(base64.b64encode(blob), headers) for blob in frames]
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/gzip",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/gzip;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+        post_requests(lis.host, lis.port, "/v1/gzip", requests)
 
     bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
@@ -2355,26 +2272,7 @@ def stream_gzip_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     points = bodies.mapInPandas(
         decode, "metric string, value double, ts_ms long"
     )
-    agg = points.groupBy("metric").agg(
-        F.count(F.lit(1)).alias("n_p"),
-        F.sum(F.col("value").cast("decimal(27,4)")).alias("sum_dec"),
-        F.min("ts_ms").alias("min_t"),
-        F.max("ts_ms").alias("max_t"),
-    )
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
-            "metric",
-            F.col("n_p").cast("bigint").alias("n_points"),
-            F.col("sum_dec").cast("double").alias("sum_value"),
-            F.col("min_t").alias("min_ts_ms"),
-            F.col("max_t").alias("max_ts_ms"),
-        ).collect(),
-        "metric string, n_points bigint, sum_value double,"
-        " min_ts_ms bigint, max_ts_ms bigint",
-    )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    return _frame_rollup(points, wd)
 
 
 @register(
@@ -2405,7 +2303,6 @@ def stream_kafka_recordbatch_pipeline(
     connector gate — this pipeline proves the record FORMAT end to
     end without needing the broker."""
     import base64
-    import http.client
 
     import pandas as pd
 
@@ -2414,6 +2311,7 @@ def stream_kafka_recordbatch_pipeline(
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     ensure_package_on_workers(spark)
@@ -2441,19 +2339,10 @@ def stream_kafka_recordbatch_pipeline(
         )
 
     spool = os.path.join(wd, "spool")
+    headers = {"Content-Type": "application/vnd.kafka.v2;base64"}
+    requests = [(base64.b64encode(blob), headers) for blob in frames]
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/kafka",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/vnd.kafka.v2;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+        post_requests(lis.host, lis.port, "/v1/kafka", requests)
 
     bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
@@ -2484,20 +2373,19 @@ def stream_kafka_recordbatch_pipeline(
         F.min("ts_ms").alias("min_t"),
         F.max("ts_ms").alias("max_t"),
     )
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
+    return _collect_streamed(
+        agg,
+        wd,
+        "dim_type string, n_records bigint, sum_value double,"
+        " min_ts_ms bigint, max_ts_ms bigint",
+        lambda out: out.select(
             "dim_type",
             F.col("n_r").cast("bigint").alias("n_records"),
             F.col("sum_dec").cast("double").alias("sum_value"),
             F.col("min_t").alias("min_ts_ms"),
             F.col("max_t").alias("max_ts_ms"),
-        ).collect(),
-        "dim_type string, n_records bigint, sum_value double,"
-        " min_ts_ms bigint, max_ts_ms bigint",
+        ),
     )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2526,7 +2414,6 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     an honest micro-batch bound). `ingest_otlp_logs` is the at-rest
     twin."""
     import base64
-    import http.client
 
     import pandas as pd
 
@@ -2535,6 +2422,7 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     ensure_package_on_workers(spark)
@@ -2574,19 +2462,10 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     spool = os.path.join(wd, "spool")
+    headers = {"Content-Type": "application/x-protobuf;base64"}
+    requests = [(base64.b64encode(blob), headers) for blob in frames]
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/metrics",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/x-protobuf;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+        post_requests(lis.host, lis.port, "/v1/metrics", requests)
 
     bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
@@ -2610,20 +2489,19 @@ def stream_otlp_logs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("t_ns").alias("min_t"),
         F.max("t_ns").alias("max_t"),
     )
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
+    return _collect_streamed(
+        agg,
+        wd,
+        "severity_number int, n_records bigint, sum_user bigint,"
+        " min_t_ns long, max_t_ns long",
+        lambda out: out.select(
             F.col("sev").alias("severity_number"),
             F.col("n_r").cast("bigint").alias("n_records"),
             F.col("sum_u").cast("bigint").alias("sum_user"),
             F.col("min_t").alias("min_t_ns"),
             F.col("max_t").alias("max_t_ns"),
-        ).collect(),
-        "severity_number int, n_records bigint, sum_user bigint,"
-        " min_t_ns long, max_t_ns long",
+        ),
     )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2655,7 +2533,6 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical doubles (the divergence suite's repr-roundtrip
     pin)."""
     import base64
-    import http.client
 
     import pandas as pd
 
@@ -2664,6 +2541,7 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metricproxy_spark.streaming.httplistener import (
         HttpIngestListener,
         http_spool,
+        post_requests,
     )
 
     ensure_package_on_workers(spark)
@@ -2701,19 +2579,10 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         frames.append(blob)
 
     spool = os.path.join(wd, "spool")
+    headers = {"Content-Type": "application/zstd;base64"}
+    requests = [(base64.b64encode(blob), headers) for blob in frames]
     with HttpIngestListener(spool) as lis:
-        conn = http.client.HTTPConnection(lis.host, lis.port, timeout=30)
-        for blob in frames:
-            conn.request(
-                "POST",
-                "/v1/zstd",
-                body=base64.b64encode(blob),
-                headers={"Content-Type": "application/zstd;base64"},
-            )
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        conn.close()
+        post_requests(lis.host, lis.port, "/v1/zstd", requests)
 
     bodies = http_spool(spark.readStream, spool).select(
         F.unbase64(F.col("body")).alias("frame")
@@ -2736,26 +2605,7 @@ def stream_zstd_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     points = bodies.mapInPandas(
         decode, "metric string, value double, ts_ms long"
     )
-    agg = points.groupBy("metric").agg(
-        F.count(F.lit(1)).alias("n_p"),
-        F.sum(F.col("value").cast("decimal(27,4)")).alias("sum_dec"),
-        F.min("ts_ms").alias("min_t"),
-        F.max("ts_ms").alias("max_t"),
-    )
-    out = _run_to_memory(agg, os.path.join(wd, "ckpt"), state_partitions=8)
-    result = spark.createDataFrame(
-        out.select(
-            "metric",
-            F.col("n_p").cast("bigint").alias("n_points"),
-            F.col("sum_dec").cast("double").alias("sum_value"),
-            F.col("min_t").alias("min_ts_ms"),
-            F.col("max_t").alias("max_ts_ms"),
-        ).collect(),
-        "metric string, n_points bigint, sum_value double,"
-        " min_ts_ms bigint, max_ts_ms bigint",
-    )
-    shutil.rmtree(wd, ignore_errors=True)
-    return result
+    return _frame_rollup(points, wd)
 
 
 @register(

@@ -972,9 +972,9 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring-matching primitive paragraph/suffix dedup builds on.
     Selection (k-gram hashing, window minima, rightmost tie-break) runs
     in the vectorized mapInPandas twin — per-partition numpy sliding
-    windows, no shuffle (the array-HOF form is the executable spec and
-    costs about the same since it binds each row's words and k-gram
-    hashes once; pytest asserts the two forms are row-identical). Only
+    windows, no shuffle (the array-HOF form is the executable spec,
+    pytest-asserted row-identical, and slower here: 1.51–1.61 s against
+    the twin's 1.08–1.24 s in ``bench.py`` at sf0.1 on 4 CPUs). Only
     the selected (pos, fp) pairs are shuffled for the row-dedup — ~2/w
     of the k-gram stream. ``spread`` widens the scan when the source
     produced fewer splits than cores (no-op at real scale)."""
@@ -1859,12 +1859,13 @@ def text_common_span_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on fp and a per-doc re-agg. Three key-hashed shuffles, no
     broadcast of anything corpus-sized, no driver state — the same
     shape as the PPJoin candidate stage. ``spread`` widens narrow
-    scans (no-op at scale). Hashing runs in the vectorized numpy twin
-    (the HOF form is the spec; equality pytest-asserted)."""
-    from metricproxy_spark.operators.text import kgram_hashes_vectorized
+    scans (no-op at scale). Hashing is the Catalyst array-HOF
+    :func:`~metricproxy_spark.operators.text.kgram_hashes`, no Python
+    worker."""
+    from metricproxy_spark.operators.text import kgram_hashes
 
     docs = spread(load_table(spark, sf_dir, "documents"), spark)
-    occ = kgram_hashes_vectorized(docs, k=5)
+    occ = docs.select("doc_id", F.explode(kgram_hashes("text", 5)).alias("fp"))
     shared = (
         occ.groupBy("fp")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -2009,20 +2010,25 @@ def dedup_exact_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, word-pos) for the anti join, once on doc for the rebuild —
     all key-hashed, map-side-combinable or streaming-window stages;
     no broadcast of anything corpus-sized, no driver state. Hashing
-    runs in the vectorized numpy twin (equality pytest-asserted
-    against the HOF spec)."""
-    from metricproxy_spark.operators.text import (
-        kgram_hashes_vectorized,
-        words_of,
-    )
+    is the Catalyst array-HOF
+    :func:`~metricproxy_spark.operators.text.kgram_hashes`, no Python
+    worker."""
+    from metricproxy_spark.operators.text import kgram_hashes, words_of
 
     docs = spread(load_table(spark, sf_dir, "documents"), spark)
     # occ feeds BOTH the first-occurrence agg and the covered join:
     # one eager checkpoint of the (ids + int64 hashes) stream runs the
-    # vectorized kgram pass once instead of once per consumer.
-    occ = kgram_hashes_vectorized(
-        docs, k=5, with_pos=True
-    ).localCheckpoint(eager=True)
+    # kgram pass once instead of once per consumer.
+    occ = (
+        docs.select(
+            "doc_id",
+            F.posexplode(kgram_hashes("text", 5)).alias("p0", "fp"),
+        )
+        .select(
+            "doc_id", (F.col("p0") + 1).cast("int").alias("pos"), "fp"
+        )
+        .localCheckpoint(eager=True)
+    )
     # first occurrence per fp as a map-side-combinable MIN aggregate
     # (a row_number window would sort the whole occurrence stream per
     # fp partition; min(struct) partially combines before the shuffle)
@@ -5116,17 +5122,16 @@ def text_eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora are tiny so this side is broadcast-small; the train-side
     join is fp-key-hashed with partial-combine aggs, no all-pairs, no
     driver state. Same fingerprint machinery as
-    `text_common_span_frac` (vectorized numpy twin, HOF-spec equality
-    pytest-asserted)."""
-    from metricproxy_spark.operators.text import kgram_hashes_vectorized
+    `text_common_span_frac` (the Catalyst array-HOF
+    :func:`~metricproxy_spark.operators.text.kgram_hashes`)."""
+    from metricproxy_spark.operators.text import kgram_hashes
 
     docs = spread(load_table(spark, sf_dir, "documents"), spark)
     # the fingerprint stream feeds three consumers (eval side, train
     # totals, train-hit join): one eager ids+int64 checkpoint runs the
-    # vectorized kgram pass once instead of three times.
+    # kgram pass once instead of three times.
     occ = (
-        kgram_hashes_vectorized(docs, k=5)
-        .select("doc_id", "fp")
+        docs.select("doc_id", F.explode(kgram_hashes("text", 5)).alias("fp"))
         .distinct()
         .localCheckpoint()
     )

@@ -39,7 +39,8 @@ never published by anyone else: listeners may share a directory. The
 spool mechanics, the periodic sealer included, are
 :class:`metricproxy_spark.sources.spool.SegmentSpool`; the server
 lifecycle around it is :class:`SpoolServer`. The line-socket listener
-shares both.
+shares both; the serve thread under them, :class:`ThreadedServer`, also
+runs :class:`RemoteReadServer`. :func:`post_requests` is the client.
 
 One body parser
 (:func:`metricproxy_spark.sources.signalfx.parse_sfx_v2_json`, …)
@@ -55,10 +56,12 @@ client cannot fill the driver's memory), and nothing is spooled.
 
 from __future__ import annotations
 
+import http.client
 import os
 import socketserver
 import threading
 import zlib
+from collections.abc import Iterable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, DataFrameReader
@@ -132,8 +135,7 @@ def _get_healthz(handler: BaseHTTPRequestHandler) -> None:
 
 
 class _IngestHandler(BaseHTTPRequestHandler):
-    # set per-server via a subclass attribute
-    listener: "HttpIngestListener"
+    server: _OwnedHTTPServer
 
     def log_message(self, *_a) -> None:  # quiet; stats are counted
         pass
@@ -160,7 +162,7 @@ class _IngestHandler(BaseHTTPRequestHandler):
             self.command, self.path, headers.get("content-type", ""), text
         )
         try:
-            self.listener._spool.append(line)
+            self.server.owner._spool.append(line)
         except OSError:
             self.send_error(503, "spool write failed")
             return
@@ -172,52 +174,41 @@ class _IngestHandler(BaseHTTPRequestHandler):
         self.wfile.write(resp)
 
 
-class SpoolServer:
-    """A socket server, run on a thread, spooling what it accepts into
-    a :class:`SegmentSpool` named ``spool_names``. A subclass gives the
-    transport: ``scheme`` and :meth:`_make_server`.
+class _OwnedHTTPServer(ThreadingHTTPServer):
+    """An HTTP server whose handlers reach the object that runs it as
+    ``self.server.owner``."""
 
-    >>> lis = HttpIngestListener(spool_dir)
-    >>> host, port = lis.start()          # real bind (port=0 = OS pick)
-    >>> ... clients send to lis.url ...
-    >>> lis.seal()                        # everything acked is visible
-    >>> lis.stop()                        # serve loop ended, sealed
-    """
+    def __init__(self, owner: "ThreadedServer", handler: type):
+        super().__init__((owner.host, owner.port), handler)
+        self.owner = owner
 
-    scheme: str
-    spool_names: tuple[str, str]
 
-    def __init__(
-        self, spool_dir: str, host: str = "127.0.0.1", port: int = 0
-    ):
-        self.spool_dir = spool_dir
+class ThreadedServer:
+    """A socket server run on a daemon thread: ``start()`` binds (port
+    0 lets the OS pick; ``port`` is the bound one after) and serves,
+    ``stop()`` ends the serve loop and closes the socket, and the object
+    is its own context manager. By default it is an HTTP server whose
+    requests ``handler`` answers; a subclass may build another server in
+    :meth:`_make_server`."""
+
+    scheme = "http"
+    handler: type[BaseHTTPRequestHandler]
+
+    def __init__(self, host: str = "127.0.0.1", port: int = 0):
         self.host, self.port = host, port
-        self._spool = SegmentSpool(spool_dir, *self.spool_names)
         self._server: socketserver.BaseServer | None = None
         self._thread: threading.Thread | None = None
-
-    @property
-    def accepted(self) -> int:
-        """Lines spooled: HTTP requests, or a line socket's lines."""
-        return self._spool.appended
 
     @property
     def url(self) -> str:
         return f"{self.scheme}://{self.host}:{self.port}"
 
     def _make_server(self) -> socketserver.BaseServer:
-        raise NotImplementedError
-
-    def seal(self) -> None:
-        """Publish everything accepted so far."""
-        self._spool.seal()
+        return _OwnedHTTPServer(self, self.handler)
 
     def start(self) -> tuple[str, int]:
-        # A restarted listener appends after the existing spool files
-        # and publishes what a dead one left unsealed.
         self._server = self._make_server()
         self.port = self._server.server_address[1]
-        self._spool.start(SEAL_INTERVAL_S)
         self._thread = threading.Thread(
             target=self._server.serve_forever, daemon=True
         )
@@ -230,7 +221,6 @@ class SpoolServer:
             self._server.server_close()
             self._thread.join(timeout=10)
             self._server = None
-        self._spool.stop()
 
     def __enter__(self):
         self.start()
@@ -240,17 +230,80 @@ class SpoolServer:
         self.stop()
 
 
+class SpoolServer(ThreadedServer):
+    """A :class:`ThreadedServer` spooling what it accepts into a
+    :class:`SegmentSpool` named ``spool_names``.
+
+    >>> lis = HttpIngestListener(spool_dir)
+    >>> host, port = lis.start()          # real bind (port=0 = OS pick)
+    >>> ... clients send to lis.url ...
+    >>> lis.seal()                        # everything acked is visible
+    >>> lis.stop()                        # serve loop ended, sealed
+    """
+
+    spool_names: tuple[str, str]
+
+    def __init__(
+        self, spool_dir: str, host: str = "127.0.0.1", port: int = 0
+    ):
+        super().__init__(host, port)
+        self.spool_dir = spool_dir
+        self._spool = SegmentSpool(spool_dir, *self.spool_names)
+
+    @property
+    def accepted(self) -> int:
+        """Lines spooled: HTTP requests, or a line socket's lines."""
+        return self._spool.appended
+
+    def seal(self) -> None:
+        """Publish everything accepted so far."""
+        self._spool.seal()
+
+    def start(self) -> tuple[str, int]:
+        # A restarted listener appends after the existing spool files
+        # and publishes what a dead one left unsealed, before it serves.
+        self._spool.start(SEAL_INTERVAL_S)
+        try:
+            return super().start()
+        except BaseException:
+            self._spool.stop()
+            raise
+
+    def stop(self) -> None:
+        super().stop()
+        self._spool.stop()
+
+
 class HttpIngestListener(SpoolServer):
     """A live HTTP ingest endpoint spooling ``req_*.jsonl`` segments,
     one JSON line per accepted request."""
 
-    scheme, spool_names = "http", ("req_", ".jsonl")
+    handler, spool_names = _IngestHandler, ("req_", ".jsonl")
 
-    def _make_server(self) -> ThreadingHTTPServer:
-        handler = type(
-            "_BoundHandler", (_IngestHandler,), {"listener": self}
-        )
-        return ThreadingHTTPServer((self.host, self.port), handler)
+
+def post_requests(
+    host: str,
+    port: int,
+    path: str,
+    requests: Iterable[tuple[bytes, dict[str, str]]],
+) -> None:
+    """Client side of the wire, the HTTP twin of
+    :func:`~metricproxy_spark.streaming.socketlistener.send_lines_tcp`:
+    POST each ``(body, headers)`` pair to ``path`` over one keep-alive
+    connection, in order. An answer other than 200 raises
+    ``ConnectionError`` naming its status."""
+    conn = http.client.HTTPConnection(host, port, timeout=30)
+    try:
+        for body, headers in requests:
+            conn.request("POST", path, body=body, headers=headers)
+            resp = conn.getresponse()
+            resp.read()
+            if resp.status != 200:
+                raise ConnectionError(
+                    f"POST {path} answered {resp.status} {resp.reason}"
+                )
+    finally:
+        conn.close()
 
 
 def http_spool(
@@ -287,7 +340,35 @@ def http_spool(
     )
 
 
-class RemoteReadServer:
+class _ReadHandler(BaseHTTPRequestHandler):
+    server: _OwnedHTTPServer
+
+    def log_message(self, *_a) -> None:
+        pass
+
+    do_GET = _get_healthz
+
+    def do_POST(self) -> None:
+        if self.path.split("?")[0] != "/api/v1/read":
+            self.send_error(404)
+            return
+        raw = _read_body(self)
+        if raw is None:
+            return
+        try:
+            resp = self.server.owner._answer(raw)
+        except ValueError:
+            self.send_error(400)  # malformed request body
+            return
+        self.send_response(200)
+        self.send_header("Content-Type", "application/x-protobuf")
+        self.send_header("Content-Encoding", "snappy")
+        self.send_header("Content-Length", str(len(resp)))
+        self.end_headers()
+        self.wfile.write(resp)
+
+
+class RemoteReadServer(ThreadedServer):
     """A LIVE prometheus remote-read SERVER (``POST /api/v1/read``).
 
     The query-side twin of the ingest listener above: where the ingest
@@ -306,17 +387,17 @@ class RemoteReadServer:
     load balancer like the ingest listener (S7).
     """
 
+    handler = _ReadHandler
+
     def __init__(
         self,
         series: list,
         host: str = "127.0.0.1",
         port: int = 0,
     ):
+        super().__init__(host, port)
         # [(labels_dict, [(value, ts_ms), ...]), ...]
         self.series = series
-        self.host, self.port = host, port
-        self._server: ThreadingHTTPServer | None = None
-        self._thread: threading.Thread | None = None
         self.served = 0
 
     def _answer(self, body: bytes) -> bytes:
@@ -340,55 +421,3 @@ class RemoteReadServer:
             results.append(hit)
         self.served += 1
         return encode_read_response_body(results)
-
-    def start(self) -> tuple[str, int]:
-        server_ref = self
-
-        class _ReadHandler(BaseHTTPRequestHandler):
-            def log_message(self, *_a) -> None:
-                pass
-
-            do_GET = _get_healthz
-
-            def do_POST(self) -> None:
-                if self.path.split("?")[0] != "/api/v1/read":
-                    self.send_error(404)
-                    return
-                raw = _read_body(self)
-                if raw is None:
-                    return
-                try:
-                    resp = server_ref._answer(raw)
-                except ValueError:
-                    self.send_error(400)  # malformed request body
-                    return
-                self.send_response(200)
-                self.send_header(
-                    "Content-Type", "application/x-protobuf"
-                )
-                self.send_header("Content-Encoding", "snappy")
-                self.send_header("Content-Length", str(len(resp)))
-                self.end_headers()
-                self.wfile.write(resp)
-
-        self._server = ThreadingHTTPServer((self.host, self.port), _ReadHandler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True
-        )
-        self._thread.start()
-        return self.host, self.port
-
-    def stop(self) -> None:
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._thread.join(timeout=10)
-            self._server = None
-
-    def __enter__(self) -> "RemoteReadServer":
-        self.start()
-        return self
-
-    def __exit__(self, *_exc) -> None:
-        self.stop()

@@ -528,22 +528,6 @@ def test_winnow_vectorized_equals_hof_spec(spark, sf_dir):
     assert a == b
 
 
-def test_kgram_vectorized_equals_hof_spec(spark, sf_dir):
-    """The numpy k-gram occurrence twin must emit exactly the exploded
-    rows of the array-HOF spec (multiset equality) on the real corpus."""
-    from metricproxy_spark.io import load_table
-    from metricproxy_spark.operators.text import (
-        kgram_hashes,
-        kgram_hashes_vectorized,
-    )
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_dir, "documents")
-    hof = docs.select("doc_id", F.explode(kgram_hashes("text", k=5)).alias("fp"))
-    vec = kgram_hashes_vectorized(docs, k=5)
-    assert sorted(map(tuple, hof.collect())) == sorted(map(tuple, vec.collect()))
-
-
 def test_theta_rollup_estimates_within_bound(spark, sf_dir):
     """Weekly Theta-union estimates must sit within the sketch's rated
     error of the exact weekly distinct counts (lgK=12 -> ~1.6% rse;

@@ -24,6 +24,12 @@ def test_load_config_validates():
         load_config({"ListenFrom": []})
 
 
+def test_empty_listen_from_is_refused():
+    # build_pipeline unions the listeners' streams from the first one
+    with pytest.raises(ValueError, match="ListenFrom"):
+        load_config({"ListenFrom": [], "ForwardTo": []})
+
+
 def test_carbon_to_csv_and_carbon_pipeline(spark, tmp_path):
     """carbon listener (commakeys deconstructor) fans out to a CSV
     forwarder and a carbon forwarder; the carbon forwarder re-emits the

@@ -643,3 +643,37 @@ def test_pipeline_crash_recovery_exactly_once(spark, tmp_path):
     run()  # restart from the SAME checkpoint
     assert sorted(delivered) == list(range(90))
     assert len(delivered) == len(set(delivered))  # no duplicates
+
+
+def test_streamed_result_tail_removes_its_workdir(spark):
+    """The streamed wire queries' tail collects the final table and
+    removes the work directory (checkpoint and spool) whether the run
+    succeeds or its batch raises; the error reaches the caller."""
+    from metricproxy_spark.queries.streaming_surface import (
+        _collect_streamed,
+        _workdir,
+    )
+
+    def run(wd: str, line: str):
+        src = os.path.join(wd, "spool")
+        os.makedirs(src)
+        with open(os.path.join(src, "lines.txt"), "w") as f:
+            f.write(line + "\n")
+        value = F.col("value")
+        checked = spark.readStream.text(src).select(
+            F.when(value == "ok", value)
+            .otherwise(F.raise_error(F.lit("batch failed")))
+            .alias("value")
+        )
+        return _collect_streamed(
+            checked.groupBy("value").count(), wd, "value string, count bigint"
+        )
+
+    wd = _workdir()
+    assert [tuple(r) for r in run(wd, "ok").collect()] == [("ok", 1)]
+    assert not os.path.exists(wd)
+
+    wd = _workdir()
+    with pytest.raises(Exception, match="batch failed"):
+        run(wd, "bad")
+    assert not os.path.exists(wd)
